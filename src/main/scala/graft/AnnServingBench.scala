@@ -38,14 +38,7 @@ object AnnServingBench {
     val nQ = args.drop(1).headOption.map(_.toInt).getOrElse(2000)
     val nFiles = args.drop(2).headOption.map(_.toInt).getOrElse(8)
     val channel = args.drop(3).headOption.getOrElse("ivfpq")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
 
     // offline: the served index + the query backlog (vectors cycled
     // from the corpus itself, qids disjoint from vec_ids so no

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 object Bench {
   /** 1-minute host load average — the cheap contention meter. Twice
     * (r8: one query 6x, r9: a whole run 1.8x) the official bench
@@ -43,153 +41,16 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val prior = priorQuerySecs(sfDir)
     val loadWarmStart = load1m()
-    // Measured and rejected (r13 E1): parallelismFirst=false + advisory
-    // partition sizing cut tiny-task overhead but SERIALIZED the
-    // CPU-bound small-data queries onto one core (emb_operating_grid
-    // 3.8 -> 14.6 s; suite 245.6 -> 278.3 s). Spark's default
-    // (parallelism-first coalescing) is the right call for this
-    // compute-heavy-per-byte suite; see OPTIMIZATION_r13.md.
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      // STATIC conf, must be set before the first session: the default
-      // generated-class cache holds 100 entries while the suite compiles
-      // ~1,500 distinct codegen classes — pure LRU thrash, so the warm
-      // phase's compiles were evicted long before the measured twin ran
-      // (r14, measured: repeat-run of a query is ~0.45x its first run,
-      // almost all of it Janino+JIT). Sized to hold the whole suite;
-      // memory cost is bytecode+source of ~1.5k small classes (~tens of
-      // MB). Scale-independent: class count tracks query count, not
-      // data volume. Env-overridable for boxes with tighter heaps.
-      .config("spark.sql.codegen.cache.maxEntries",
-        sys.env.getOrElse("SPARK_GRAFT_CODEGEN_CACHE", "4096"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the JVM/codegen/parquet paths once so the first measured query
-    // doesn't absorb session startup (JIT, codegen compiler, FS client).
-    // All warmup I/O runs against a SYNTHETIC parquet file written to a
-    // temp dir — never a measured input — so no parquet footer or OS page
-    // cache of the benchmark tables is pre-warmed outside its query's
-    // timing; the text pass warms clean/tokenize regex + the hash kernels
-    // (JIT/codegen only: different lineage than any query, no
-    // CacheRegistry memo/persist is touched).
+    val spark = Session.start()
+    // Warm the JVM once so the first measured query doesn't absorb
+    // session startup (JIT, codegen compiler), then the codegen warm:
+    // every registered builder over synthetic twin tables in a temp dir
+    // — never a measured input, so no parquet footer or OS page cache
+    // of the benchmark tables is pre-warmed outside its query's timing.
     spark.range(1 << 20).selectExpr("sum(id)").collect()
-    val warmDir = java.nio.file.Files
-      .createTempDirectory("graft-bench-warm").toFile
-    locally {
-      import org.apache.spark.sql.functions._
-      import graft.functions.TextFns
-      val warmPath = s"${warmDir.getAbsolutePath}/warm.parquet"
-      spark.range(512)
-        .select(col("id"),
-          concat_ws(" ", lit("Warm-up sample text; market & rally tokens"),
-            col("id").cast("string"), lit("gamma Delta epsilon!"))
-            .as("text"))
-        .write.mode("overwrite").parquet(warmPath)
-      spark.read.parquet(warmPath)
-        .select(graft.functions.NormTokens.column(col("text")).as("tok"))
-        .select(
-          graft.functions.MinHashShingleSig.column(col("tok")).as("mh"),
-          graft.functions.SimHash64.column(col("tok")).as("sh"),
-          graft.functions.LangMarkerCounts.column(col("tok")).as("lc"),
-          md5(array_join(col("tok"), " ")).as("fp"))
-        .write.format("noop").mode("overwrite").save()
-      // int8-quantization kernels (SqMaxAbs / SqQDot): their first
-      // consumer (emb_sq_ann) otherwise absorbs the one-time codegen +
-      // JIT of the fused quantize+dot pass — measured +3-5 s cold in
-      // BENCH_r06's full-suite context. Synthetic vectors, JIT-only.
-      spark.range(512)
-        .select(expr(
-          "transform(sequence(1, 64), i -> cast(i / 64.0 as float))")
-          .as("emb"))
-        .select(
-          graft.functions.SqMaxAbs.column(col("emb")).as("ma"),
-          graft.functions.SqQDot.column(col("emb"),
-            expr("transform(sequence(1, 64), i -> i)")).as("qd"))
-        .write.format("noop").mode("overwrite").save()
-      // exercise the shuffle/broadcast/cache machinery once (codecs,
-      // exchange builders, block manager) on synthetic data so the first
-      // multi-stage query measures its plan, not session infrastructure
-      val wdf = spark.range(20000)
-        .select((col("id") % 97).as("k"), col("id").as("v"))
-      wdf.groupBy("k").agg(sort_array(collect_list(col("v"))).as("ids"))
-        .select(explode(expr(
-          "flatten(transform(ids, (a, i) -> transform(slice(ids, i + 2, 2), b -> struct(a, b))))")).as("p"))
-        .distinct().write.format("noop").mode("overwrite").save()
-      wdf.join(broadcast(wdf.limit(50).select(col("k").as("k2"))),
-        col("k") === col("k2")).write.format("noop").mode("overwrite").save()
-      val p = wdf.persist()
-      p.count()
-      wdf.join(p.select(col("k").as("k3")), col("k") === col("k3"), "left_semi")
-        .write.format("noop").mode("overwrite").save()
-      p.unpersist()
-      // The stage-heavy dedup lineages (minhash banding + verify, CC
-      // label propagation, incremental banding, substring windows) each
-      // compile a dozen+ distinct codegen classes; measured cold, the
-      // FIRST dedup query absorbs ~8 s of one-time Janino/JIT compile
-      // that no later query pays (measured: 11.8 s cold vs 3.4 s with
-      // warm codegen over identical data). Warm them by running the
-      // REAL builders against a synthetic documents.parquet in the temp
-      // dir — same generated classes, different (tiny, synthetic) data —
-      // then drop every warm-dir lineage from the cache registry. The
-      // measured inputs stay untouched: no footer, page-cache, or
-      // memoized result of a benchmark table is pre-warmed.
-      // doc_token_count_bpe / doc_tfidf_top_terms joined the list in
-      // round 7: both sat at ~4.3 s driver-cold vs ~1.3 s warm
-      // (BENCH_r06 / VERDICT r6) — the BpeRunCount kernel and the
-      // tf/df/rank window cascade each compile several codegen classes
-      // that only their first run pays for.
-      // dedup_prefix_jaccard joined after its round-7 two-pass verify
-      // rework: the prescreen + exact-verify stages compile ~10 fresh
-      // codegen classes (two merge kernels, the hash transform), worth
-      // ~3-4 s of first-run cost at sf0.1 vs its ~8-9 s warm steady
-      // state.
-      // dedup_nearest_dup joined in round 8: it is alphabetically the
-      // first consumer of the memoized prefix-pair lineage, so it pays
-      // the sfDir candidate join — its own rank/join codegen classes
-      // should not stack on top of that.
-      // r14: the codegen warm now covers EVERY registered query, not a
-      // hand-picked 9 — same convention, same justification, measured
-      // at suite scale this round: a query's repeat run is ~0.45x its
-      // first run and the delta is Janino compile + JIT of its
-      // generated classes (results are never cached; the measured run
-      // still computes everything from the sfDir parquet). Synthetic
-      // twin tables (WarmData) carry the full 10-table schema so every
-      // builder plans the same operator tree it plans over sfDir and
-      // the (now suite-sized, see maxEntries above) codegen cache hits.
-      // Builders that can't run over the synthetic shapes are skipped —
-      // warm is best-effort by definition.
-      WarmData.write(spark, warmDir.getAbsolutePath)
-      // round-robin the warm runs over a small driver pool (§2.6 — the
-      // tiny-data runs are latency-bound, untimed, and independent;
-      // shared-memo races are plan-level and the side-effecting index
-      // builders hold their exactly-once locks). Per-query failures are
-      // swallowed: warm is best-effort by definition.
-      locally {
-        val sorted = SparkEntry.queries.toSeq.sortBy(_._1)
-        Par.run(sorted.zipWithIndex.groupBy(_._2 % 8).values.toSeq.map {
-          grp => () =>
-            grp.foreach { case ((_, fn), _) =>
-              try fn(spark, warmDir.getAbsolutePath)
-                .write.format("noop").mode("overwrite").save()
-              catch { case _: Throwable => () }
-            }
-        })
-      }
-      CacheRegistry.clear(spark) // release warm-dir persists/memos
-    }
-    locally { // temp warmup parquet is no longer needed
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      rm(warmDir)
-    }
+    val warmFailed = WarmData.warm(spark, Registry.all)
     // SHARED-lineage warm, timed and reported separately (the
     // "shared_warm_sec" field): session-scoped state that several
     // queries consume but none should be charged for —
@@ -222,15 +83,13 @@ object Bench {
     // Per-query SHUFFLE/INPUT byte meter: the scale claims in SCALE.md
     // are about shuffle volume, so measure it instead of arguing it.
     // A SparkListener accumulates task metrics; listener delivery is
-    // async, so after each query a 1-row marker job is run and we wait
-    // until the bus (FIFO) has delivered the marker's task — at that
-    // point every event of the query itself has been processed. The
-    // marker job's own bytes are zero (spark.range), so it never
-    // pollutes the counters.
+    // async, so before and after each query we wait until the bus has
+    // delivered every posted event. A query's task-end events are all
+    // posted before its blocking save returns, so once the bus is empty
+    // every event of the query itself has been processed.
     val shufR = new java.util.concurrent.atomic.AtomicLong
     val shufW = new java.util.concurrent.atomic.AtomicLong
     val inB = new java.util.concurrent.atomic.AtomicLong
-    val tasks = new java.util.concurrent.atomic.AtomicLong
     val metricsListener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(
           e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
@@ -240,51 +99,12 @@ object Bench {
           shufW.addAndGet(m.shuffleWriteMetrics.bytesWritten)
           inB.addAndGet(m.inputMetrics.bytesRead)
         }
-        tasks.incrementAndGet()
         ()
       }
     }
     // removed again after the run (below) so a second bench over the
     // same SparkSession can't double-count task bytes
     spark.sparkContext.addSparkListener(metricsListener)
-    // OPTIONAL per-stage profile (SPARK_GRAFT_PROFILE=q1,q2 or "all"):
-    // the round-8 stage-profiling technique, runnable INSIDE a full
-    // bench so context-dependent slowdowns (memo storage pressure, GC,
-    // scheduling) are measured in the environment where they occur —
-    // an isolated re-run of the same query hides them by construction.
-    // For each profiled query it records every completed stage's wall,
-    // summed executor run/GC time, task count and record counts, plus
-    // the driver-JVM GC-time delta across the query (local mode: the
-    // executor IS the driver JVM, so the beans see all collection) and
-    // the storage memory pinned when the query started. Dumped to
-    // BENCH_PROFILE.json; zero overhead when the env var is unset.
-    val profileSet: Set[String] = sys.env.get("SPARK_GRAFT_PROFILE")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty)
-    val stageBuf =
-      new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val stageListener =
-      if (profileSet.isEmpty) None
-      else Some(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            e: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val si = e.stageInfo
-          val wallMs = (for {
-            s <- si.submissionTime; c <- si.completionTime
-          } yield c - s).getOrElse(-1L)
-          val m = si.taskMetrics
-          // whitelist the stage name's characters: a quote/backslash in
-          // a stage name (free-form from the plan) must not produce an
-          // unparseable BENCH_PROFILE.json
-          val safeName = si.name.takeWhile(_ != '(').trim
-            .filter(c => c.isLetterOrDigit || " ._:$-".contains(c))
-          stageBuf.add(
-            s"""{"stage":${si.stageId},"name":"$safeName","tasks":${si.numTasks},"wall_ms":$wallMs,"run_ms":${m.executorRunTime},"gc_ms":${m.jvmGCTime},"in_recs":${m.inputMetrics.recordsRead},"sh_r_recs":${m.shuffleReadMetrics.recordsRead},"sh_w_recs":${m.shuffleWriteMetrics.recordsWritten}}""")
-          ()
-        }
-      })
-    stageListener.foreach(spark.sparkContext.addSparkListener)
     def gcMs(): Long = {
       import scala.jdk.CollectionConverters._
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
@@ -293,30 +113,16 @@ object Bench {
     def storageBytes(): Long =
       spark.sparkContext.getRDDStorageInfo
         .map(i => i.memSize + i.diskSize).sum
-    val profiles = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // returns true iff the bus reached quiescence before the deadline;
-    // false means the preceding query's bytes may leak into the next
-    // window — recorded per query so degraded attribution is VISIBLE
-    // in BENCH_FULL.json instead of silently blending
-    def drainListenerBus(): Boolean = {
-      // marker job: single stage, no bytes of its own; by the time this
-      // blocking save returns, every task of the PRECEDING query has
-      // completed, so all its events are already posted to the bus
-      spark.range(1).write.format("noop").mode("overwrite").save()
-      // then wait for QUIESCENCE (no new task events for 3 consecutive
-      // 10 ms polls) rather than for a specific count: a straggler
-      // query event arriving between snapshot and marker would satisfy
-      // a count check early and leak its bytes into the next window
-      val deadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-      var last = -1L
-      var stable = 0
-      while (stable < 3 && System.nanoTime() < deadline) {
-        val v = tasks.get()
-        if (v == last) stable += 1 else { stable = 0; last = v }
-        Thread.sleep(10)
-      }
-      stable >= 3
-    }
+    // returns true iff the bus emptied before the deadline; false
+    // means the preceding query's bytes may leak into the next window —
+    // recorded per query so degraded attribution is VISIBLE in
+    // BENCH_FULL.json instead of silently blending
+    def drainListenerBus(): Boolean =
+      try {
+        org.apache.spark.sql.GraftSqlBridge
+          .waitListenersEmpty(spark.sparkContext, 5000L)
+        true
+      } catch { case _: java.util.concurrent.TimeoutException => false }
     // deterministic name order: shared produce-consume lineages
     // (minhash pairs -> survivors, simhash fps -> pair mining, emb pairs
     // -> crosscheck) always charge the build to the same (first) query,
@@ -343,11 +149,6 @@ object Bench {
     val gcRunStart = gcMs()
     val results = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       val preDrained = drainListenerBus()
-      val profiled = profileSet.contains(name) || profileSet.contains("all")
-      // cleared UNCONDITIONALLY: stages of unprofiled queries in
-      // between would otherwise accumulate (memory) and mis-attribute
-      // if a later profiled query skipped the clear
-      stageBuf.clear()
       val gc0 = gcMs()
       val st0 = storageBytes()
       qStorageMb(name) = st0 / 1e6
@@ -362,12 +163,6 @@ object Bench {
         val sec = (System.nanoTime() - t0) / 1e9
         val postDrained = drainListenerBus()
         qGcMs(name) = gcMs() - gc0
-        if (profiled) {
-          import scala.jdk.CollectionConverters._
-          val stages = stageBuf.asScala.mkString("[", ",", "]")
-          profiles(name) =
-            s"""{"sec":$sec,"driver_gc_delta_ms":${gcMs() - gc0},"storage_bytes_at_start":$st0,"stages":$stages}"""
-        }
         byteMetrics(name) =
           (shufR.get() - r0, shufW.get() - w0, inB.get() - i0,
             preDrained && postDrained)
@@ -392,6 +187,8 @@ object Bench {
       }
     }
     val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val warmFailedJson = warmFailed.map("\"" + _ + "\"")
+      .mkString(s"""{"n":${warmFailed.size},"names":[""", ",", "]}")
     val total = if (results.nonEmpty) results.map(_._2).sum else 0.0
     // Headline SELF-CORRECTION: `value` stays the official first-timing
     // sum (retimes of memoized first-consumer queries measure steady
@@ -447,7 +244,7 @@ object Bench {
     val storageJson =
       f"""{"end_mb":$storageEndMb%.1f,"max_mb":$storageMaxMb%.1f}"""
     val fullLine =
-      s"""{"metric":"total","value":$total,"value_retimed":$totalRetimed,"unit":"sec","n_queries":${results.size},"shared_warm_sec":$sharedWarmSec,"drain_timeouts":$drainTimeouts,"load":$loadJson,"gc":$gcJson,"storage":$storageJson,"retimed_n":${retimed.size},"queries":$fullQs,"bytes":$bytesJson,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":$total,"value_retimed":$totalRetimed,"unit":"sec","n_queries":${results.size},"shared_warm_sec":$sharedWarmSec,"drain_timeouts":$drainTimeouts,"load":$loadJson,"gc":$gcJson,"storage":$storageJson,"retimed_n":${retimed.size},"queries":$fullQs,"bytes":$bytesJson,"failed":$failedJson,"warm_failed":$warmFailedJson,"sf":"$sfDir"}"""
     java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_FULL.json"),
       (fullLine + "\n").getBytes("UTF-8"))
     // GLOBAL line cap, not a fixed queries-map budget: round 4 proved a
@@ -462,7 +259,7 @@ object Bench {
     val shuffleWriteMb =
       byteMetrics.valuesIterator.map(_._2).sum / 1e6
     def line(qs: String, shown: Int): String =
-      s"""{"metric":"total","value":${f"$total%.3f"},"value_retimed":${f"$totalRetimed%.3f"},"unit":"sec","n_queries":${results.size},"shared_warm_sec":${f"$sharedWarmSec%.3f"},"shuffle_write_mb":${f"$shuffleWriteMb%.1f"},"load":$loadJson,"gc":$gcJson,"storage":$storageJson,"retimed_n":${retimed.size},"queries_shown":$shown,"full":"BENCH_FULL.json","queries":$qs,"failed":$failedJson,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${f"$total%.3f"},"value_retimed":${f"$totalRetimed%.3f"},"unit":"sec","n_queries":${results.size},"shared_warm_sec":${f"$sharedWarmSec%.3f"},"shuffle_write_mb":${f"$shuffleWriteMb%.1f"},"load":$loadJson,"gc":$gcJson,"storage":$storageJson,"retimed_n":${retimed.size},"queries_shown":$shown,"full":"BENCH_FULL.json","queries":$qs,"failed":$failedJson,"warm_failed":${warmFailed.size},"sf":"$sfDir"}"""
     val fixedLen = line("{}", 0).length
     val kept = slowest
       .scanLeft(0)((acc, s) => acc + s.length + 1)
@@ -471,14 +268,6 @@ object Bench {
     // run / outputStrategy := StdoutOutput — the prefix is what kept the
     // driver's parsed field null in rounds 3-5.
     println(line(kept.mkString("{", ",", "}"), kept.size))
-    if (profiles.nonEmpty) {
-      val pj = profiles.map { case (k, v) => "\"" + k + "\":" + v }
-        .mkString("{", ",", "}")
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("BENCH_PROFILE.json"),
-        (pj + "\n").getBytes("UTF-8"))
-    }
-    stageListener.foreach(spark.sparkContext.removeSparkListener)
     spark.sparkContext.removeSparkListener(metricsListener)
     CacheRegistry.clear(spark) // no pinned storage outlives the run
     spark.stop()

@@ -1,14 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Optimization-round tooling: dump `.explain("formatted")` for named
   * queries (or all) to text files, so plan claims in OPTIMIZATION_*.md
   * are checkable without running Spark (plans/rNN/<query>_{before,after}
   * deliverable). Usage:
   *   runMain graft.PlanDump <sfDir> <outDir> <suffix> [q1,q2,...]
-  * Session config mirrors Bench (same shuffle partitions / AQE) so the
-  * dumped initial plans match what the bench executes.
+  * Same session preset as Bench, so the dumped initial plans match what
+  * the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -18,15 +16,7 @@ object PlanDump {
     val names: Seq[String] =
       if (args.length > 3) args(3).split(",").map(_.trim).filter(_.nonEmpty).toSeq
       else Registry.all.map(_.name)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       val df = Registry.byName(n).build(spark, sfDir)

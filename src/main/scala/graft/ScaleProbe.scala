@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Scale-probe timing: run a comma-separated list of registered queries
   * against a directory (which only needs the tables those queries read)
-  * and print one JSON line of per-query seconds. Same session config and
+  * and print one JSON line of per-query seconds. Same session preset and
   * noop-sink consumer as [[Bench]]; used with tools/make_scale_probe.py
   * to measure the dedup chain at 10x/100x the sf0.1 document count —
   * the linearity evidence SCALE.md cites beyond the driver's fixed
@@ -13,18 +11,10 @@ import org.apache.spark.sql.SparkSession
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val Array(dir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // probe files are small but must still fan out across the cores —
-      // the knob SCALE.md prescribes for partition sizing at any scale
-      .config("spark.sql.files.maxPartitionBytes", s"${4 << 20}")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.start()
+    // probe files are small but must still fan out across the cores —
+    // the knob SCALE.md prescribes for partition sizing at any scale
+    spark.conf.set("spark.sql.files.maxPartitionBytes", s"${4 << 20}")
     spark.range(1 << 20).selectExpr("sum(id)").collect() // JIT warm
     val results = names.split(",").toSeq.map { name =>
       val t0 = System.nanoTime()

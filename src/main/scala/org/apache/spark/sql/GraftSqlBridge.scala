@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 
 /** Bridge to the private[sql] Column <-> catalyst Expression converters.
@@ -55,4 +56,11 @@ object GraftSqlBridge {
     */
   def sortExpression(c: Column): Expression =
     classic.ColumnNodeToExpressionConverter(c.node)
+
+  /** Block until every posted listener event is delivered — the
+    * private[spark] `listenerBus`, reachable from this package. Throws
+    * a TimeoutException after `timeoutMs`.
+    */
+  def waitListenersEmpty(sc: SparkContext, timeoutMs: Long): Unit =
+    sc.listenerBus.waitUntilEmpty(timeoutMs)
 }

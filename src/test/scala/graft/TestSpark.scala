@@ -6,15 +6,10 @@ import org.apache.spark.sql.SparkSession
   * one SparkSession per suite, lazy).
   */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
+  lazy val spark: SparkSession = Session.start(Session.builder(4)
     .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
     .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+      java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   lazy val sf0001 = "/root/testdata/sf0.001"
 }
