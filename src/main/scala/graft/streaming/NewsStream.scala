@@ -17,6 +17,10 @@ import graft.schema.NewsArticle
   * lineage, so the source is read 4× (streaming_pipeline.py:196–241).
   * `startFanOutSink` is the idiomatic alternative — one query, one source
   * read, all sink work inside a single foreachBatch (SURVEY.md §7.3.5).
+  *
+  * Every sink starter installs `LocalCheckpointFileManager` on the
+  * session first (unless it already names a manager), so sessions the
+  * engine did not build also commit local checkpoint files fork-free.
   */
 /** row/state shapes for the hamming-tolerant streaming near-dup */
 private[streaming] case class FpBandRow(
@@ -122,6 +126,7 @@ object NewsStream {
       checkpointRoot: String,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval),
       memoryTable: String = "news_sentiment"): Seq[StreamingQuery] = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     val console = df.writeStream.format("console")
       .outputMode("append").option("truncate", "false")
       .option("numRows", "5")
@@ -166,7 +171,8 @@ object NewsStream {
       df: DataFrame,
       outputDir: String,
       checkpointRoot: String,
-      trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/fanout")
@@ -181,6 +187,7 @@ object NewsStream {
         ()
       }
       .start()
+  }
 
   /** Beyond-reference stream (SURVEY.md §2.7 gap + §7.1(7)): event-time
     * tumbling window counts with a watermark bounding state.
@@ -706,7 +713,8 @@ object NewsStream {
       key: String = "id",
       version: String = "publishedAt",
       tombstone: Option[String] = None,
-      trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery =
+      trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery = {
+    LocalCheckpointFileManager.install(df.sparkSession)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
@@ -715,6 +723,7 @@ object NewsStream {
         upsertBatch(batch, stateDir, key, version, batchId, tombstone)
       }
       .start()
+  }
 
   /** S6: sample-stream generator — drops NDJSON batch files into the
     * watched dir (driver-side utility; the reference fetches from GNews,
