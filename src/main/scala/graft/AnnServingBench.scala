@@ -8,7 +8,7 @@ import org.apache.spark.sql.types._
 
 /** Sustained throughput of the STREAMING ANN serving path — a staged
   * backlog of query-vector NDJSON files drained with
-  * Trigger.AvailableNow through AnnServing.startServingSink against
+  * Trigger.AvailableNow through AnnServing.startScoringSink against
   * the persisted IVF+PQ index — in query vectors/second. The index
   * build is staged before the clock starts (it is the offline
   * artifact); the measured window covers exactly what an online
@@ -16,21 +16,22 @@ import org.apache.spark.sql.types._
   * centroid probe, the per-batch ADC table, the directory-pruned code
   * scan, the exact rerank, and the parquet answer append.
   *
-  * A 4th arg selects the channel: `ivfpq` (default) drains through
-  * startServingSink; `bq` drains the same backlog through
-  * startBqServingSink (the 1-bit Hamming first stage over the
-  * persisted bitsig/ artifact + exact rerank); `adaptive` /
-  * `adaptive_rare` drain through startAdaptiveServingSink with the
-  * broad (~10%, pruned-scan arm) and rare (~1.4%, exact-prefilter
-  * arm) predicates — pricing both sides of the selectivity switch;
-  * `maintain` stages a
-  * backlog of NEW vectors (corpus vectors under fresh ids) and drains
-  * it through startAutoMaintainSink against a WORKING COPY of the
-  * index — sustained upsert + skew-check + split throughput in
-  * vectors/second, with the splits the run performed reported beside
-  * the rate.
+  * A 4th arg selects the channel, i.e. the per-batch scorer:
+  * `ivfpq` (default) scores with scoreBatch; `bq` with scoreBatchBq
+  * (the 1-bit Hamming first stage over the persisted bitsig/ artifact
+  * + exact rerank); `adaptive` / `adaptive_rare` with
+  * scoreBatchAdaptive under the broad (~10%, pruned-scan arm) and rare
+  * (~1.4%, exact-prefilter arm) predicates — pricing both sides of the
+  * selectivity switch. The maintenance channels stage a backlog of NEW
+  * vectors (corpus vectors under fresh ids) and drain it through
+  * startVersionedSelfHealingSink against a published copy of the
+  * index, in vectors/second: `maintain_versioned` (single-writer
+  * publishes), `maintain_versioned_cas` (compare-and-swap publishes)
+  * and `maintain_upsert_cadence` (the side-table refresh cadence).
   *
-  * Usage: runMain graft.AnnServingBench [sfDir] [nQueries] [nFiles] [channel]
+  * Usage: runMain graft.AnnServingBench [sfDir] [nQueries] [nFiles]
+  *   [ivfpq|bq|adaptive|adaptive_rare|maintain_versioned|
+  *    maintain_versioned_cas|maintain_upsert_cadence]
   */
 object AnnServingBench {
   def main(args: Array[String]): Unit = {
@@ -45,7 +46,6 @@ object AnnServingBench {
     // self-exclusion interplay)
     val idx = queries.EmbQueries.ensureServedIndex(spark, sfDir)
     val vectorsPath = s"$sfDir/embeddings.parquet"
-    if (channel == "maintain") { maintain(spark, idx, sfDir, nQ, nFiles); return }
     if (channel == "maintain_versioned") {
       maintainVersioned(spark, idx, sfDir, nQ, nFiles); return
     }
@@ -83,22 +83,21 @@ object AnnServingBench {
     val src = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", math.max(1, nFiles / 4))
       .json(inDir.getAbsolutePath)
-    val q = channel match {
-      case "bq" => streaming.AnnServing.startBqServingSink(
-        src, idx, vectorsPath, outDir, ckpt)
-      // the adaptive channels price the two arms of the
-      // selectivity switch: broad (~10%) routes every batch to the
-      // pruned filtered scan, rare (~1.4%) to exact pre-filter
-      case "adaptive" => streaming.AnnServing.startAdaptiveServingSink(
-        src, idx, vectorsPath, outDir, ckpt,
-        col("label") === queries.EmbQueries.FilteredLabel)
-      case "adaptive_rare" =>
-        streaming.AnnServing.startAdaptiveServingSink(
-          src, idx, vectorsPath, outDir, ckpt,
-          col("label") === queries.EmbQueries.FilteredLabel &&
-            col("vec_id") % 7 === 0)
-      case _ => streaming.AnnServing.startServingSink(
-        src, idx, vectorsPath, outDir, ckpt)
+    val q = streaming.AnnServing.startScoringSink(src, outDir, ckpt) { b =>
+      import streaming.AnnServing._
+      val s = b.sparkSession
+      val vectors = s.read.parquet(vectorsPath)
+      val lbl = col("label") === queries.EmbQueries.FilteredLabel
+      channel match {
+        case "bq" => scoreBatchBq(s, idx, vectors, b)
+        // the adaptive channels price the two arms of the
+        // selectivity switch: broad (~10%) routes every batch to the
+        // pruned filtered scan, rare (~1.4%) to exact pre-filter
+        case "adaptive" => scoreBatchAdaptive(s, idx, vectors, b, lbl)
+        case "adaptive_rare" => scoreBatchAdaptive(s, idx, vectors, b,
+          lbl && col("vec_id") % 7 === 0)
+        case _ => scoreBatch(s, idx, vectors, b)
+      }
     }
     val drained = q.awaitTermination(600000)
     val sec = (System.nanoTime() - t0) / 1e9
@@ -118,80 +117,16 @@ object AnnServingBench {
     if (error != "null") System.exit(1)
   }
 
-  /** The `maintain` channel: sustained index-maintenance throughput.
-    * A WORKING COPY of the served index takes the mutations (the
-    * shared artifact keeps serving everything else); the arriving
-    * vectors are corpus vectors under fresh ids (they assign into the
-    * existing geometry, concentrating the biggest cells — the
-    * skew-driving workload), staged in the id-keyed vector store as
-    * the auto-maintain contract requires.
-    */
-  private def maintain(
-      spark: SparkSession,
-      idx: String,
-      sfDir: String,
-      nQ: Int,
-      nFiles: Int): Unit = {
-    val dir = Files.createTempDirectory("ann_maint_tp").toFile
-    val work = new java.io.File(dir, "ix").getAbsolutePath
-    val full = spark.read.parquet(s"$idx/codes")
-    full.write.partitionBy("cell").parquet(s"$work/codes")
-    spark.read.parquet(s"$idx/centroids").write.parquet(s"$work/centroids")
-    spark.read.parquet(s"$idx/codebook").write.parquet(s"$work/codebook")
-    val cellsBefore = spark.read.parquet(s"$work/centroids").count()
-
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val nVec = emb.count()
-    val fresh = emb
-      .crossJoin(spark.range((nQ + nVec - 1) / nVec)
-        .select(col("id").as("rep")))
-      .filter(col("vec_id") + col("rep") * nVec < nQ)
-      .select((col("vec_id") + col("rep") * nVec + lit(1000000000L))
-        .as("vec_id"),
-        col("embedding"), col("label"))
-    val aug = new java.io.File(dir, "vecs").getAbsolutePath
-    emb.select("vec_id", "embedding", "label").unionByName(fresh)
-      .write.parquet(aug)
-    val inDir = new java.io.File(dir, "in"); inDir.mkdirs()
-    fresh.repartition(nFiles).write.mode("overwrite")
-      .json(inDir.getAbsolutePath)
-    val staged = spark.read.json(inDir.getAbsolutePath).count()
-
-    val schema = StructType(Seq(
-      StructField("vec_id", LongType),
-      StructField("embedding", ArrayType(DoubleType)),
-      StructField("label", LongType)))
-    val t0 = System.nanoTime()
-    val q = streaming.AnnServing.startAutoMaintainSink(
-      spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", math.max(1, nFiles / 4))
-        .json(inDir.getAbsolutePath),
-      work, aug, new java.io.File(dir, "ck").getAbsolutePath)
-    val drained = q.awaitTermination(600000)
-    val sec = (System.nanoTime() - t0) / 1e9
-    spark.catalog.refreshByPath(s"$work/codes")
-    val applied = spark.read.parquet(s"$work/codes")
-      .filter(col("vec_id") >= 1000000000L).count()
-    val cellsAfter = spark.read.parquet(s"$work/centroids").count()
-    val error =
-      if (!drained) "\"awaitTermination timed out\""
-      else if (applied != staged)
-        s""""applied $applied of $staged staged vectors""""
-      else "null"
-    println(
-      s"""{"metric":"ann_maintain_throughput","unit":"vectors_per_sec","channel":"maintain","value":${f"${applied / sec}%.1f"},"n_vectors":$applied,"staged":$staged,"cells_before":$cellsBefore,"cells_after":$cellsAfter,"sec":${f"$sec%.2f"},"error":$error,"sf":"$sfDir"}""")
-    CacheRegistry.clear(spark)
-    spark.stop()
-    if (error != "null") System.exit(1)
-  }
-
-  /** The `maintain_versioned` channel: the SAME staged workload as
-    * `maintain`, drained through startVersionedSelfHealingSink against
-    * a published v1 root — the apples-to-apples price of blue/green
-    * (immutable segments + atomic manifest publishes + retention GC +
-    * the per-advance depth-table refresh) over in-place mutation.
-    * Reports the final published version and segment count beside the
-    * rate.
+  /** The `maintain_versioned` channel: sustained index-maintenance
+    * throughput. A published v1 copy of the served index takes the
+    * mutations (the shared artifact keeps serving everything else); the
+    * arriving vectors are corpus vectors under fresh ids (they assign
+    * into the existing geometry, concentrating the biggest cells — the
+    * skew-driving workload), staged in the id-keyed vector store the
+    * rebalance and the epoch read. They drain through
+    * startVersionedSelfHealingSink (upsert, split, epoch, compaction,
+    * retention GC, the per-advance depth-table refresh). Reports the
+    * final published version and segment count beside the rate.
     */
   private def maintainVersioned(
       spark: SparkSession,

@@ -3599,7 +3599,7 @@ object EmbQueries {
     // SAME depth-4 candidate frame (arn <= the query's own depth — no
     // per-depth re-scan), then a per-query top-5. This is the read
     // path the side table exists for; the streaming twin
-    // (AnnServing.scoreBatchLabelAware) is pinned row-identical in
+    // (AnnServing.scoreBatchLabelAwareAt) is pinned row-identical in
     // StreamingSpec. At 100 TB: the depth table is a broadcast row per
     // label; serving cost scales with each query's OWN depth — the
     // whole point of repairing per-slice instead of raising the
@@ -5228,7 +5228,7 @@ object EmbQueries {
     *     partitioned by their new cell. Rows with NO signal (vector
     *     missing from the embeddings table, or nearest distance NULL)
     *     KEEP their stored cell — the same keep-cell convention the
-    *     streaming epoch and applyRebalance document, so batch and
+    *     streaming epoch and applyRebalanceVersioned document, so batch and
     *     streaming epochs can never diverge on degenerate rows. PQ codes ride UNCHANGED: the
     *     codebook is global (cell-independent) and the vector set is
     *     unchanged by rebalance, so re-encoding would reproduce the
@@ -5267,10 +5267,10 @@ object EmbQueries {
         .select(col("cell").as("c_label"), col("cvec"))
         .write.mode("overwrite").parquet(s"$root/centroids_rt_all")
       // E-step: reassign every indexed row to its nearest new centroid.
-      // KEEP-CELL on no-signal rows (the streaming epoch's and
-      // applyRebalance's documented convention): an index row whose
-      // vector is missing or whose nearest distance is NULL keeps its
-      // stored cell — the inner-join form would silently DROP
+      // KEEP-CELL on no-signal rows (the documented convention of the
+      // streaming epoch and applyRebalanceVersioned): an index row
+      // whose vector is missing or whose nearest distance is NULL keeps
+      // its stored cell — the inner-join form would silently DROP
       // missing-vector rows from codes_rt and send NULL-embedding rows
       // to the min-label centroid via the NULLS-LAST tiebreak.
       val near = nearestAssign(s, d, reb.select(col("vec_id"), col("cell")),
@@ -5791,7 +5791,7 @@ object EmbQueries {
     * either the old or the new manifest, never a torn state; plain
     * FileSystem.rename refuses an existing destination). Rollback is
     * publishing the old version id again. The FS resolves from the
-    * manifest path's scheme (the applyDeleteBatch convention).
+    * manifest path's scheme (the applyCompactionIfDue convention).
     */
   private[graft] def publishVersion(
       s: SparkSession, root: String, version: Int,

@@ -12,7 +12,10 @@ import org.apache.spark.sql.types.DecimalType
   * partitioned by cell) inside foreachBatch. This is the online-
   * retrieval path of the serving-ops lifecycle: the batch queries
   * (emb_ivfpq_served / _upsert / _delete) prove build and maintenance;
-  * this module proves the index answers a LIVE query stream.
+  * this module proves the index answers a LIVE query stream, and keeps
+  * it current through the versioned ops at the bottom — the index's
+  * only writer (see THE ONE INDEX WRITER). Every ANN stream starts
+  * through one sink builder, foreachBatchSink.
   *
   * Per-batch plan, for a micro-batch of B query vectors against an
   * index of kk cells (kk = 8 here; O(sqrt N) cells at scale):
@@ -138,22 +141,8 @@ object AnnServing {
     * query's cost scales with its OWN depth — the point of per-slice
     * repair over raising the global knob.
     *
-    * @param batch      (qid BIGINT, qvec ARRAY<FLOAT>, qlabel INT)
-    * @param depthsPath parquet side table (a_label INT, np INT)
-    * @return (qid, rank, vec_id, sim) — top-k per query, rank 1-based
-    */
-  def scoreBatchLabelAware(
-      spark: SparkSession,
-      indexDir: String,
-      vectorsPath: String,
-      depthsPath: String,
-      batch: DataFrame,
-      k: Int = 5): DataFrame =
-    scoreBatchLabelAwareAt(spark, s"$indexDir/centroids",
-      s"$indexDir/codes", vectorsPath, depthsPath, batch, k)
-
-  /** [[scoreBatchLabelAware]] with the index artifact paths resolved
-    * explicitly — the EPOCH-CONSISTENT form: the published-manifest
+    * The index artifact paths are resolved explicitly — the
+    * EPOCH-CONSISTENT form: the published-manifest
     * sink passes the manifest's current centroid/code paths, so the
     * index served always matches the epoch the (label -> nprobe) side
     * table was derived against (emb_label_nprobe_repair derives off
@@ -166,6 +155,10 @@ object AnnServing {
     * eligible table exists every label falls back to the global
     * nprobe=2 (the cross-process epoch-consistency contract;
     * single-process flat tables pass None and read whole).
+    *
+    * @param batch      (qid BIGINT, qvec ARRAY<FLOAT>, qlabel INT)
+    * @param depthsPath parquet side table (a_label INT, np INT)
+    * @return (qid, rank, vec_id, sim) — top-k per query, rank 1-based
     */
   def scoreBatchLabelAwareAt(
       spark: SparkSession,
@@ -318,47 +311,61 @@ object AnnServing {
       checkpoint: String,
       k: Int = 5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
+    startScoringSink(stream, outDir, checkpoint, trigger) { batch =>
+      val s = batch.sparkSession
+      val (ver, centPath, codesPath) =
+        graft.queries.EmbQueries.readManifest(s, manifestRoot)
+      scoreBatchAt(s, centPath, codesPath,
+        s"$manifestRoot/codebook", s.read.parquet(vectorsPath),
+        batch, k)
+        .withColumn("version", lit(ver))
+    }
+
+  /** The one sink builder every ANN stream runs through: `body` gets
+    * each micro-batch and its id inside foreachBatch, checkpointed at
+    * `checkpoint`. The session's checkpoint files go through
+    * [[LocalCheckpointFileManager]] unless it already names a manager.
+    */
+  private[graft] def foreachBatchSink(
+      stream: DataFrame,
+      checkpoint: String,
+      trigger: Trigger)(
+      body: (DataFrame, Long) => Unit): StreamingQuery = {
+    LocalCheckpointFileManager.install(stream.sparkSession)
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val (ver, centPath, codesPath) =
-          graft.queries.EmbQueries.readManifest(s, manifestRoot)
-        scoreBatchAt(s, centPath, codesPath,
-          s"$manifestRoot/codebook", s.read.parquet(vectorsPath),
-          batch, k)
-          .withColumn("version", lit(ver))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
+      .foreachBatch(body)
       .start()
+  }
+
+  /** The streaming server: scores each micro-batch of query vectors
+    * with `score` and appends its answer rows (plus the batch id) to
+    * `outDir` as parquet. A scorer opens its index and vector table
+    * per batch from their on-disk layout — no session-memoized state
+    * crosses the boundary, which is what makes the same code runnable
+    * in a separate serving process. Any scoreBatch* read fits, e.g.
+    * `b => scoreBatchBq(b.sparkSession, idx, vectors, b)`.
+    */
+  def startScoringSink(
+      stream: DataFrame,
+      outDir: String,
+      checkpoint: String,
+      trigger: Trigger = Trigger.AvailableNow())(
+      score: DataFrame => DataFrame): StreamingQuery =
+    foreachBatchSink(stream, checkpoint, trigger) { (batch, batchId) =>
+      score(batch).withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(outDir)
+    }
 
   /** [[scoreBatch]] with the three artifact paths resolved explicitly —
-    * the versioned sink passes manifest-resolved paths; scoreBatch
-    * delegates here with the fixed single-version layout.
+    * the published sink passes manifest-resolved paths; scoreBatch
+    * delegates here with the as-built index layout.
     *
-    * Per-batch plan, for a micro-batch of B query vectors against an
-    * index of kk cells (kk = 8 here; O(sqrt N) cells at scale):
-    *   1. PROBE — batch x centroids (B*kk rows, centroid side broadcast
-    *      by size), rank per query, keep nprobe cells each. The distinct
-    *      probed-cell list (<= B*nprobe values) becomes a partition
-    *      filter, so step 3 never lists unprobed cell directories.
-    *   2. ADC — batch subvectors x codebook (B * PqSub * PqK rows),
-    *      broadcast: the classic asymmetric-distance table, rebuilt per
-    *      batch because it depends only on the incoming queries.
-    *   3. SHORTLIST — directory-pruned scan of the probed cells' code
-    *      rows, joined to the broadcast per-query probe map (restricting
-    *      each query to ITS cells) and the broadcast ADC table; sum of
-    *      per-subspace partial distances, row_number per query, keep
-    *      shortN. The scan reads 8-byte code rows, never float vectors.
-    *      codeFilter (filtered search) applies here, BEFORE the cut.
-    *   4. RERANK — fetch the <= B*shortN true vectors (broadcast semi-
-    *      join against the vector table; at 100 TB this fetch is a
-    *      point-lookup against a row-keyed store, the scan here is the
-    *      local stand-in) and order by exact cosine.
+    * Runs the four-step per-batch plan of the object doc (PROBE, ADC,
+    * SHORTLIST, RERANK); codeFilter (filtered search) applies in the
+    * SHORTLIST scan, BEFORE the cut.
     */
   def scoreBatchAt(
       spark: SparkSession,
@@ -528,77 +535,136 @@ object AnnServing {
         col("approx_dot"))
   }
 
-  /** The sq serving sink: [[startServingSink]]'s shape over the
-    * persisted int8 code table via [[scoreBatchSq]].
+  /** EPOCH-CONSISTENT label-aware serving: the
+    * [[startPublishedServingSink]] shape for the per-slice read —
+    * MANIFEST.json re-resolves per micro-batch and the depth side
+    * table read is PAIRED with that resolved version (versioned
+    * subdirs, newest-at-or-below — see readSideTable), so a new
+    * epoch's publish and its re-derived repair table take effect
+    * together, a rollback can never pair with a future table, and an
+    * upsert-only cadence gap keeps serving the last valid table
+    * instead of defaults. Each answered row carries the serving
+    * version.
     */
-  def startSqServingSink(
+  def startPublishedLabelAwareServingSink(
       stream: DataFrame,
-      indexDir: String,
-      outDir: String,
-      checkpoint: String,
-      k: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        scoreBatchSq(batch.sparkSession, indexDir, batch, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-
-  /** The bq serving sink: [[startServingSink]]'s shape over the
-    * binary-quantization channel — each micro-batch of query vectors
-    * is scored by [[scoreBatchBq]] against the persisted bitsig/
-    * artifact and the per-query top-k lands in `outDir` as parquet.
-    */
-  def startBqServingSink(
-      stream: DataFrame,
-      indexDir: String,
+      manifestRoot: String,
       vectorsPath: String,
+      depthsPath: String,
       outDir: String,
       checkpoint: String,
       k: Int = 5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        scoreBatchBq(s, indexDir, s.read.parquet(vectorsPath), batch, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    startScoringSink(stream, outDir, checkpoint, trigger) { batch =>
+      val s = batch.sparkSession
+      val (ver, centPath, codesPath) =
+        graft.queries.EmbQueries.readManifest(s, manifestRoot)
+      scoreBatchLabelAwareAt(s, centPath, codesPath, vectorsPath,
+        depthsPath, batch, k, indexVersion = Some(ver))
+        .withColumn("version", lit(ver))
+    }
 
-  /** STREAMING INDEX MAINTENANCE — the online twin of the batch
-    * emb_ivfpq_upsert: apply ONE micro-batch of newly-arrived vectors
-    * to the persisted index. Assignment uses the EXISTING centroids,
-    * encoding the EXISTING on-disk codebook (serving-ops contract:
-    * maintenance never retrains), and the append is partition-local —
-    * parquet files appear only under the cells the batch lands in.
-    * Because both steps reuse the batch path's exact arithmetic
-    * (unrounded L2², NULLS-LAST + smallest-id tiebreaks), an index
-    * maintained by streaming batches converges ROW-IDENTICAL to the
-    * batch-built index over the same vectors — StreamingSpec pins it.
-    *
-    * Idempotent: before appending, the encoded batch is anti-joined
-    * against the vec_ids already present in the cells it lands in
-    * (a directory-pruned scan — assignment is deterministic given
-    * fixed centroids, so a re-arriving id can only live in the cell
-    * it assigns to), so a foreachBatch REPLAY after a failure, or an
-    * id upserted twice, never duplicates index rows. The dedup cost
-    * is one pruned read of the landed cells — batch-proportional,
-    * never corpus-sized.
-    *
-    * @return number of index rows appended (replayed/duplicate ids
-    *         excluded)
+  // ------------------------------------------------------------------
+  // THE ONE INDEX WRITER. Every change to an ANN index after its build
+  // is a versioned op below (upsert, rebalance, retrain epoch, delete,
+  // compaction), published through the SAME publishVersion +
+  // MANIFEST.json machinery the batch publish chain owns
+  // (EmbQueries.publishVersion / publishOrConflict / readManifest /
+  // gcPlan). Nothing writes into an as-built index dir after
+  // EmbQueries.ensureServedIndex creates it, so the unversioned readers
+  // above (scoreBatch, scoreBatchBq, scoreBatchSq, scoreBatchAdaptive)
+  // read an immutable artifact, and a maintained index is served from
+  // its manifest (startPublishedServingSink, scoreBatchAt).
+  //
+  // Layout under `root`: MANIFEST.json + VERSION.<v>.json (the
+  // immutable log), centroids_v<v>/ dirs, code SEGMENT dirs, and the
+  // global codebook/ (maintenance never retrains it). The manifest's
+  // `codes` field is an ordered comma-separated list of immutable
+  // segment dirs — every consumer (scoreBatchAt, emb_ivfpq_published,
+  // gcPlan) already splits on ','. Each op writes version v+1's dirs
+  // fresh and then publishes them (publishNext); with `cas` the dir
+  // names carry the writer's attempt tag and the publish is a
+  // compare-and-swap on v, so a concurrent writer is a detected
+  // conflict, never a lost update.
+  //
+  // Why this shape has no torn-index window and no overwrite-recache
+  // hazard BY CONSTRUCTION:
+  //   1. every write lands in a FRESH dir that no manifest references
+  //      yet; the publish is one atomic rename. A crash at any point
+  //      leaves the old version serving intact, and the orphan v_next
+  //      dirs are overwritten by the checkpoint replay (same version
+  //      number re-derives from the unchanged manifest) or collected
+  //      by GC;
+  //   2. no plan ever reads a path an op replaces, so there is no
+  //      stale file listing to refresh, no recached plan to defend
+  //      against and no lineage to cut before a write.
+  //
+  // Cost classes, stated honestly for 100 TB:
+  //   - upsert: O(batch) — one new segment dir + one manifest rename;
+  //     the full-view dedup scan is the id-keyed point-lookup's local
+  //     stand-in;
+  //   - rebalance / epoch: corpus-proportional consolidation (the
+  //     epoch IS a corpus pass), with segment-list compaction as a
+  //     free side effect;
+  //   - delete: consolidation here (simplest correct blue/green form);
+  //     at scale the partition-local alternative is tombstone segments
+  //     + the serving-time excludeIds mask (already implemented) with
+  //     compaction deferred to the next consolidation op.
+  //
+  // Replay semantics (foreachBatch redelivery after a crash, BEFORE
+  // or AFTER the publish): every op re-derives its inputs from the
+  // manifest's CURRENT view. A pre-publish replay recomputes and
+  // republishes the same version. Post-publish, upsert and delete are
+  // strictly IDEMPOTENT (the dedup/anti-join finds nothing — zero
+  // rows, no publish); rebalance and the epoch are CONVERGING
+  // maintenance decisions, not no-ops — a replay re-measures the
+  // published view's health and may legitimately act again (e.g. a
+  // post-epoch state whose dominant region still trips the skew
+  // rule), publishing a strictly newer consistent version. Redelivery
+  // therefore never corrupts state; it can only advance maintenance.
+  // With a replayable source and this idempotent sink, a maintenance
+  // stream is exactly-once in the Structured Streaming sense.
+  // ------------------------------------------------------------------
+
+  /** The manifest's current view: (version, centroidsPath, ordered
+    * code-segment paths).
     */
+  private def manifestView(
+      spark: SparkSession, root: String): (Int, String, Seq[String]) = {
+    val (v, cent, codes) =
+      graft.queries.EmbQueries.readManifest(spark, root)
+    (v, cent, codes.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
+  }
+
+  /** Version v+1's fresh dir `<name>_v<v+1>` under root. With `cas` it
+    * carries the writer's attempt tag
+    * ([[graft.queries.EmbQueries.attemptTag]]), so racing builders'
+    * dirs are disjoint and the slot claim decides whose dirs v+1
+    * records; the tag is stable within one driver, so a crash-retry
+    * overwrites its own dir either way.
+    */
+  private def nextDir(spark: SparkSession, root: String, v: Int,
+      cas: Boolean)(name: String): String =
+    s"$root/${name}_v${v + 1}" +
+      (if (cas) "." + graft.queries.EmbQueries.attemptTag(spark) else "")
+
+  /** Publish version v+1 over the view resolved at version v. `write`
+    * gets [[nextDir]] for v+1, writes the fresh dirs and returns the
+    * (centroids, codes) the version records. Without `cas` this is the
+    * single-writer publish; with it, the compare-and-swap on v — a lost
+    * race deletes this writer's dirs and throws
+    * ConcurrentPublishException, so a foreachBatch retry re-runs the op
+    * on the winner's view ([[graft.queries.EmbQueries.publishOrConflict]]).
+    */
+  private def publishNext(spark: SparkSession, root: String, v: Int,
+      cas: Boolean)(write: (String => String) => (String, String)): Unit = {
+    val (cent, codes) = write(nextDir(spark, root, v, cas))
+    if (cas)
+      graft.queries.EmbQueries.publishOrConflict(spark, root, v, cent, codes)
+    else
+      graft.queries.EmbQueries.publishVersion(spark, root, v + 1, cent, codes)
+  }
+
   /** Normalize an arriving upsert micro-batch to the index row shape:
     * (vec_id LONG, embedding ARRAY&lt;FLOAT&gt;, label INT — NULL when
     * the batch carries no label column; attribute inlining keeps the
@@ -611,10 +677,10 @@ object AnnServing {
        else lit(null)).cast("int").as("label"))
 
   /** Assign + PQ-encode one normalized batch against explicit artifact
-    * paths — the ONE arithmetic both the in-place and the VERSIONED
-    * upsert run (identical by construction): nearest-centroid cell and
-    * per-subspace codebook argmin, both unrounded L2² with NULLS LAST
-    * and smallest-id tiebreaks (the batch path's pqArgmin convention).
+    * paths: nearest-centroid cell and per-subspace codebook argmin,
+    * both unrounded L2² with NULLS LAST and smallest-id tiebreaks (the
+    * batch path's pqArgmin convention), so a streamed upsert encodes
+    * exactly as the batch build does.
     *
     * @return (vec_id, codes, label, cell)
     */
@@ -655,663 +721,6 @@ object AnnServing {
     codes.join(assign, "vec_id")
       .join(b.select(col("vec_id"), col("label")), "vec_id")
   }
-
-  def applyUpsertBatch(
-      spark: SparkSession,
-      indexDir: String,
-      batch: DataFrame,
-      fullDedup: Boolean = false): Long = {
-    val b = normalizeUpsertBatch(batch)
-    if (b.isEmpty) return 0L
-    val rows = encodeBatch(spark, b, s"$indexDir/centroids",
-      s"$indexDir/codebook").persist()
-    rows.count()
-    // IDEMPOTENCE: drop rows whose vec_id is already indexed in the
-    // cell it assigns to (replay after failure / re-arriving id). The
-    // cell IN (...) predicate keeps the existence check a pruned read
-    // of ONLY the landed cells' directories; a prior batch may have
-    // rewritten them (delete sink), so refresh the listing first.
-    // fullDedup widens the check to EVERY cell: required under the
-    // auto-maintain sink, where a rebalance between upsert and
-    // checkpoint commit changes the centroids — a replayed id can then
-    // assign to a DIFFERENT cell than its indexed row lives in, and
-    // the landed-cells scope would miss it. At 100 TB the full check
-    // is a point-lookup against the id-keyed store; the 1-column scan
-    // of the 8-byte code table is the local stand-in.
-    val codesPath = s"$indexDir/codes"
-    spark.catalog.refreshByPath(codesPath)
-    val landed = rows.select("cell").distinct()
-      .collect().map(_.getInt(0))
-    if (landed.isEmpty) { rows.unpersist(); return 0L }
-    val existing =
-      if (fullDedup) spark.read.parquet(codesPath)
-      else spark.read.parquet(codesPath)
-        .filter(col("cell").isin(landed.map(Int.box): _*))
-    val dupIds = existing
-      .join(broadcast(rows.select("vec_id")), Seq("vec_id"), "left_semi")
-      .select("vec_id").distinct()
-    val fresh = rows
-      .join(broadcast(dupIds), Seq("vec_id"), "left_anti").persist()
-    val n = fresh.count()
-    if (n > 0) {
-      fresh.write.mode("append").partitionBy("cell")
-        .parquet(codesPath)
-    }
-    fresh.unpersist()
-    rows.unpersist()
-    n
-  }
-
-  /** The maintenance sink: every micro-batch of (vec_id, embedding)
-    * rows is upserted into the persisted index via
-    * [[applyUpsertBatch]].
-    */
-  def startMaintenanceSink(
-      stream: DataFrame,
-      indexDir: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyUpsertBatch(batch.sparkSession, indexDir, batch)
-        ()
-      }
-      .start()
-
-  /** STREAMING DELETE — tombstone micro-batches applied to the
-    * persisted index with partition-local compaction: the online twin
-    * of the batch emb_ivfpq_delete, closing the streaming lifecycle
-    * (serve -> upsert -> delete). Per batch of tombstoned vec_ids:
-    *   1. touched cells come from joining the index to the BROADCAST
-    *      tombstone set (at 100 TB the id->cell map is the index's own
-    *      partition column — one pruned read, never a corpus scan);
-    *   2. survivors of ONLY the touched cells are materialized
-    *      (persist + lineage truncation — the write below must not
-    *      read the files it overwrites; the plan-truncation trick is
-    *      ConnectedComponents' LogicalRDD convention) and rewritten
-    *      under DYNAMIC partition overwrite, so untouched cell
-    *      directories keep their exact file set;
-    *   3. a cell whose rows were all tombstoned gets its directory
-    *      dropped explicitly (dynamic overwrite writes no partition
-    *      for it and would otherwise keep serving the old files).
-    *
-    * @return number of index rows removed
-    */
-  def applyDeleteBatch(
-      spark: SparkSession,
-      indexDir: String,
-      batch: DataFrame): Long = {
-    val ids = batch.select(col("vec_id").cast("long").as("vec_id"))
-      .distinct()
-    if (ids.isEmpty) return 0L
-    val codesPath = s"$indexDir/codes"
-    // a previous batch rewrote these directories: Spark's session-level
-    // FileStatusCache would otherwise serve the stale listing and the
-    // scan would chase deleted part files (FAILED_READ_FILE)
-    spark.catalog.refreshByPath(codesPath)
-    val codes = spark.read.parquet(codesPath)
-    val touched = codes.join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .select("cell").distinct().collect().map(_.getInt(0))
-    if (touched.isEmpty) return 0L
-    val touchedCols = touched.map(Int.box).toSeq
-    val pruned = codes.filter(col("cell").isin(touchedCols: _*))
-    val removed = pruned.join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .count()
-    val survivorsP = pruned
-      .join(broadcast(ids), Seq("vec_id"), "left_anti").persist()
-    survivorsP.count()
-    // collected BEFORE the write: committing the overwrite recaches
-    // every plan that reads codesPath, and the rebuild would chase the
-    // just-deleted part files (FAILED_READ_FILE)
-    val kept = survivorsP.select("cell").distinct()
-      .collect().map(_.getInt(0)).toSet
-    // lineage-truncated (LogicalRDD over the materialized cache) so
-    // the write plan does not read the files it overwrites
-    val survivors =
-      org.apache.spark.sql.GraftSqlBridge.truncateLineage(survivorsP)
-    survivors.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(codesPath)
-    survivorsP.unpersist()
-    val emptied = touched.filterNot(kept)
-    if (emptied.nonEmpty) {
-      // resolve the FS from the INDEX PATH's scheme, not the default
-      // filesystem — on s3a/hdfs index stores FileSystem.get(conf)
-      // would target the wrong store and leave stale cell dirs serving
-      val fs = new org.apache.hadoop.fs.Path(codesPath)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      emptied.foreach { c =>
-        fs.delete(new org.apache.hadoop.fs.Path(s"$codesPath/cell=$c"),
-          true)
-      }
-    }
-    spark.catalog.refreshByPath(codesPath) // readers see the new layout
-    removed
-  }
-
-  /** The delete sink: every micro-batch of tombstoned vec_ids is
-    * compacted out of the persisted index via [[applyDeleteBatch]].
-    */
-  def startDeleteSink(
-      stream: DataFrame,
-      indexDir: String,
-      checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        applyDeleteBatch(batch.sparkSession, indexDir, batch)
-        ()
-      }
-      .start()
-
-  /** STREAMING CELL REBALANCE — the in-place twin of the batch
-    * emb_ivfpq_rebalance, run between micro-batches by the
-    * auto-maintain sink: sustained upserts against fixed centroids
-    * skew cells, and this op splits the overgrown ones on the LIVE
-    * index. Same order-pinned arithmetic as the batch op (integer
-    * fair-share threshold; seed A = min vec_id, seed B =
-    * farthest-from-A with NULLS LAST + id tie, strictly-closer rows
-    * move; snap6/mean6 centroid re-derivation for the split
-    * memberships only), so a streamed maintenance history is
-    * reproducible by replaying the same calls — StreamingSpec pins
-    * stream-vs-direct-call index equality.
-    *
-    * In-place mechanics (the applyDeleteBatch hazards): the rewrite
-    * targets the path it reads, so the moved rows are persisted and
-    * the write plan lineage-truncated; only the overgrown cells'
-    * partitions rewrite (dynamic overwrite — untouched dirs keep
-    * their file sets); the centroid table rewrite goes through the
-    * same truncation; both paths get refreshByPath so the next batch
-    * reads the new layout. Skew detection is one count-by-cell over
-    * the 8-byte code table — at 100 TB that is the store's partition
-    * statistics (a metadata read); the scan is the local stand-in.
-    *
-    * @param vectorsPath the id-keyed true-vector store: the split
-    *        seeds and distances need the overgrown cells' real
-    *        vectors (point-lookups at scale; a pruned join here)
-    * @return number of rows moved into new cells (0 = balanced no-op)
-    */
-  def applyRebalance(
-      spark: SparkSession,
-      indexDir: String,
-      vectorsPath: String,
-      num: Int = graft.queries.EmbQueries.RebalanceNum,
-      den: Int = graft.queries.EmbQueries.RebalanceDen): Long = {
-    val codesPath = s"$indexDir/codes"
-    val centPath = s"$indexDir/centroids"
-    spark.catalog.refreshByPath(codesPath)
-    val codes = spark.read.parquet(codesPath)
-    val szRows = codes.groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect()
-    val nCells = szRows.length.toLong
-    val total = szRows.map(_.getLong(1)).sum
-    val overgrown = szRows
-      .filter(r => den * r.getLong(1) * nCells > num * total)
-      .map(_.getInt(0)).sorted
-    if (overgrown.isEmpty) return 0L
-
-    spark.catalog.refreshByPath(centPath)
-    val cent = spark.read.parquet(centPath)
-    val maxLabel = cent.agg(max(col("c_label"))).collect()(0).getInt(0)
-    val newId: Map[Int, Int] = overgrown.zipWithIndex
-      .map { case (c, i) => c -> (maxLabel + i + 1) }.toMap
-    val ogCols = overgrown.map(Int.box).toSeq
-
-    val vecs = spark.read.parquet(vectorsPath)
-      .select(col("vec_id"), col("embedding").cast("array<float>")
-        .as("mvec"))
-    // LEFT join: the dynamic overwrite below replaces the overgrown
-    // cells' partitions with exactly this frame's rows — an inner join
-    // would silently DROP any indexed row whose vector is missing from
-    // the store. A vectorless row keeps NULL distances and stays in
-    // its cell (the strict-inequality move rule never fires on NULL).
-    val mem = codes.filter(col("cell").isin(ogCols: _*))
-      .join(vecs, Seq("vec_id"), "left")
-    // seed A = the cell's smallest vec_id that HAS a vector; a cell of
-    // only vectorless rows gets no seed and (via the left join) moves
-    // nothing
-    val seedAV = mem.filter(col("mvec").isNotNull)
-      .groupBy("cell").agg(min(col("vec_id")).as("avid"))
-      .join(vecs.select(col("vec_id").as("avid"),
-        col("mvec").as("avec")), "avid")
-      .select("cell", "avec")
-    val dA = mem.join(broadcast(seedAV), Seq("cell"), "left")
-      .withColumn("d2a",
-        graft.functions.VecL2Sq.column(col("mvec"), col("avec")))
-    val wB = Window.partitionBy(col("cell"))
-      .orderBy(col("d2a").desc_nulls_last, col("vec_id"))
-    val seedBV = dA.withColumn("rn", row_number().over(wB))
-      .filter(col("rn") === 1)
-      .select(col("cell"), col("mvec").as("bvec"))
-    val movedP = dA.join(broadcast(seedBV), "cell")
-      .withColumn("d2b",
-        graft.functions.VecL2Sq.column(col("mvec"), col("bvec")))
-      .select(col("vec_id"), col("codes"), col("label"),
-        when(col("d2b") < col("d2a"),
-          element_at(typedLit(newId), col("cell")))
-          .otherwise(col("cell")).as("cell"),
-        col("mvec"))
-      .persist()
-    val nMoved = movedP.filter(col("cell") > maxLabel).count()
-
-    // re-derived centroids for ONLY the split memberships, computed
-    // (and the survivors of the untouched set COLLECTED via persist)
-    // BEFORE the codes rewrite — the overwrite-recache hazard
-    val splitCentP = movedP
-      .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
-      .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
-      .groupBy("cell", "dim")
-      .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
-      .groupBy("cell")
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("cvec"))
-      .select(col("cell").as("c_label"), col("cvec"))
-      .unionByName(cent.filter(!col("c_label").isin(ogCols: _*)))
-      .persist()
-    splitCentP.count()
-
-    // the centroid rows are COLLECTED to the driver BEFORE the codes
-    // rewrite (|cells| rows — the probed-cells-collect convention):
-    // committing the codes overwrite RECACHES every cached plan that
-    // reads codesPath, and splitCentP's lineage does — a post-write
-    // access would silently recompute the split means over the
-    // ALREADY-REWRITTEN memberships (found live in round 11: the
-    // written split centroid no longer matched the independent mean
-    // of its membership). A driver-local copy is immune.
-    val centRows = splitCentP.collect().toSeq
-    // in-place partition-local rewrite: the plan reads codesPath, so
-    // truncate lineage off the materialized cache first
-    val moved = org.apache.spark.sql.GraftSqlBridge.truncateLineage(
-      movedP.select("vec_id", "codes", "label", "cell"))
-    moved.write.mode("overwrite")
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("cell").parquet(codesPath)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(centRows, 1), splitCentP.schema)
-      .write.mode("overwrite").parquet(centPath)
-    movedP.unpersist()
-    splitCentP.unpersist()
-    spark.catalog.refreshByPath(codesPath)
-    spark.catalog.refreshByPath(centPath)
-    nMoved
-  }
-
-  /** RETRAIN-WHEN-DUE — the streaming twin of the batch
-    * emb_retrain_decision -> emb_ivfpq_retrain chain: measure the
-    * index's health off its OWN artifacts (one argmin pass for drift,
-    * one bounded group-by for skew — the exact integer rules
-    * emb_retrain_decision pins), and when either threshold trips, run
-    * ONE full Lloyd epoch IN PLACE: M-step re-means every cell from
-    * its actual current membership (snap6/mean6 — ivfCentroids'
-    * arithmetic), E-step reassigns every vectored row to its nearest
-    * new centroid (NULL-distance rows keep their cell — the
-    * applyRebalance convention for vectorless rows, which also keep
-    * their OLD centroid if their whole cell is vectorless), emptied
-    * cells prune. In-place rewrite follows the module's
-    * overwrite-recache discipline (persist + count BEFORE the write,
-    * truncateLineage so the plan never reads what it replaces,
-    * refreshByPath after). The batch path proves the blue/green
-    * publish form of the same epoch; this is the self-healing form a
-    * maintenance stream runs unattended.
-    *
-    * @return (ran, misplacedBefore) — ran=false means both health
-    *         rules passed and the index was not touched
-    */
-  def applyRetrainEpochIfDue(
-      spark: SparkSession,
-      indexDir: String,
-      vectorsPath: String,
-      num: Int = graft.queries.EmbQueries.RebalanceNum,
-      den: Int = graft.queries.EmbQueries.RebalanceDen): (Boolean, Long) = {
-    val codesPath = s"$indexDir/codes"
-    val centPath = s"$indexDir/centroids"
-    spark.catalog.refreshByPath(codesPath)
-    spark.catalog.refreshByPath(centPath)
-    val codes = spark.read.parquet(codesPath)
-    val centRaw = spark.read.parquet(centPath)
-    val cent = centRaw
-      .select(col("c_label").as("clab"), col("cvec"))
-      .groupBy("clab").agg(first(col("cvec")).as("cvec"))
-    val vecs = spark.read.parquet(vectorsPath)
-      .select(col("vec_id"),
-        col("embedding").cast("array<float>").as("mvec"))
-    // HEALTH: skew off a bounded per-cell group-by; drift off one
-    // argmin pass (NULL distances never count as misplaced)
-    val szRows = codes.groupBy("cell").agg(count(lit(1)).as("cn"))
-      .collect()
-    val nCells = szRows.length.toLong
-    val total = szRows.map(_.getLong(1)).sum
-    val maxCell = if (szRows.isEmpty) 0L else szRows.map(_.getLong(1)).max
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc_nulls_last, col("clab"))
-    val near = codes.select("vec_id", "cell")
-      .join(vecs, Seq("vec_id"), "left")
-      .crossJoin(broadcast(cent))
-      .withColumn("d2",
-        graft.functions.VecL2Sq.column(col("mvec"), col("cvec")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-    val mis = near
-      .filter(col("d2").isNotNull && col("clab") =!= col("cell"))
-      .count()
-    val skew = den.toLong * maxCell * nCells > num.toLong * total
-    val drift = total > 0 && mis * 10 >= total
-    if (!(skew || drift)) return (false, mis)
-
-    // EPOCH. M-step: per-cell means over the current memberships
-    // (vectorless rows cannot contribute)
-    val cent3P = codes.select("vec_id", "cell")
-      .join(vecs, Seq("vec_id"))
-      .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
-      .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
-      .groupBy("cell", "dim")
-      .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
-      .groupBy("cell")
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("cvec"))
-      .select(col("cell").as("c_label"), col("cvec"))
-      .persist()
-    cent3P.count()
-    val cent3B = cent3P
-      .select(col("c_label").as("nlab"), col("cvec").as("ncvec"))
-    // E-step: reassign every vectored row; NULL distance keeps cell
-    val wE = Window.partitionBy(col("vec_id"))
-      .orderBy(col("nd2").asc_nulls_last, col("nlab"))
-    val asgP = codes
-      .join(vecs, Seq("vec_id"), "left")
-      .crossJoin(broadcast(cent3B))
-      .withColumn("nd2",
-        graft.functions.VecL2Sq.column(col("mvec"), col("ncvec")))
-      .withColumn("rn", row_number().over(wE))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("codes"), col("label"),
-        when(col("nd2").isNotNull, col("nlab"))
-          .otherwise(col("cell")).as("cell"))
-      .persist()
-    asgP.count()
-    // final centroid table: epoch means for surviving cells, plus the
-    // OLD centroid for any all-vectorless cell the means pass missed
-    val live = asgP.select(col("cell").as("c_label")).distinct()
-    val keptP = cent3P
-      .join(live, Seq("c_label"), "left_semi")
-      .unionByName(centRaw
-        .join(live, Seq("c_label"), "left_semi")
-        .join(cent3P.select("c_label"), Seq("c_label"), "left_anti"))
-      .persist()
-    keptP.count()
-
-    // centroid rows driver-collected BEFORE the codes rewrite: the
-    // overwrite commit recaches every cached plan reading codesPath
-    // (cent3P/keptP read it), and a post-write access would silently
-    // recompute the means over the NEW memberships — a second,
-    // unintended M-step (caught live by the self-healing spec's
-    // independent post-check). |cells| rows — driver-bounded.
-    val keptRows = keptP.collect().toSeq
-    val newCodes = org.apache.spark.sql.GraftSqlBridge
-      .truncateLineage(asgP)
-    newCodes.write.mode("overwrite")
-      .partitionBy("cell").parquet(codesPath)
-    spark.createDataFrame(
-      spark.sparkContext.parallelize(keptRows, 1), keptP.schema)
-      .write.mode("overwrite").parquet(centPath)
-    cent3P.unpersist()
-    asgP.unpersist()
-    keptP.unpersist()
-    spark.catalog.refreshByPath(codesPath)
-    spark.catalog.refreshByPath(centPath)
-    (true, mis)
-  }
-
-  /** The AUTO-MAINTAIN sink: each micro-batch of arriving vectors is
-    * upserted ([[applyUpsertBatch]] with the full-index dedup scope —
-    * see there for why landed-cells dedup is insufficient once
-    * centroids can change), then the index is rebalanced
-    * ([[applyRebalance]]) if the batch pushed any cell over the skew
-    * threshold — the complete streaming serving-ops lifecycle
-    * (serve / upsert / delete / rebalance) in one sink.
-    */
-  def startAutoMaintainSink(
-      stream: DataFrame,
-      indexDir: String,
-      vectorsPath: String,
-      checkpoint: String,
-      num: Int = graft.queries.EmbQueries.RebalanceNum,
-      den: Int = graft.queries.EmbQueries.RebalanceDen,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        applyUpsertBatch(s, indexDir, batch, fullDedup = true)
-        applyRebalance(s, indexDir, vectorsPath, num, den)
-        ()
-      }
-      .start()
-
-  /** The SELF-HEALING sink — [[startAutoMaintainSink]] plus the
-    * retrain rung: upsert, rebalance if skewed, then
-    * [[applyRetrainEpochIfDue]] — the index measures its own health
-    * per micro-batch and runs the full epoch when a threshold trips.
-    * This closes the streaming maintenance lifecycle: serve / upsert /
-    * delete / rebalance / RETRAIN, all unattended.
-    */
-  def startSelfHealingSink(
-      stream: DataFrame,
-      indexDir: String,
-      vectorsPath: String,
-      checkpoint: String,
-      num: Int = graft.queries.EmbQueries.RebalanceNum,
-      den: Int = graft.queries.EmbQueries.RebalanceDen,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        applyUpsertBatch(s, indexDir, batch, fullDedup = true)
-        applyRebalance(s, indexDir, vectorsPath, num, den)
-        applyRetrainEpochIfDue(s, indexDir, vectorsPath, num, den)
-        ()
-      }
-      .start()
-
-  /** the [[scoreBatchAdaptive]] sink — same wrapper shape as
-    * startServingSink; the selectivity decision re-runs per
-    * micro-batch (the index may have mutated between batches), so a
-    * long-lived serving stream follows the data across the crossover
-    */
-  def startAdaptiveServingSink(
-      stream: DataFrame,
-      indexDir: String,
-      vectorsPath: String,
-      outDir: String,
-      checkpoint: String,
-      pred: Column,
-      k: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        scoreBatchAdaptive(s, indexDir, s.read.parquet(vectorsPath),
-          batch, pred, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-
-  /** The streaming server: a foreachBatch sink that scores each micro-
-    * batch of query vectors against the persisted index and appends the
-    * per-query top-k (plus the batch id) to `outDir` as parquet. The
-    * index and vector table are opened once per batch from their
-    * on-disk layout — no session-memoized state crosses the boundary,
-    * which is what makes the same code runnable in a separate serving
-    * process.
-    */
-  def startServingSink(
-      stream: DataFrame,
-      indexDir: String,
-      vectorsPath: String,
-      outDir: String,
-      checkpoint: String,
-      k: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        scoreBatch(s, indexDir, s.read.parquet(vectorsPath), batch, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-
-  /** the [[scoreBatchLabelAware]] sink — same wrapper shape as
-    * startServingSink; the depth side table re-reads per micro-batch,
-    * so a repair re-derivation (new per-label depths) takes effect on
-    * the next batch with no topology change
-    */
-  def startLabelAwareServingSink(
-      stream: DataFrame,
-      indexDir: String,
-      vectorsPath: String,
-      depthsPath: String,
-      outDir: String,
-      checkpoint: String,
-      k: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        scoreBatchLabelAware(s, indexDir, vectorsPath, depthsPath,
-          batch, k)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-
-  /** EPOCH-CONSISTENT label-aware serving: the
-    * [[startPublishedServingSink]] shape for the per-slice read —
-    * MANIFEST.json re-resolves per micro-batch and the depth side
-    * table read is PAIRED with that resolved version (versioned
-    * subdirs, newest-at-or-below — see readSideTable), so a new
-    * epoch's publish and its re-derived repair table take effect
-    * together, a rollback can never pair with a future table, and an
-    * upsert-only cadence gap keeps serving the last valid table
-    * instead of defaults. Each answered row carries the serving
-    * version.
-    */
-  def startPublishedLabelAwareServingSink(
-      stream: DataFrame,
-      manifestRoot: String,
-      vectorsPath: String,
-      depthsPath: String,
-      outDir: String,
-      checkpoint: String,
-      k: Int = 5,
-      trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val (ver, centPath, codesPath) =
-          graft.queries.EmbQueries.readManifest(s, manifestRoot)
-        scoreBatchLabelAwareAt(s, centPath, codesPath, vectorsPath,
-          depthsPath, batch, k, indexVersion = Some(ver))
-          .withColumn("version", lit(ver))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
-
-  // ------------------------------------------------------------------
-  // VERSIONED streaming maintenance — the blue/green form of the
-  // in-place ops above, routed through the SAME publishVersion +
-  // MANIFEST.json machinery the batch publish chain owns
-  // (EmbQueries.publishVersion / readManifest / gcPlan).
-  //
-  // Layout under `root`: MANIFEST.json + VERSION.<v>.json (the
-  // immutable log), centroids_v<v>/ dirs, code SEGMENT dirs, and the
-  // global codebook/ (maintenance never retrains it). The manifest's
-  // `codes` field is an ordered comma-separated list of immutable
-  // segment dirs — every consumer (scoreBatchAt, emb_ivfpq_published,
-  // gcPlan) already splits on ','.
-  //
-  // Why this shape kills both round-11 hazard classes BY CONSTRUCTION:
-  //   1. TORN-INDEX CRASH WINDOW: every write lands in a FRESH dir
-  //      that no manifest references yet; the publish is one atomic
-  //      rename. A crash at any point leaves the old version serving
-  //      intact, and the orphan v_next dirs are overwritten by the
-  //      checkpoint replay (same version number re-derives from the
-  //      unchanged manifest) or collected by GC.
-  //   2. OVERWRITE-RECACHE: no plan ever reads a path the op replaces
-  //      — the persist/collect/truncateLineage/refreshByPath
-  //      discipline the in-place ops need (and round 11's bug came
-  //      from) has nothing to defend against here and is absent.
-  //
-  // Cost classes, stated honestly for 100 TB:
-  //   - upsert: O(batch) — one new segment dir + one manifest rename;
-  //     the full-view dedup scan is the id-keyed point-lookup's local
-  //     stand-in (the applyUpsertBatch fullDedup note).
-  //   - rebalance / epoch: corpus-proportional consolidation — the
-  //     same class as their in-place forms (the epoch IS a corpus
-  //     pass), with segment-list compaction as a free side effect.
-  //   - delete: consolidation here (simplest correct blue/green form);
-  //     at scale the partition-local alternative is tombstone segments
-  //     + the serving-time excludeIds mask (already implemented) with
-  //     compaction deferred to the next consolidation op.
-  //
-  // Replay semantics (foreachBatch redelivery after a crash, BEFORE
-  // or AFTER the publish): every op re-derives its inputs from the
-  // manifest's CURRENT view. A pre-publish replay recomputes and
-  // republishes the same version. Post-publish, upsert and delete are
-  // strictly IDEMPOTENT (the dedup/anti-join finds nothing — zero
-  // rows, no publish); rebalance and the epoch are CONVERGING
-  // maintenance decisions, not no-ops — a replay re-measures the
-  // published view's health and may legitimately act again (e.g. a
-  // post-epoch state whose dominant region still trips the skew
-  // rule), publishing a strictly newer consistent version. Redelivery
-  // therefore never corrupts state; it can only advance maintenance —
-  // the same behavior the in-place sinks already have.
-  // ------------------------------------------------------------------
-
-  /** The manifest's current view: (version, centroidsPath, ordered
-    * code-segment paths).
-    */
-  private def manifestView(
-      spark: SparkSession, root: String): (Int, String, Seq[String]) = {
-    val (v, cent, codes) =
-      graft.queries.EmbQueries.readManifest(spark, root)
-    (v, cent, codes.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-  }
-
-  private def viewCodes(
-      spark: SparkSession, segs: Seq[String]): DataFrame =
-    graft.queries.EmbQueries.readSegments(spark, segs.mkString(","))
 
   // ------------------------------------------------------------------
   // Versioned SIDE TABLES (per-label depth / budget operating points).
@@ -1389,8 +798,9 @@ object AnnServing {
   }
 
   /** VERSIONED upsert: encode the batch against the published
-    * centroids (encodeBatch — the exact in-place arithmetic), dedup
-    * against the published view, write the fresh rows as ONE new
+    * centroids (encodeBatch — the batch build's arithmetic, so a
+    * streamed index converges ROW-IDENTICAL to the batch-built one
+    * over the same vectors), dedup against the published view, write the fresh rows as ONE new
     * immutable segment, publish version+1 whose segment list is the
     * old list plus the new dir. O(batch) data written; the manifest
     * rename is the only mutation of shared state.
@@ -1426,10 +836,13 @@ object AnnServing {
       val rows = encodeBatch(spark, b, centPath, s"$root/codebook")
         .persist()
       rows.count()
-      // full-view dedup (the fullDedup rationale: maintenance can
-      // change centroids between batches, so a replayed id may assign
-      // elsewhere)
-      val dupIds = viewCodes(spark, segs)
+      // full-view dedup: maintenance can change centroids between
+      // batches, so a replayed id may assign to a different cell than
+      // the one its indexed row lives in (at 100 TB a point-lookup
+      // against the id-keyed store; the 1-column scan of the 8-byte
+      // code segments is the local stand-in)
+      val dupIds = graft.queries.EmbQueries.readSegments(spark,
+        segs.mkString(","))
         .join(broadcast(rows.select("vec_id")), Seq("vec_id"), "left_semi")
         .select("vec_id").distinct()
       val fresh = rows
@@ -1437,17 +850,10 @@ object AnnServing {
       val n = fresh.count()
       val out =
         if (n > 0) {
-          // cas: tag-suffixed so a racing writer's segment dir can
-          // never be clobbered by this attempt (the slot claim decides
-          // whose dir version v+1 records)
-          val sfx =
-            if (cas) "." + graft.queries.EmbQueries.attemptTag(spark)
-            else ""
-          val seg = s"$root/codes_up_v${v + 1}$sfx"
           // overwrite: a crash-retry of the SAME batch re-derives the
           // same version number from the unchanged manifest and
-          // rewrites the orphan dir cleanly (cas: the tag is stable
-          // within one driver, so the same self-cleaning holds)
+          // rewrites the orphan dir cleanly
+          val seg = nextDir(spark, root, v, cas)("codes_up")
           fresh.write.mode("overwrite").partitionBy("cell").parquet(seg)
           Some((seg, n))
         } else None
@@ -1500,11 +906,16 @@ object AnnServing {
   }
 
   /** VERSIONED cell rebalance: same overgrown-cell detection and
-    * order-pinned split arithmetic as [[applyRebalance]], but the
-    * result is a CONSOLIDATED new codes segment + a new centroid dir
-    * published as version+1 — never a rewrite of anything the current
-    * version serves. Consolidation also compacts the upsert segment
-    * list back to one dir.
+    * order-pinned split arithmetic as the batch emb_ivfpq_rebalance
+    * (integer fair-share threshold; seed A = min vec_id, seed B =
+    * farthest-from-A with NULLS LAST + id tie, strictly-closer rows
+    * move; snap6/mean6 centroid re-derivation for the split
+    * memberships only). Skew detection is one count-by-cell over the
+    * 8-byte code segments — at 100 TB the store's partition
+    * statistics. The result is a CONSOLIDATED new codes segment + a
+    * new centroid dir published as version+1 — never a rewrite of
+    * anything the current version serves. Consolidation also compacts
+    * the upsert segment list back to one dir.
     *
     * @return rows moved into new cells (0 = balanced, nothing
     *         published)
@@ -1517,7 +928,8 @@ object AnnServing {
       den: Int = graft.queries.EmbQueries.RebalanceDen,
       cas: Boolean = false): Long = {
     val (v, centPath, segs) = manifestView(spark, root)
-    val codes = viewCodes(spark, segs)
+    val codes = graft.queries.EmbQueries.readSegments(spark,
+      segs.mkString(","))
     val szRows = codes.groupBy("cell").agg(count(lit(1)).as("n"))
       .collect()
     val nCells = szRows.length.toLong
@@ -1536,8 +948,12 @@ object AnnServing {
     val vecs = spark.read.parquet(vectorsPath)
       .select(col("vec_id"), col("embedding").cast("array<float>")
         .as("mvec"))
-    // LEFT join + strict-inequality move rule: vectorless rows keep
-    // their cell (the applyRebalance convention)
+    // LEFT join + strict-inequality move rule: a row whose vector is
+    // missing from the store (store lag, partial restore) keeps NULL
+    // distances and stays in its cell — an inner join would silently
+    // DROP it from the consolidated segment. Seed A = the cell's
+    // smallest vec_id that HAS a vector; a cell of only vectorless rows
+    // gets no seed and moves nothing
     val mem = codes.filter(col("cell").isin(ogCols: _*))
       .join(vecs, Seq("vec_id"), "left")
     val seedAV = mem.filter(col("mvec").isNotNull)
@@ -1565,55 +981,55 @@ object AnnServing {
 
     // consolidated v+1 codes: split memberships + untouched cells —
     // reads only the IMMUTABLE old segments, writes only fresh dirs
-    // (cas: tag-suffixed so concurrent builders' dirs are disjoint)
-    val sfx = if (cas) "." + graft.queries.EmbQueries.attemptTag(spark)
-      else ""
-    val codesNext = s"$root/codes_v${v + 1}$sfx"
-    val centNext = s"$root/centroids_v${v + 1}$sfx"
-    moved.select("vec_id", "codes", "label", "cell")
-      .unionByName(codes.filter(!col("cell").isin(ogCols: _*))
-        .select("vec_id", "codes", "label", "cell"))
-      .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-    val splitCent = moved
-      .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
-      .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
-      .groupBy("cell", "dim")
-      .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
-      .groupBy("cell")
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("cvec"))
-      .select(col("cell").as("c_label"), col("cvec"))
-    // an overgrown cell whose rows are ALL vectorless contributes no
-    // mean (posexplode drops NULL mvec) yet keeps its rows in
-    // codesNext — without its OLD centroid it would become
-    // unreachable by probing (the all-vectorless rescue the epoch
-    // twin does via its live/left_anti union)
-    val rescued = cent.filter(col("c_label").isin(ogCols: _*))
-      .join(splitCent.select("c_label"), Seq("c_label"), "left_anti")
-    splitCent
-      .unionByName(rescued)
-      .unionByName(cent.filter(!col("c_label").isin(ogCols: _*)))
-      .write.mode("overwrite").parquet(centNext)
-    if (cas)
-      graft.queries.EmbQueries.publishOrConflict(spark, root, v,
-        centNext, codesNext)
-    else
-      graft.queries.EmbQueries.publishVersion(spark, root, v + 1,
-        centNext, codesNext)
+    publishNext(spark, root, v, cas) { next =>
+      val codesNext = next("codes")
+      val centNext = next("centroids")
+      moved.select("vec_id", "codes", "label", "cell")
+        .unionByName(codes.filter(!col("cell").isin(ogCols: _*))
+          .select("vec_id", "codes", "label", "cell"))
+        .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+      val splitCent = moved
+        .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
+        .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
+        .groupBy("cell", "dim")
+        .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
+        .groupBy("cell")
+        .agg(transform(
+          array_sort(collect_list(struct(col("dim"), col("cv")))),
+          x => x.getField("cv")).as("cvec"))
+        .select(col("cell").as("c_label"), col("cvec"))
+      // an overgrown cell whose rows are ALL vectorless contributes no
+      // mean (posexplode drops NULL mvec) yet keeps its rows in
+      // codesNext — without its OLD centroid it would become
+      // unreachable by probing (the all-vectorless rescue the epoch
+      // does via its live/left_anti union)
+      val rescued = cent.filter(col("c_label").isin(ogCols: _*))
+        .join(splitCent.select("c_label"), Seq("c_label"), "left_anti")
+      splitCent
+        .unionByName(rescued)
+        .unionByName(cent.filter(!col("c_label").isin(ogCols: _*)))
+        .write.mode("overwrite").parquet(centNext)
+      (centNext, codesNext)
+    }
     nMoved
   }
 
-  /** VERSIONED retrain-when-due: [[applyRetrainEpochIfDue]]'s health
-    * rules and Lloyd epoch (M-step means, keep-cell E-step, emptied
-    * cells prune), published as a consolidated version+1 instead of
-    * rewritten in place. Note what is ABSENT relative to the in-place
-    * twin: no persist/count fences, no driver collect of the centroid
-    * rows, no truncateLineage, no refreshByPath — the epoch reads only
-    * immutable published segments and writes only unpublished dirs,
-    * so the overwrite-recache hazard cannot exist here.
+  /** VERSIONED retrain-when-due — the streaming form of the batch
+    * emb_retrain_decision -> emb_ivfpq_retrain chain: measure the
+    * published view's health off its OWN artifacts (one argmin pass
+    * for drift, one bounded group-by for skew — the exact integer
+    * rules emb_retrain_decision pins), and when either trips, run ONE
+    * full Lloyd epoch: M-step re-means every cell from its current
+    * membership (snap6/mean6 — ivfCentroids' arithmetic), E-step
+    * reassigns every vectored row to its nearest new centroid
+    * (NULL-distance rows keep their cell, and an all-vectorless cell
+    * keeps its OLD centroid), emptied cells prune. The epoch is
+    * published as a consolidated version+1; it reads only immutable
+    * published segments and writes only unpublished dirs, so no plan
+    * it runs reads a path it writes.
     *
-    * @return (ran, misplacedBefore)
+    * @return (ran, misplacedBefore) — ran=false means both health
+    *         rules passed and nothing was published
     */
   def applyRetrainEpochIfDueVersioned(
       spark: SparkSession,
@@ -1623,7 +1039,8 @@ object AnnServing {
       den: Int = graft.queries.EmbQueries.RebalanceDen,
       cas: Boolean = false): (Boolean, Long) = {
     val (v, centPath, segs) = manifestView(spark, root)
-    val codes = viewCodes(spark, segs)
+    val codes = graft.queries.EmbQueries.readSegments(spark,
+      segs.mkString(","))
     val centRaw = spark.read.parquet(centPath)
     val cent = centRaw
       .select(col("c_label").as("clab"), col("cvec"))
@@ -1678,27 +1095,22 @@ object AnnServing {
       .select(col("vec_id"), col("codes"), col("label"),
         when(col("nd2").isNotNull, col("nlab"))
           .otherwise(col("cell")).as("cell"))
-    val sfx = if (cas) "." + graft.queries.EmbQueries.attemptTag(spark)
-      else ""
-    val codesNext = s"$root/codes_v${v + 1}$sfx"
-    val centNext = s"$root/centroids_v${v + 1}$sfx"
-    asg.write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-    // final centroids read back off the WRITTEN codes (a fresh dir —
-    // reading it is safe): epoch means for surviving cells, plus the
-    // old centroid for any all-vectorless cell the means pass missed
-    val live = spark.read.parquet(codesNext)
-      .select(col("cell").as("c_label")).distinct()
-    cent3.join(live, Seq("c_label"), "left_semi")
-      .unionByName(centRaw
-        .join(live, Seq("c_label"), "left_semi")
-        .join(cent3.select("c_label"), Seq("c_label"), "left_anti"))
-      .write.mode("overwrite").parquet(centNext)
-    if (cas)
-      graft.queries.EmbQueries.publishOrConflict(spark, root, v,
-        centNext, codesNext)
-    else
-      graft.queries.EmbQueries.publishVersion(spark, root, v + 1,
-        centNext, codesNext)
+    publishNext(spark, root, v, cas) { next =>
+      val codesNext = next("codes")
+      val centNext = next("centroids")
+      asg.write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+      // final centroids read back off the WRITTEN codes (a fresh dir —
+      // reading it is safe): epoch means for surviving cells, plus the
+      // old centroid for any all-vectorless cell the means pass missed
+      val live = spark.read.parquet(codesNext)
+        .select(col("cell").as("c_label")).distinct()
+      cent3.join(live, Seq("c_label"), "left_semi")
+        .unionByName(centRaw
+          .join(live, Seq("c_label"), "left_semi")
+          .join(cent3.select("c_label"), Seq("c_label"), "left_anti"))
+        .write.mode("overwrite").parquet(centNext)
+      (centNext, codesNext)
+    }
     (true, mis)
   }
 
@@ -1721,21 +1133,17 @@ object AnnServing {
       .distinct()
     if (ids.isEmpty) return 0L
     val (v, centPath, segs) = manifestView(spark, root)
-    val codes = viewCodes(spark, segs)
+    val codes = graft.queries.EmbQueries.readSegments(spark,
+      segs.mkString(","))
     val removed = codes.join(broadcast(ids), Seq("vec_id"), "left_semi")
       .count()
     if (removed == 0L) return 0L
-    val sfx = if (cas) "." + graft.queries.EmbQueries.attemptTag(spark)
-      else ""
-    val codesNext = s"$root/codes_v${v + 1}$sfx"
-    codes.join(broadcast(ids), Seq("vec_id"), "left_anti")
-      .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-    if (cas)
-      graft.queries.EmbQueries.publishOrConflict(spark, root, v,
-        centPath, codesNext)
-    else
-      graft.queries.EmbQueries.publishVersion(spark, root, v + 1,
-        centPath, codesNext)
+    publishNext(spark, root, v, cas) { next =>
+      val codesNext = next("codes")
+      codes.join(broadcast(ids), Seq("vec_id"), "left_anti")
+        .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+      (centPath, codesNext)
+    }
     removed
   }
 
@@ -1774,17 +1182,12 @@ object AnnServing {
     val nMerge = segs.size - maxSegments + 1
     val merge = bySize.take(nMerge).map(_._1)
     val kept = segs.filterNot(merge.toSet) // manifest order preserved
-    val sfx = if (cas) "." + graft.queries.EmbQueries.attemptTag(spark)
-      else ""
-    val codesNext = s"$root/codes_v${v + 1}$sfx"
-    viewCodes(spark, merge)
-      .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-    if (cas)
-      graft.queries.EmbQueries.publishOrConflict(spark, root, v,
-        centPath, (kept :+ codesNext).mkString(","))
-    else
-      graft.queries.EmbQueries.publishVersion(spark, root, v + 1,
-        centPath, (kept :+ codesNext).mkString(","))
+    publishNext(spark, root, v, cas) { next =>
+      val codesNext = next("codes")
+      graft.queries.EmbQueries.readSegments(spark, merge.mkString(","))
+        .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+      (centPath, (kept :+ codesNext).mkString(","))
+    }
     true
   }
 
@@ -2050,27 +1453,23 @@ object AnnServing {
       checkpoint: String,
       k: Int = 5,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val s = batch.sparkSession
-        val (ver, centPath, codesPath) =
-          graft.queries.EmbQueries.readManifest(s, manifestRoot)
-        scoreBatchBudgetAwareAt(s, centPath, codesPath,
-          s"$manifestRoot/codebook", vectorsPath, budgetsPath, batch, k,
-          indexVersion = Some(ver))
-          .withColumn("version", lit(ver))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outDir)
-        ()
-      }
-      .start()
+    startScoringSink(stream, outDir, checkpoint, trigger) { batch =>
+      val s = batch.sparkSession
+      val (ver, centPath, codesPath) =
+        graft.queries.EmbQueries.readManifest(s, manifestRoot)
+      scoreBatchBudgetAwareAt(s, centPath, codesPath,
+        s"$manifestRoot/codebook", vectorsPath, budgetsPath, batch, k,
+        indexVersion = Some(ver))
+        .withColumn("version", lit(ver))
+    }
 
-  /** The VERSIONED self-healing sink — [[startSelfHealingSink]]'s
-    * chain (upsert, rebalance if skewed, retrain epoch if due) routed
-    * through the blue/green manifest, plus retention GC: each
+  /** The self-healing maintenance sink: each micro-batch of arriving
+    * (vec_id, embedding[, label]) rows is upserted, then the index is
+    * rebalanced if the batch pushed a cell over the skew threshold,
+    * retrained by one epoch if a health rule trips, and its segment
+    * list compacted when due — serve / upsert / rebalance / retrain,
+    * unattended, every step a published version — plus retention GC:
+    * each
     * micro-batch leaves the index a chain of immutable versions with
     * the newest published, rollback-able to `keepVersions` deep, and
     * serving (startPublishedServingSink re-resolves the manifest per
@@ -2105,41 +1504,35 @@ object AnnServing {
       den: Int = graft.queries.EmbQueries.RebalanceDen,
       casPublish: Boolean = false,
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        val s = batch.sparkSession
-        val v0 = graft.queries.EmbQueries.readManifest(s, root)._1
-        // casPublish hardens the per-batch upsert against a zombie
-        // twin of this sink (a failed-over driver's old instance still
-        // holding the foreachBatch open) — its publish becomes a
-        // detected conflict/rebase instead of a silent lost update
-        applyUpsertBatchVersioned(s, root, batch, cas = casPublish)
-        val vUpsert = graft.queries.EmbQueries.readManifest(s, root)._1
-        applyRebalanceVersioned(s, root, vectorsPath, num, den,
-          cas = casPublish)
-        applyRetrainEpochIfDueVersioned(s, root, vectorsPath, num, den,
-          cas = casPublish)
-        applyCompactionIfDue(s, root, maxSegments, cas = casPublish)
-        val vEnd = graft.queries.EmbQueries.readManifest(s, root)._1
-        val consolidated = vEnd > vUpsert
-        def due(path: String): Boolean = {
-          if (vEnd == v0) return false          // nothing moved
-          if (consolidated) return true         // epoch-class advance
-          // upsert-only advance: refresh once enough versions lag the
-          // newest derived table (derived-version bookkeeping IS the
-          // side table's own dir listing — restart-safe for free)
-          val derived = listSideTableVersions(s, path)
-          derived.isEmpty || vEnd - derived.max >= refreshEveryVersions
-        }
-        depthsPath.foreach(dp =>
-          if (due(dp)) deriveLabelDepths(s, root, vectorsPath, dp))
-        budgetsPath.foreach(bp =>
-          if (due(bp)) deriveLabelBudgets(s, root, vectorsPath, bp))
-        graft.queries.EmbQueries.gcVersions(s, root, keepVersions)
-        ()
+    foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
+      val s = batch.sparkSession
+      val v0 = graft.queries.EmbQueries.readManifest(s, root)._1
+      // casPublish hardens the per-batch ops against a zombie twin of
+      // this sink (a failed-over driver's old instance still holding
+      // the foreachBatch open) — its publish becomes a detected
+      // conflict/rebase instead of a silent lost update
+      applyUpsertBatchVersioned(s, root, batch, cas = casPublish)
+      val vUpsert = graft.queries.EmbQueries.readManifest(s, root)._1
+      applyRebalanceVersioned(s, root, vectorsPath, num, den,
+        cas = casPublish)
+      applyRetrainEpochIfDueVersioned(s, root, vectorsPath, num, den,
+        cas = casPublish)
+      applyCompactionIfDue(s, root, maxSegments, cas = casPublish)
+      val vEnd = graft.queries.EmbQueries.readManifest(s, root)._1
+      val consolidated = vEnd > vUpsert
+      def due(path: String): Boolean = {
+        if (vEnd == v0) return false          // nothing moved
+        if (consolidated) return true         // epoch-class advance
+        // upsert-only advance: refresh once enough versions lag the
+        // newest derived table (derived-version bookkeeping IS the
+        // side table's own dir listing — restart-safe for free)
+        val derived = listSideTableVersions(s, path)
+        derived.isEmpty || vEnd - derived.max >= refreshEveryVersions
       }
-      .start()
+      depthsPath.foreach(dp =>
+        if (due(dp)) deriveLabelDepths(s, root, vectorsPath, dp))
+      budgetsPath.foreach(bp =>
+        if (due(bp)) deriveLabelBudgets(s, root, vectorsPath, bp))
+      graft.queries.EmbQueries.gcVersions(s, root, keepVersions)
+    }
 }

@@ -8,20 +8,6 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.pipeline.NewsPipeline
 import graft.schema.NewsArticle
 
-/** Structured Streaming surface (SURVEY.md §2.1 S1/S6, §2.2 K1–K4,
-  * §2.7): file-directory NDJSON source → the shared NewsPipeline
-  * lineage → the reference's four concurrent sinks, 10 s processing-time
-  * trigger, checkpointed.
-  *
-  * Scale note: the reference starts four independent queries over one
-  * lineage, so the source is read 4× (streaming_pipeline.py:196–241).
-  * `startFanOutSink` is the idiomatic alternative — one query, one source
-  * read, all sink work inside a single foreachBatch (SURVEY.md §7.3.5).
-  *
-  * Every sink starter installs `LocalCheckpointFileManager` on the
-  * session first (unless it already names a manager), so sessions the
-  * engine did not build also commit local checkpoint files fork-free.
-  */
 /** row/state shapes for the hamming-tolerant streaming near-dup */
 private[streaming] case class FpBandRow(
     id: String, event_ts: java.sql.Timestamp, fp: Long, band: Int, key: Long)
@@ -105,6 +91,20 @@ private[streaming] class BandDedupProcessor(delayMs: Long)
   }
 }
 
+/** Structured Streaming surface (SURVEY.md §2.1 S1/S6, §2.2 K1–K4,
+  * §2.7): file-directory NDJSON source → the shared NewsPipeline
+  * lineage → the reference's four concurrent sinks, 10 s processing-time
+  * trigger, checkpointed.
+  *
+  * Scale note: the reference starts four independent queries over one
+  * lineage, so the source is read 4× (streaming_pipeline.py:196–241).
+  * `startFanOutSink` is the idiomatic alternative — one query, one source
+  * read, all sink work inside a single foreachBatch (SURVEY.md §7.3.5).
+  *
+  * Every sink starter installs `LocalCheckpointFileManager` on the
+  * session first (unless it already names a manager), so sessions the
+  * engine did not build also commit local checkpoint files fork-free.
+  */
 object NewsStream {
 
   /** S1: watched-directory NDJSON source with explicit schema. */

@@ -9,9 +9,12 @@ import org.scalatest.funsuite.AnyFunSuite
   * applyUpsertBatchVersioned / applyRebalanceVersioned /
   * applyRetrainEpochIfDueVersioned routed through the blue/green
   * manifest):
-  *   1. TWIN EQUALITY — the versioned chain's final published view is
-  *      row-identical (codes AND centroids) to the in-place chain
-  *      applied to a twin index, for the same skew workload;
+  *   1. TWIN EQUALITY — on matched inputs (a v1 root of the as-built
+  *      index) the versioned rebalance and epoch publish views
+  *      row-identical (codes AND centroids) to the oracle-checked batch
+  *      emb_ivfpq_rebalance / emb_ivfpq_retrain artifacts; on the skew
+  *      workload, which has no batch twin, the split seeds, moves and
+  *      snap6/mean6 centroids are recomputed from raw artifacts;
   *   2. IMMUTABILITY — publishing later versions moves no bytes of
   *      earlier versions' artifact dirs (EmbPublishSpec's pin, here
   *      across maintenance ops);
@@ -106,11 +109,6 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$vroot/codebook")
     queries.EmbQueries.publishVersion(spark, vroot, 1,
       s"$vroot/centroids_v1", s"$vroot/codes_v1")
-    // in-place twin
-    val twin = tmp("ann_ver_twin")
-    full.write.partitionBy("cell").parquet(s"$twin/codes")
-    spark.read.parquet(s"$idx/centroids").write.parquet(s"$twin/centroids")
-    spark.read.parquet(s"$idx/codebook").write.parquet(s"$twin/codebook")
 
     // anchor query batch: three real vectors
     val anchors = emb.filter(col("vec_id").isin(1L, 2L, 3L))
@@ -157,9 +155,8 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     // redelivered batch appends nothing and publishes nothing.
     // Rebalance/epoch replays are converging maintenance decisions,
     // not no-ops (a post-epoch state can legitimately still trip the
-    // skew rule) — so they are NOT re-run here, keeping the versioned
-    // and in-place chains on identical one-pass histories for the
-    // twin-equality pin below.
+    // skew rule) — so they are NOT re-run here, keeping the chain on
+    // the one-pass history the recomputation below replays.
     assert(graft.streaming.AnnServing
       .applyUpsertBatchVersioned(spark, vroot, batch) == 0L)
     assert(graft.streaming.AnnServing
@@ -169,22 +166,127 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     assert(queries.EmbQueries.readManifest(spark, vroot)._1 == 4,
       "a replayed no-op published a version")
 
-    // 6) TWIN EQUALITY vs the in-place chain
-    graft.streaming.AnnServing.applyUpsertBatch(
-      spark, twin, batch, fullDedup = true)
-    graft.streaming.AnnServing.applyRebalance(spark, twin, augPath)
-    val (ranT, _) = graft.streaming.AnnServing
-      .applyRetrainEpochIfDue(spark, twin, augPath)
-    assert(ranT)
+    // 6a) TWIN EQUALITY vs the oracle-checked batch artifacts, on
+    // matched inputs: a v1 root of the as-built index, rebalanced
+    // against the corpus store, publishes exactly emb_ivfpq_rebalance's
+    // codes_reb / centroids_reb; the epoch over that (its skew rule
+    // forced to trip with num/den = 0/1, as the batch chain always
+    // runs it) publishes exactly emb_ivfpq_retrain's codes_rt /
+    // centroids_rt
+    Registry.byName("emb_ivfpq_retrain").build(spark, dir).collect()
+    val broot = tmp("ann_ver_batch")
+    full.write.partitionBy("cell").parquet(s"$broot/codes_v1")
+    spark.read.parquet(s"$idx/centroids")
+      .write.parquet(s"$broot/centroids_v1")
+    spark.read.parquet(s"$idx/codebook").write.parquet(s"$broot/codebook")
+    queries.EmbQueries.publishVersion(spark, broot, 1,
+      s"$broot/centroids_v1", s"$broot/codes_v1")
+    def assertPublishes(root: String, codesDir: String, centDir: String)
+        : Unit = {
+      val (_, c, k) = queries.EmbQueries.readManifest(spark, root)
+      val (pk, bk) = (codesKey(queries.EmbQueries.readSegments(spark, k)),
+        codesKey(spark.read.parquet(codesDir)))
+      assert(pk.exceptAll(bk).isEmpty && bk.exceptAll(pk).isEmpty,
+        s"published codes != $codesDir")
+      val (pc, bc) = (centKey(spark.read.parquet(c)),
+        centKey(spark.read.parquet(centDir)))
+      assert(pc.exceptAll(bc).isEmpty && bc.exceptAll(pc).isEmpty,
+        s"published centroids != $centDir")
+    }
+    assert(graft.streaming.AnnServing.applyRebalanceVersioned(
+      spark, broot, s"$dir/embeddings.parquet") > 0)
+    assertPublishes(broot, s"$idx/codes_reb", s"$idx/centroids_reb")
+    assert(graft.streaming.AnnServing.applyRetrainEpochIfDueVersioned(
+      spark, broot, s"$dir/embeddings.parquet", num = 0, den = 1)._1)
+    assertPublishes(broot, s"$idx/codes_rt", s"$idx/centroids_rt")
+
+    // 6b) the skew chain has no batch twin (its clones are not in the
+    // corpus), so its rebalance (v2 -> v3) and epoch (v3 -> v4) are
+    // recomputed here from the versions' raw artifacts
+    def viewAt(v: Int) = {
+      val (c, k) = queries.EmbQueries.readManifestAt(spark, vroot, v)
+      (queries.EmbQueries.readSegments(spark, k), spark.read.parquet(c))
+    }
+    val (codes2, cent2) = viewAt(2)
+    val (codes3, cent3) = viewAt(3)
+    val (codes4, cent4) = viewAt(4)
+    val mvecs = spark.read.parquet(augPath)
+      .select(col("vec_id"),
+        col("embedding").cast("array<float>").as("mvec"))
+    // both ops only move rows between cells: payloads never change
+    val payload = (d: org.apache.spark.sql.DataFrame) =>
+      codesKey(d).drop("cell")
+    for (d <- Seq(codes3, codes4))
+      assert(payload(d).exceptAll(payload(codes2)).isEmpty &&
+        payload(codes2).exceptAll(payload(d)).isEmpty)
+    // overgrown v2 cells by the integer fair-share rule; new ids
+    // follow the max label in overgrown-cell order
+    val sz2 = codes2.groupBy("cell").count().collect()
+      .map(r => r.getInt(0) -> r.getLong(1)).toMap
+    val og = sz2.collect { case (c, n) if
+        queries.EmbQueries.RebalanceDen * n * sz2.size >
+          queries.EmbQueries.RebalanceNum * sz2.values.sum => c }
+      .toSeq.sorted
+    assert(og.nonEmpty, "skew workload left no overgrown cell")
+    val maxLabel2 = cent2.agg(max(col("c_label"))).collect()(0).getInt(0)
+    val newIdOf = og.zipWithIndex
+      .map { case (c, i) => c -> (maxLabel2 + i + 1) }.toMap
+    // seed A = smallest vectored id of the cell, seed B = farthest
+    // from A (NULLS LAST, smallest-id tie); a row moves to the new id
+    // iff it is STRICTLY closer to B
+    val mem = codes2.filter(col("cell").isin(og.map(Int.box): _*))
+      .select("vec_id", "cell").join(mvecs, Seq("vec_id"), "left")
+    val seedA = mem.filter(col("mvec").isNotNull)
+      .groupBy("cell").agg(min(col("vec_id")).as("a_id"))
+      .join(mvecs.select(col("vec_id").as("a_id"), col("mvec").as("av")),
+        "a_id")
+    val distA = mem.join(seedA, Seq("cell"), "left")
+      .withColumn("da", graft.functions.VecL2Sq.column(col("mvec"),
+        col("av")))
+    val seedB = distA.withColumn("r", row_number().over(
+        org.apache.spark.sql.expressions.Window.partitionBy("cell")
+          .orderBy(col("da").desc_nulls_last, col("vec_id"))))
+      .filter(col("r") === 1).select(col("cell"), col("mvec").as("bv"))
+    val split = distA.join(seedB, "cell")
+      .select(col("vec_id"), when(
+        graft.functions.VecL2Sq.column(col("mvec"), col("bv")) <
+          col("da"), element_at(typedLit(newIdOf), col("cell")))
+        .otherwise(col("cell")).as("cell"))
+    val expect3 = codes2.filter(!col("cell").isin(og.map(Int.box): _*))
+      .select("vec_id", "cell").unionByName(split)
+    val got3 = codes3.select("vec_id", "cell")
+    assert(expect3.exceptAll(got3).isEmpty && got3.exceptAll(expect3).isEmpty,
+      "rebalance moves differ from the recomputed seeds")
+    // v3 centroids: snap6/mean6 of the split cells' v3 memberships,
+    // every other cell's v2 centroid carried unchanged
+    def means(codes: org.apache.spark.sql.DataFrame) = codes
+      .select("vec_id", "cell").join(mvecs, "vec_id")
+      .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
+      .withColumn("vi", queries.EmbQueries.snap6(col("v")))
+      .groupBy("cell", "dim")
+      .agg(expr(queries.EmbQueries.mean6Expr("vi")).as("cv"))
+      .groupBy("cell")
+      .agg(transform(
+        array_sort(collect_list(struct(col("dim"), col("cv")))),
+        x => x.getField("cv")).as("cvec"))
+      .select(col("cell").as("c_label"), col("cvec"))
+    val splitCells = (og ++ newIdOf.values).map(Int.box)
+    val expectCent3 = centKey(means(codes3)
+      .filter(col("c_label").isin(splitCells: _*))
+      .unionByName(cent2.filter(!col("c_label").isin(og.map(Int.box): _*))))
+    assert(expectCent3.exceptAll(centKey(cent3)).isEmpty &&
+      centKey(cent3).exceptAll(expectCent3).isEmpty,
+      "split centroids differ from the recomputed means")
+    // v4 centroids: the epoch's M-step — means of the v3 memberships,
+    // for the cells still live in v4 (step 7 then checks the E-step)
+    val expectCent4 = centKey(means(codes3).join(
+      codes4.select(col("cell").as("c_label")).distinct(), "c_label"))
+    assert(expectCent4.exceptAll(centKey(cent4)).isEmpty &&
+      centKey(cent4).exceptAll(expectCent4).isEmpty,
+      "epoch centroids differ from the recomputed M-step")
     val (_, cPub, kPub) = queries.EmbQueries.readManifest(spark, vroot)
     val vCodes = queries.EmbQueries.readSegments(spark, kPub)
-    val tCodes = spark.read.parquet(s"$twin/codes")
-    assert(codesKey(vCodes).exceptAll(codesKey(tCodes)).isEmpty)
-    assert(codesKey(tCodes).exceptAll(codesKey(vCodes)).isEmpty)
     val vCent = spark.read.parquet(cPub)
-    val tCent = spark.read.parquet(s"$twin/centroids")
-    assert(centKey(vCent).exceptAll(centKey(tCent)).isEmpty)
-    assert(centKey(tCent).exceptAll(centKey(vCent)).isEmpty)
 
     // 7) INDEPENDENT POST-CHECK: zero vectored rows outside their
     // nearest published centroid (recomputed from raw artifacts)

@@ -8,7 +8,9 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree guards: every entry point builds its session from
-  * graft.Session, and the retired bench env knobs stay retired.
+  * graft.Session, the retired bench env knobs stay retired, and the ANN
+  * index keeps its one writer (the versioned ops behind one sink
+  * builder).
   */
 class SourceGuardSpec extends AnyFunSuite {
   private lazy val src: File =
@@ -45,5 +47,31 @@ class SourceGuardSpec extends AnyFunSuite {
     for (knob <- Seq("SPARK_GRAFT_PROFILE", "SPARK_GRAFT_CODEGEN_CACHE"))
       assert(filesContaining(src, knob)
         .filterNot(_.endsWith("SourceGuardSpec.scala")).isEmpty, knob)
+  }
+
+  test("AnnServing starts one writeStream and never rewrites what it reads") {
+    val code = Files.readAllLines(
+      new File(src, "main/scala/graft/streaming/AnnServing.scala").toPath)
+      .asScala.filterNot(isComment)
+    for (w <- Seq("refreshByPath", "truncateLineage", "partitionOverwriteMode"))
+      assert(!code.exists(_.contains(w)), w)
+    assert(code.map(".writeStream".r.findAllIn(_).size).sum == 1)
+  }
+
+  test("the retired in-place ANN ops and per-scorer sinks are named nowhere under src/") {
+    val retired = Seq("applyUpsertBatch", "applyDeleteBatch", "applyRebalance",
+      "applyRetrainEpochIfDue", "fullDedup", "startMaintenanceSink",
+      "startDeleteSink", "startAutoMaintainSink", "startSelfHealingSink",
+      "scoreBatchLabelAware", "startLabelAwareServingSink", "startServingSink",
+      "startBqServingSink", "startSqServingSink", "startAdaptiveServingSink",
+      "viewCodes")
+    val word = ("\\b(" + retired.mkString("|") + ")\\b").r
+    val hits = Files.walk(src.toPath).iterator.asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !p.toString.endsWith("SourceGuardSpec.scala"))
+      .flatMap(p => Files.readAllLines(p).asScala
+        .flatMap(word.findAllIn(_)).map(src.toPath.relativize(p) + ": " + _))
+      .toSeq
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

@@ -17,6 +17,43 @@ class StreamingSpec extends AnyFunSuite {
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
+  /** A versioned ANN root at `root` whose published v1 is `codes` over
+    * the as-built index's centroids and codebook.
+    */
+  private def publishedV1(root: String, idx: String,
+      codes: org.apache.spark.sql.DataFrame): String = {
+    codes.write.partitionBy("cell").parquet(s"$root/codes_v1")
+    spark.read.parquet(s"$idx/centroids").write.parquet(s"$root/centroids_v1")
+    spark.read.parquet(s"$idx/codebook").write.parquet(s"$root/codebook")
+    queries.EmbQueries.publishVersion(spark, root, 1,
+      s"$root/centroids_v1", s"$root/codes_v1")
+    root
+  }
+
+  /** The code rows / centroids the root's manifest publishes. */
+  private def publishedCodes(root: String) = queries.EmbQueries
+    .readSegments(spark, queries.EmbQueries.readManifest(spark, root)._3)
+  private def publishedCent(root: String) = spark.read.parquet(
+    queries.EmbQueries.readManifest(spark, root)._2)
+
+  /** Upsert / delete micro-batches through the ANN sink builder. */
+  private def upsertSink(stream: org.apache.spark.sql.DataFrame,
+      root: String, ckpt: String) =
+    graft.streaming.AnnServing.foreachBatchSink(stream, ckpt,
+      Trigger.AvailableNow()) { (b, _) =>
+      graft.streaming.AnnServing.applyUpsertBatchVersioned(
+        b.sparkSession, root, b)
+      ()
+    }
+  private def deleteSink(stream: org.apache.spark.sql.DataFrame,
+      root: String, ckpt: String) =
+    graft.streaming.AnnServing.foreachBatchSink(stream, ckpt,
+      Trigger.AvailableNow()) { (b, _) =>
+      graft.streaming.AnnServing.applyDeleteBatchVersioned(
+        b.sparkSession, root, b)
+      ()
+    }
+
   test("file source -> pipeline -> memory sink, incremental batches") {
     val in = tmp("stream_in")
     val ckpt = tmp("stream_ckpt")
@@ -953,11 +990,14 @@ class StreamingSpec extends AnyFunSuite {
       StructField("qid", LongType),
       StructField("qvec", ArrayType(DoubleType))))
     val out = tmp("ann_out")
-    val q = graft.streaming.AnnServing.startServingSink(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(in),
-      idx, vectorsPath, out, tmp("ann_ckpt"))
-    q.awaitTermination(120000)
+    def serve(out: String, ckpt: String) =
+      graft.streaming.AnnServing.startScoringSink(
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .json(in), out, ckpt) { b =>
+        graft.streaming.AnnServing.scoreBatch(b.sparkSession, idx,
+          b.sparkSession.read.parquet(vectorsPath), b)
+      }
+    serve(out, tmp("ann_ckpt")).awaitTermination(120000)
 
     val res = spark.read.parquet(out)
     // two micro-batches, each with a full top-5
@@ -983,11 +1023,7 @@ class StreamingSpec extends AnyFunSuite {
     // replay determinism: a fresh stream over the same input (new
     // checkpoint, new sink) reproduces identical rows
     val out2 = tmp("ann_out2")
-    val q2 = graft.streaming.AnnServing.startServingSink(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(in),
-      idx, vectorsPath, out2, tmp("ann_ckpt2"))
-    q2.awaitTermination(120000)
+    serve(out2, tmp("ann_ckpt2")).awaitTermination(120000)
     val a = res.orderBy("qid", "rank")
       .collect().map(_.toString).toSeq
     val b = spark.read.parquet(out2).orderBy("qid", "rank")
@@ -1058,11 +1094,12 @@ class StreamingSpec extends AnyFunSuite {
       StructField("qvec", ArrayType(DoubleType))))
     val out = tmp("adapt_out")
     val lbl = queries.EmbQueries.FilteredLabel
-    val q = graft.streaming.AnnServing.startAdaptiveServingSink(
+    val q = graft.streaming.AnnServing.startScoringSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(in),
-      idx, vectorsPath, out, tmp("adapt_ckpt"),
-      col("label") === lbl)
+        .json(in), out, tmp("adapt_ckpt")) { b =>
+      graft.streaming.AnnServing.scoreBatchAdaptive(b.sparkSession, idx,
+        b.sparkSession.read.parquet(vectorsPath), b, col("label") === lbl)
+    }
     assert(q.awaitTermination(120000))
     val res = spark.read.parquet(out)
     // both files drained as separate micro-batches, both arms labeled
@@ -1136,10 +1173,12 @@ class StreamingSpec extends AnyFunSuite {
       StructField("qid", LongType),
       StructField("qvec", ArrayType(DoubleType))))
     val out = tmp("bq_out")
-    val q = graft.streaming.AnnServing.startBqServingSink(
+    val q = graft.streaming.AnnServing.startScoringSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(in),
-      idx, vectorsPath, out, tmp("bq_ckpt"))
+        .json(in), out, tmp("bq_ckpt")) { b =>
+      graft.streaming.AnnServing.scoreBatchBq(b.sparkSession, idx,
+        b.sparkSession.read.parquet(vectorsPath), b)
+    }
     assert(q.awaitTermination(120000))
 
     val res = spark.read.parquet(out)
@@ -1181,14 +1220,10 @@ class StreamingSpec extends AnyFunSuite {
     val emb = spark.read.parquet(vectorsPath)
     val batchPred = col("vec_id") % 10 === 3 && col("vec_id") =!= 0
 
-    // stage a WORKING index with the batch slice absent (centroids and
+    // a published v1 root with the batch slice absent (centroids and
     // codebook copied — maintenance reuses them, never retrains)
-    val work = tmp("ann_maint")
     val full = spark.read.parquet(s"$idx/codes")
-    full.filter(!batchPred)
-      .write.partitionBy("cell").parquet(s"$work/codes")
-    spark.read.parquet(s"$idx/centroids").write.parquet(s"$work/centroids")
-    spark.read.parquet(s"$idx/codebook").write.parquet(s"$work/codebook")
+    val work = publishedV1(tmp("ann_maint"), idx, full.filter(!batchPred))
 
     // the missing slice arrives as TWO micro-batches (one file each)
     val in = tmp("ann_maint_in")
@@ -1211,16 +1246,18 @@ class StreamingSpec extends AnyFunSuite {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(DoubleType)),
       StructField("label", IntegerType)))
-    val q = graft.streaming.AnnServing.startMaintenanceSink(
+    val q = upsertSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .json(in),
       work, tmp("ann_maint_ckpt"))
-    q.awaitTermination(120000)
+    assert(q.awaitTermination(120000))
+    // one published upsert version per micro-batch
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3)
 
     // 1. the maintained index is row-identical to the batch-built full
     // served index — same cells, same codes, same inlined attribute,
     // nothing lost or invented
-    val maintained = spark.read.parquet(s"$work/codes")
+    val maintained = publishedCodes(work)
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("vec_id"), col("cell"), col("label"),
       array_join(transform(col("codes"), c => c.cast("string")), ",")
@@ -1232,20 +1269,28 @@ class StreamingSpec extends AnyFunSuite {
     // from the batch-built index
     val probe = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    def answer(ix: String) = graft.streaming.AnnServing
-      .scoreBatch(spark, ix, spark.read.parquet(vectorsPath), probe)
+    val (_, centPath, codesPath) =
+      queries.EmbQueries.readManifest(spark, work)
+    val answerWork = graft.streaming.AnnServing
+      .scoreBatchAt(spark, centPath, codesPath, s"$work/codebook",
+        spark.read.parquet(vectorsPath), probe)
       .collect().map(_.toString).toSeq
-    assert(answer(work) == answer(idx))
+    val answerIdx = graft.streaming.AnnServing
+      .scoreBatch(spark, idx, spark.read.parquet(vectorsPath), probe)
+      .collect().map(_.toString).toSeq
+    assert(answerWork == answerIdx)
 
     // 3. IDEMPOTENCE: replaying an already-applied batch (the
-    // foreachBatch failure-replay scenario) appends nothing — the
-    // anti-join against the landed cells' existing ids rejects every
-    // re-arriving row, and the index is unchanged
+    // foreachBatch failure-replay scenario) appends nothing and
+    // publishes nothing — the anti-join against the published view's
+    // ids rejects every re-arriving row
     val replay = emb.filter(batchPred).select("vec_id", "embedding")
     val appended = graft.streaming.AnnServing
-      .applyUpsertBatch(spark, work, replay)
+      .applyUpsertBatchVersioned(spark, work, replay)
     assert(appended == 0L, s"replay appended $appended rows")
-    val afterReplay = spark.read.parquet(s"$work/codes")
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3,
+      "a replayed batch published a version")
+    val afterReplay = publishedCodes(work)
     assert(key(afterReplay).exceptAll(key(full)).isEmpty)
     assert(key(full).exceptAll(key(afterReplay)).isEmpty)
   }
@@ -1348,10 +1393,11 @@ class StreamingSpec extends AnyFunSuite {
       StructField("qid", LongType),
       StructField("qvec", ArrayType(DoubleType))))
     val out = tmp("sq_out")
-    val q = graft.streaming.AnnServing.startSqServingSink(
+    val q = graft.streaming.AnnServing.startScoringSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(in),
-      idx, out, tmp("sq_ckpt"))
+        .json(in), out, tmp("sq_ckpt")) { b =>
+      graft.streaming.AnnServing.scoreBatchSq(b.sparkSession, idx, b)
+    }
     assert(q.awaitTermination(120000))
 
     val res = spark.read.parquet(out)
@@ -1607,7 +1653,7 @@ class StreamingSpec extends AnyFunSuite {
     val rowsB = newRows(halfB, 2000000L)
 
     // the id-keyed vector store must hold the arriving vectors too —
-    // the auto-maintain contract (rebalance fetches true vectors)
+    // the maintenance contract (rebalance fetches true vectors)
     val aug = tmp("ann_auto_vecs")
     import spark.implicits._
     val augDf = emb.select("vec_id", "embedding", "label").unionByName(
@@ -1618,14 +1664,9 @@ class StreamingSpec extends AnyFunSuite {
     augDf.write.parquet(s"$aug/embeddings.parquet")
     val augPath = s"$aug/embeddings.parquet"
 
-    // working index + a twin for the direct-call equality pin
-    val work = tmp("ann_auto")
-    val twin = tmp("ann_auto_twin")
-    Seq(work, twin).foreach { r =>
-      full.write.partitionBy("cell").parquet(s"$r/codes")
-      spark.read.parquet(s"$idx/centroids").write.parquet(s"$r/centroids")
-      spark.read.parquet(s"$idx/codebook").write.parquet(s"$r/codebook")
-    }
+    // working root + a twin for the direct-call equality pin
+    val work = publishedV1(tmp("ann_auto"), idx, full)
+    val twin = publishedV1(tmp("ann_auto_twin"), idx, full)
 
     // ONE micro-batch through the sink (order-deterministic) ...
     val in = tmp("ann_auto_in")
@@ -1640,37 +1681,42 @@ class StreamingSpec extends AnyFunSuite {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(DoubleType)),
       StructField("label", IntegerType)))
-    val q = graft.streaming.AnnServing.startAutoMaintainSink(
+    val q = graft.streaming.AnnServing.startVersionedSelfHealingSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
         .json(in),
       work, augPath, tmp("ann_auto_ckpt"))
     assert(q.awaitTermination(120000))
 
-    // ... equals the same upsert+rebalance called directly on the twin
+    // ... equals the same maintenance chain called directly on the twin
     def batchDf(rows: Array[(Long, Seq[Float], Int)]) =
       spark.createDataset(rows.toSeq)
         .toDF("vec_id", "embedding", "label")
-    graft.streaming.AnnServing.applyUpsertBatch(
-      spark, twin, batchDf(rowsA), fullDedup = true)
-    graft.streaming.AnnServing.applyRebalance(spark, twin, augPath)
+    graft.streaming.AnnServing.applyUpsertBatchVersioned(
+      spark, twin, batchDf(rowsA))
+    graft.streaming.AnnServing.applyRebalanceVersioned(spark, twin, augPath)
+    graft.streaming.AnnServing
+      .applyRetrainEpochIfDueVersioned(spark, twin, augPath)
+    assert(queries.EmbQueries.readManifest(spark, work)._1 ==
+      queries.EmbQueries.readManifest(spark, twin)._1)
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("vec_id"), col("cell"), col("label"),
       array_join(transform(col("codes"), c => c.cast("string")), ",")
         .as("cs"))
-    def codesOf(r: String) = spark.read.parquet(s"$r/codes")
-    assert(key(codesOf(work)).exceptAll(key(codesOf(twin))).isEmpty)
-    assert(key(codesOf(twin)).exceptAll(key(codesOf(work))).isEmpty)
+    assert(key(publishedCodes(work))
+      .exceptAll(key(publishedCodes(twin))).isEmpty)
+    assert(key(publishedCodes(twin))
+      .exceptAll(key(publishedCodes(work))).isEmpty)
     val ckey = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("c_label"),
       array_join(transform(col("cvec"), c => c.cast("string")), ","))
-    val centW = spark.read.parquet(s"$work/centroids")
-    val centT = spark.read.parquet(s"$twin/centroids")
-    assert(ckey(centW).exceptAll(ckey(centT)).isEmpty)
-    assert(ckey(centT).exceptAll(ckey(centW)).isEmpty)
+    assert(ckey(publishedCent(work)).exceptAll(ckey(publishedCent(twin)))
+      .isEmpty)
+    assert(ckey(publishedCent(twin)).exceptAll(ckey(publishedCent(work)))
+      .isEmpty)
 
     // the skewed cell split: a post-maxLabel cell exists and is
     // non-empty, and every row that moved kept its PQ codes
-    val afterA = codesOf(work)
+    val afterA = publishedCodes(work)
     assert(afterA.filter(col("cell") > maxLabel0).count() > 0,
       "no split happened — workload did not skew the index")
     val codeKey = (d: org.apache.spark.sql.DataFrame) => d.select(
@@ -1683,20 +1729,23 @@ class StreamingSpec extends AnyFunSuite {
 
     // second round DIRECT: upsert against the POST-SPLIT centroids,
     // then rebalance again
-    graft.streaming.AnnServing.applyUpsertBatch(
-      spark, work, batchDf(rowsB), fullDedup = true)
-    graft.streaming.AnnServing.applyRebalance(spark, work, augPath)
+    graft.streaming.AnnServing.applyUpsertBatchVersioned(
+      spark, work, batchDf(rowsB))
+    graft.streaming.AnnServing.applyRebalanceVersioned(spark, work, augPath)
 
-    // replay the full workload: fullDedup rejects every re-arriving id
-    // even though centroids changed since they were first applied
-    val appended = graft.streaming.AnnServing.applyUpsertBatch(
-      spark, work, batchDf(rowsA ++ rowsB), fullDedup = true)
+    // replay the full workload: the full-view dedup rejects every
+    // re-arriving id even though centroids changed since they were
+    // first applied, and nothing is published
+    val vBefore = queries.EmbQueries.readManifest(spark, work)._1
+    val appended = graft.streaming.AnnServing.applyUpsertBatchVersioned(
+      spark, work, batchDf(rowsA ++ rowsB))
     assert(appended == 0L, s"replay appended $appended rows")
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == vBefore)
 
     // integrity: every base id + every new id present exactly once,
     // and each new id carries its source member's exact codes (same
     // vector, same codebook -> same deterministic encoding)
-    val fin = codesOf(work)
+    val fin = publishedCodes(work)
     assert(fin.count() == full.count() + rowsA.length + rowsB.length)
     assert(fin.groupBy("vec_id").count().filter(col("count") > 1)
       .count() == 0)
@@ -1710,7 +1759,7 @@ class StreamingSpec extends AnyFunSuite {
       "an upserted copy encoded differently from its source vector")
   }
 
-  test("self-healing sink retrains in place when the health rules trip") {
+  test("self-healing sink publishes the epoch when health rules trip") {
     import org.apache.spark.sql.types._
     val dir = "/root/testdata/sf0.001"
     val idx = queries.EmbQueries.ensureServedIndex(spark, dir)
@@ -1740,13 +1789,8 @@ class StreamingSpec extends AnyFunSuite {
       .write.parquet(s"$aug/embeddings.parquet")
     val augPath = s"$aug/embeddings.parquet"
 
-    val work = tmp("ann_heal")
-    val twin = tmp("ann_heal_twin")
-    Seq(work, twin).foreach { r =>
-      full.write.partitionBy("cell").parquet(s"$r/codes")
-      spark.read.parquet(s"$idx/centroids").write.parquet(s"$r/centroids")
-      spark.read.parquet(s"$idx/codebook").write.parquet(s"$r/codebook")
-    }
+    val work = publishedV1(tmp("ann_heal"), idx, full)
+    val twin = publishedV1(tmp("ann_heal_twin"), idx, full)
 
     val in = tmp("ann_heal_in")
     val sb = new StringBuilder
@@ -1760,7 +1804,7 @@ class StreamingSpec extends AnyFunSuite {
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(DoubleType)),
       StructField("label", IntegerType)))
-    val q = graft.streaming.AnnServing.startSelfHealingSink(
+    val q = graft.streaming.AnnServing.startVersionedSelfHealingSink(
       spark.readStream.schema(schema).json(in),
       work, augPath, tmp("ann_heal_ckpt"))
     assert(q.awaitTermination(120000))
@@ -1768,11 +1812,11 @@ class StreamingSpec extends AnyFunSuite {
     // twin: the same chain called directly — the trigger must fire
     val batch = spark.createDataset(rows.toSeq)
       .toDF("vec_id", "embedding", "label")
-    graft.streaming.AnnServing.applyUpsertBatch(
-      spark, twin, batch, fullDedup = true)
-    graft.streaming.AnnServing.applyRebalance(spark, twin, augPath)
+    graft.streaming.AnnServing.applyUpsertBatchVersioned(spark, twin, batch)
+    val nUpserted = publishedCodes(twin).count()
+    graft.streaming.AnnServing.applyRebalanceVersioned(spark, twin, augPath)
     val (ran, misBefore) = graft.streaming.AnnServing
-      .applyRetrainEpochIfDue(spark, twin, augPath)
+      .applyRetrainEpochIfDueVersioned(spark, twin, augPath)
     assert(ran, "health rules did not trip on the skew workload")
 
     // sink state == direct-call state (codes AND centroids)
@@ -1780,20 +1824,21 @@ class StreamingSpec extends AnyFunSuite {
       col("vec_id"), col("cell"), col("label"),
       array_join(transform(col("codes"), c => c.cast("string")), ",")
         .as("cs"))
-    def codesOf(r: String) = spark.read.parquet(s"$r/codes")
-    assert(key(codesOf(work)).exceptAll(key(codesOf(twin))).isEmpty)
-    assert(key(codesOf(twin)).exceptAll(key(codesOf(work))).isEmpty)
+    assert(key(publishedCodes(work))
+      .exceptAll(key(publishedCodes(twin))).isEmpty)
+    assert(key(publishedCodes(twin))
+      .exceptAll(key(publishedCodes(work))).isEmpty)
     val ckey = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("c_label"),
       array_join(transform(col("cvec"), c => c.cast("string")), ","))
-    assert(ckey(spark.read.parquet(s"$work/centroids"))
-      .exceptAll(ckey(spark.read.parquet(s"$twin/centroids"))).isEmpty)
-    assert(ckey(spark.read.parquet(s"$twin/centroids"))
-      .exceptAll(ckey(spark.read.parquet(s"$work/centroids"))).isEmpty)
+    assert(ckey(publishedCent(work)).exceptAll(ckey(publishedCent(twin)))
+      .isEmpty)
+    assert(ckey(publishedCent(twin)).exceptAll(ckey(publishedCent(work)))
+      .isEmpty)
 
     // the epoch CURED the drift: zero vectored rows sit outside their
     // nearest post-epoch centroid (recomputed independently here)
-    val cent = spark.read.parquet(s"$work/centroids")
+    val cent = publishedCent(work)
       .select(col("c_label").as("clab"), col("cvec"))
       .groupBy("clab").agg(first(col("cvec")).as("cvec"))
     val vecs = spark.read.parquet(augPath)
@@ -1802,7 +1847,7 @@ class StreamingSpec extends AnyFunSuite {
     val wN = org.apache.spark.sql.expressions.Window
       .partitionBy(col("vec_id"))
       .orderBy(col("d2").asc_nulls_last, col("clab"))
-    val misAfter = codesOf(work).select("vec_id", "cell")
+    val misAfter = publishedCodes(work).select("vec_id", "cell")
       .join(vecs, Seq("vec_id"), "left")
       .crossJoin(broadcast(cent))
       .withColumn("d2",
@@ -1816,32 +1861,30 @@ class StreamingSpec extends AnyFunSuite {
 
     // payloads preserved: every (vec_id, codes, label) of the
     // post-upsert state survives the epoch (membership-only rewrite)
-    val pre = key(codesOf(twin))
-    assert(pre.count() == full.count() + rows.length)
+    assert(nUpserted == full.count() + rows.length)
+    assert(key(publishedCodes(work)).count() == nUpserted)
   }
 
   test("rebalance keeps index rows whose vectors are missing from the store") {
-    // the left-join contract: the in-place split rewrites an overgrown
-    // cell's partition with exactly the rows it computed — if the
-    // vector store lacks some indexed ids (store lag, partial restore),
-    // those rows must stay in place, not vanish from the rewrite
+    // the left-join contract: the split consolidates an overgrown
+    // cell's rows into the next version with exactly the rows it
+    // computed — if the vector store lacks some indexed ids (store lag,
+    // partial restore), those rows must stay in place, not vanish
     val dir = "/root/testdata/sf0.001"
     val idx = queries.EmbQueries.ensureServedIndex(spark, dir)
     val full = spark.read.parquet(s"$idx/codes")
-    val work = tmp("ann_gap")
-    full.write.partitionBy("cell").parquet(s"$work/codes")
-    spark.read.parquet(s"$idx/centroids").write.parquet(s"$work/centroids")
-    spark.read.parquet(s"$idx/codebook").write.parquet(s"$work/codebook")
+    val work = publishedV1(tmp("ann_gap"), idx, full)
     // a vector store MISSING every third id
     val gap = tmp("ann_gap_vecs")
     spark.read.parquet(s"$dir/embeddings.parquet")
       .filter(col("vec_id") % 3 =!= 0 || col("vec_id") === 0)
       .write.parquet(s"$gap/embeddings.parquet")
 
-    val moved = graft.streaming.AnnServing.applyRebalance(
+    val moved = graft.streaming.AnnServing.applyRebalanceVersioned(
       spark, work, s"$gap/embeddings.parquet")
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == 2)
 
-    val after = spark.read.parquet(s"$work/codes")
+    val after = publishedCodes(work)
     // nothing lost, nothing invented — only `cell` may differ
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("vec_id"), col("label"),
@@ -1861,34 +1904,39 @@ class StreamingSpec extends AnyFunSuite {
     assert(moved > 0, "no row moved — the gap store starved the split")
   }
 
-  test("streaming delete compacts the index partition-locally") {
+  test("streaming delete publishes a compacted version") {
     import org.apache.spark.sql.types._
     val dir = "/root/testdata/sf0.001"
     val idx = queries.EmbQueries.ensureServedIndex(spark, dir)
     val vectorsPath = s"$dir/embeddings.parquet"
     val tombPred = col("vec_id") % 10 === 7 && col("vec_id") =!= 0
 
-    // working copy of the FULL index + a batch-filtered reference twin
-    val work = tmp("ann_del")
-    val ref = tmp("ann_del_ref")
+    // published root of the FULL index + a batch-filtered reference
+    // index in the as-built layout
     val full = spark.read.parquet(s"$idx/codes")
-    full.write.partitionBy("cell").parquet(s"$work/codes")
+    val work = publishedV1(tmp("ann_del"), idx, full)
+    val ref = tmp("ann_del_ref")
     full.filter(!tombPred).write.partitionBy("cell")
       .parquet(s"$ref/codes")
-    Seq(work, ref).foreach { r =>
-      spark.read.parquet(s"$idx/centroids").write.parquet(s"$r/centroids")
-      spark.read.parquet(s"$idx/codebook").write.parquet(s"$r/codebook")
-    }
-    val filesBefore = {
-      val root = new java.io.File(s"$work/codes")
-      root.listFiles().filter(_.getName.startsWith("cell="))
-        .map(d => d.getName ->
-          d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
-            .toSet).toMap
-    }
+    spark.read.parquet(s"$idx/centroids").write.parquet(s"$ref/centroids")
+    spark.read.parquet(s"$idx/codebook").write.parquet(s"$ref/codebook")
 
-    // tombstones arrive as TWO micro-batches of {vec_id} rows
+    // a segment dir's parquet files with their sizes, and that of
+    // every segment dir the published version references
+    def parquetFiles(seg: String): Map[String, Long] = {
+      import scala.jdk.CollectionConverters._
+      Files.walk(java.nio.file.Paths.get(seg)).iterator.asScala
+        .filter(_.toString.endsWith(".parquet"))
+        .map(f => f.toString -> Files.size(f)).toMap
+    }
+    def segmentFiles(): Map[String, Map[String, Long]] =
+      queries.EmbQueries.readManifest(spark, work)._3.split(',').toSeq
+        .map(seg => seg -> parquetFiles(seg)).toMap
+
+    // tombstones arrive as TWO micro-batches of {vec_id} rows, the
+    // second after a restart of the same checkpointed sink
     val in = tmp("ann_del_in")
+    val ckpt = tmp("ann_del_ckpt")
     def dump(name: String, pred: org.apache.spark.sql.Column): Unit = {
       val sb = new StringBuilder
       spark.read.parquet(s"$dir/embeddings.parquet").filter(pred)
@@ -1897,18 +1945,21 @@ class StreamingSpec extends AnyFunSuite {
       Files.write(java.nio.file.Paths.get(in, name),
         sb.toString.getBytes("UTF-8"))
     }
-    dump("t0.json", col("vec_id") % 20 === 7 && col("vec_id") =!= 0)
-    dump("t1.json", col("vec_id") % 20 === 17)
-
     val schema = StructType(Seq(StructField("vec_id", LongType)))
-    val q = graft.streaming.AnnServing.startDeleteSink(
+    def drain(): Unit = assert(deleteSink(
       spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .json(in),
-      work, tmp("ann_del_ckpt"))
-    q.awaitTermination(120000)
+        .json(in), work, ckpt).awaitTermination(120000))
+    val filesV1 = segmentFiles()
+    dump("t0.json", col("vec_id") % 20 === 7 && col("vec_id") =!= 0)
+    drain()
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == 2)
+    val filesV2 = segmentFiles()
+    dump("t1.json", col("vec_id") % 20 === 17)
+    drain()
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3)
 
     // 1. row-identical to full-minus-tombstoned, no tombstone survives
-    val compacted = spark.read.parquet(s"$work/codes")
+    val compacted = publishedCodes(work)
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("vec_id"), col("cell"),
       array_join(transform(col("codes"), c => c.cast("string")), ",")
@@ -1917,21 +1968,15 @@ class StreamingSpec extends AnyFunSuite {
     assert(key(compacted).exceptAll(key(full.filter(!tombPred))).isEmpty)
     assert(compacted.filter(tombPred).count() == 0)
 
-    // 2. untouched cell dirs keep their exact pre-delete file set
-    val touched = full.filter(tombPred)
-      .select("cell").distinct().collect().map(_.get(0).toString).toSet
-    assert(touched.nonEmpty)
-    val filesAfter = {
-      val root = new java.io.File(s"$work/codes")
-      root.listFiles().filter(_.getName.startsWith("cell="))
-        .map(d => d.getName ->
-          d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
-            .toSet).toMap
-    }
-    filesBefore.foreach { case (cellDir, files) =>
-      if (!touched.contains(cellDir.stripPrefix("cell=")))
-        assert(filesAfter.get(cellDir).contains(files),
-          s"untouched $cellDir was rewritten")
+    // 2. the previous versions' segment dirs keep their file set:
+    // each delete wrote a fresh segment and published it, touching
+    // nothing an earlier version serves
+    for ((before, label) <- Seq(filesV1 -> "v1", filesV2 -> "v2")) {
+      assert(before.values.forall(_.nonEmpty), s"$label has no files")
+      before.foreach { case (seg, files) =>
+        assert(parquetFiles(seg) == files,
+          s"$label segment $seg was rewritten")
+      }
     }
 
     // 3. the compacted index serves the same answer as the reference
@@ -1939,11 +1984,15 @@ class StreamingSpec extends AnyFunSuite {
     val emb = spark.read.parquet(vectorsPath)
     val probe = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
-    def answer(ix: String) = graft.streaming.AnnServing
-      .scoreBatch(spark, ix, emb, probe)
+    val (_, centPath, codesPath) =
+      queries.EmbQueries.readManifest(spark, work)
+    val aw = graft.streaming.AnnServing
+      .scoreBatchAt(spark, centPath, codesPath, s"$work/codebook", emb,
+        probe)
       .collect()
-    val aw = answer(work)
-    assert(aw.map(_.toString).toSeq == answer(ref).map(_.toString).toSeq)
+    val ar = graft.streaming.AnnServing.scoreBatch(spark, ref, emb, probe)
+      .collect()
+    assert(aw.map(_.toString).toSeq == ar.map(_.toString).toSeq)
     assert(aw.forall(r => !(r.getAs[Long]("vec_id") % 10 == 7)))
   }
 
@@ -1955,15 +2004,12 @@ class StreamingSpec extends AnyFunSuite {
     val upPred = col("vec_id") % 10 === 3 && col("vec_id") =!= 0
     val delPred = col("vec_id") % 10 === 7 && col("vec_id") =!= 0
 
-    // working index starts WITHOUT the upsert slice; the stream first
-    // adds it back (maintenance), then tombstones the delete slice —
-    // the end state must equal full MINUS deleted, built through two
-    // different sinks over the same directory
-    val work = tmp("ann_life")
+    // the published root starts WITHOUT the upsert slice; the stream
+    // first adds it back (maintenance), then tombstones the delete
+    // slice — the end state must equal full MINUS deleted, built
+    // through two different sinks over the same root
     val full = spark.read.parquet(s"$idx/codes")
-    full.filter(!upPred).write.partitionBy("cell").parquet(s"$work/codes")
-    spark.read.parquet(s"$idx/centroids").write.parquet(s"$work/centroids")
-    spark.read.parquet(s"$idx/codebook").write.parquet(s"$work/codebook")
+    val work = publishedV1(tmp("ann_life"), idx, full.filter(!upPred))
 
     val upIn = tmp("ann_life_up")
     locally {
@@ -1981,10 +2027,8 @@ class StreamingSpec extends AnyFunSuite {
     val upSchema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(DoubleType))))
-    val q1 = graft.streaming.AnnServing.startMaintenanceSink(
-      spark.readStream.schema(upSchema).json(upIn),
-      work, tmp("ann_life_ck1"))
-    q1.awaitTermination(120000)
+    assert(upsertSink(spark.readStream.schema(upSchema).json(upIn),
+      work, tmp("ann_life_ck1")).awaitTermination(120000))
 
     val delIn = tmp("ann_life_del")
     locally {
@@ -1994,14 +2038,12 @@ class StreamingSpec extends AnyFunSuite {
       Files.write(java.nio.file.Paths.get(delIn, "t0.json"),
         sb.toString.getBytes("UTF-8"))
     }
-    val q2 = graft.streaming.AnnServing.startDeleteSink(
-      spark.readStream.schema(
+    assert(deleteSink(spark.readStream.schema(
         StructType(Seq(StructField("vec_id", LongType)))).json(delIn),
-      work, tmp("ann_life_ck2"))
-    q2.awaitTermination(120000)
+      work, tmp("ann_life_ck2")).awaitTermination(120000))
+    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3)
 
-    spark.catalog.refreshByPath(s"$work/codes")
-    val end = spark.read.parquet(s"$work/codes")
+    val end = publishedCodes(work)
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("vec_id"), col("cell"),
       array_join(transform(col("codes"), c => c.cast("string")), ",")
