@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -117,6 +117,23 @@ object AnnServingBench {
     if (error != "null") System.exit(1)
   }
 
+  /** Stage `fresh` as `nFiles` JSON part files; the staged count. The
+    * file source takes the oldest files first, and part files written in
+    * parallel tie or finish in a different order each run, so their
+    * modification times are set to follow the part index: the same
+    * vectors share a micro-batch, and so the drain does the same
+    * maintenance, on every run.
+    */
+  private def stageJson(fresh: DataFrame, inDir: java.io.File,
+      nFiles: Int): Long = {
+    fresh.repartition(nFiles).write.mode("overwrite")
+      .json(inDir.getAbsolutePath)
+    val t0 = System.currentTimeMillis() / 1000 * 1000 - nFiles * 1000L
+    inDir.listFiles().filter(_.getName.startsWith("part-")).sortBy(_.getName)
+      .zipWithIndex.foreach { case (f, i) => f.setLastModified(t0 + i * 1000L) }
+    fresh.sparkSession.read.json(inDir.getAbsolutePath).count()
+  }
+
   /** The `maintain_versioned` channel: sustained index-maintenance
     * throughput. A published v1 copy of the served index takes the
     * mutations (the shared artifact keeps serving everything else); the
@@ -158,10 +175,8 @@ object AnnServingBench {
     val aug = new java.io.File(dir, "vecs").getAbsolutePath
     emb.select("vec_id", "embedding", "label").unionByName(fresh)
       .write.parquet(aug)
-    val inDir = new java.io.File(dir, "in"); inDir.mkdirs()
-    fresh.repartition(nFiles).write.mode("overwrite")
-      .json(inDir.getAbsolutePath)
-    val staged = spark.read.json(inDir.getAbsolutePath).count()
+    val inDir = new java.io.File(dir, "in")
+    val staged = stageJson(fresh, inDir, nFiles)
 
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
@@ -226,10 +241,8 @@ object AnnServingBench {
     val aug = new java.io.File(dir, "vecs").getAbsolutePath
     emb.select("vec_id", "embedding", "label").unionByName(fresh)
       .write.parquet(aug)
-    val inDir = new java.io.File(dir, "in"); inDir.mkdirs()
-    fresh.repartition(nFiles).write.mode("overwrite")
-      .json(inDir.getAbsolutePath)
-    val staged = spark.read.json(inDir.getAbsolutePath).count()
+    val inDir = new java.io.File(dir, "in")
+    val staged = stageJson(fresh, inDir, nFiles)
     val schema = StructType(Seq(
       StructField("vec_id", LongType),
       StructField("embedding", ArrayType(DoubleType)),

@@ -2,7 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
+import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
+import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
+import org.apache.spark.sql.execution.streaming.sources.{MemoryPlan, MemorySink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.pipeline.NewsPipeline
@@ -93,13 +97,16 @@ private[streaming] class BandDedupProcessor(delayMs: Long)
 
 /** Structured Streaming surface (SURVEY.md §2.1 S1/S6, §2.2 K1–K4,
   * §2.7): file-directory NDJSON source → the shared NewsPipeline
-  * lineage → the reference's four concurrent sinks, 10 s processing-time
-  * trigger, checkpointed.
+  * lineage → the reference's four sinks, 10 s processing-time trigger,
+  * checkpointed.
   *
   * Scale note: the reference starts four independent queries over one
-  * lineage, so the source is read 4× (streaming_pipeline.py:196–241).
-  * `startFanOutSink` is the idiomatic alternative — one query, one source
-  * read, all sink work inside a single foreachBatch (SURVEY.md §7.3.5).
+  * lineage, so each article is listed, parsed, cleaned and scored four
+  * times (streaming_pipeline.py:196–241). `startAllSinks` keeps the four
+  * sinks but feeds them from ONE query: each micro-batch is computed
+  * once, cached, and handed to Spark's own file and memory sinks, both
+  * idempotent by batch id, so replay stays exactly-once (SURVEY.md
+  * §7.3.5).
   *
   * Every sink starter installs `LocalCheckpointFileManager` on the
   * session first (unless it already names a manager), so sessions the
@@ -116,9 +123,21 @@ object NewsStream {
 
   private val TriggerInterval = "10 seconds"
 
-  /** K1–K4: the reference's four sinks. Returns the started queries in
-    * (console, json, memory, foreachBatch) order. `trigger` overridable
-    * so tests can use AvailableNow.
+  /** K1–K4: the reference's four sinks, fed by one streaming query named
+    * `memoryTable` (the returned Seq's only element; a second live
+    * pipeline on the same table fails to start). Per micro-batch, in
+    * order: persist; write the JSON files through Spark's
+    * `FileStreamSink` (same `_spark_metadata` log and part files as a
+    * `format("json")` query; the JSON commit comes first because it is
+    * the durable sink); collect once into Spark's `MemorySink`, read as
+    * the temp view `memoryTable`; print the console block (K1: `Batch: N`
+    * and 5 untruncated rows) and K4's guard, count, 3-row sample and
+    * per-label count from the collected rows; unpersist. Both Spark sinks
+    * skip a batch id they already hold, so a replayed batch is not
+    * written twice. The checkpoint is `$checkpointRoot/json`, where the
+    * four-query layout kept the JSON sink's, so a restart from that
+    * layout resumes its JSON batch ids. `trigger` overridable so tests
+    * can use AvailableNow.
     */
   def startAllSinks(
       df: DataFrame,
@@ -126,67 +145,61 @@ object NewsStream {
       checkpointRoot: String,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval),
       memoryTable: String = "news_sentiment"): Seq[StreamingQuery] = {
-    LocalCheckpointFileManager.install(df.sparkSession)
-    val console = df.writeStream.format("console")
-      .outputMode("append").option("truncate", "false")
-      .option("numRows", "5")
-      .option("checkpointLocation", s"$checkpointRoot/console")
-      .trigger(trigger).start()
-    val json = df.writeStream.format("json")
-      .outputMode("append")
-      .option("path", s"$outputDir/stream_json")
-      .option("checkpointLocation", s"$checkpointRoot/json")
-      .trigger(trigger).start()
-    val memory = df.writeStream.format("memory")
+    val spark = df.sparkSession
+    // before the sinks: the file sink's `_spark_metadata` log picks its
+    // checkpoint file manager when it is built
+    LocalCheckpointFileManager.install(spark)
+    val jsonPath = s"$outputDir/stream_json"
+    val json = new FileStreamSink(spark, jsonPath, new JsonFileFormat, Nil,
+      Map("path" -> jsonPath))
+    val memory = new MemorySink
+    val query = df.writeStream
       .queryName(memoryTable).outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/memory")
-      .trigger(trigger).start()
-    val batchWise = df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/foreach")
+      .option("checkpointLocation", s"$checkpointRoot/json")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // K4 (streaming_pipeline.py:75–95): guard, count, sample,
-        // group-count — all against a cached batch so the lineage runs
-        // once, not four times
         batch.persist()
         try {
-          val n = batch.count()
-          if (n > 0) {
-            println(s"[batch $batchId] $n rows")
-            batch.show(3, truncate = false)
-            batch.groupBy("sentiment").count().show()
+          json.addBatch(batchId, batch)
+          val rows = batch.collect()
+          memory.write(batchId, needTruncate = false, rows)
+          val header = batch.schema.fieldNames.toSeq
+          println("-------------------------------------------")
+          println(s"Batch: $batchId")
+          println("-------------------------------------------")
+          showRows(header, rows, 5)
+          // K4 (streaming_pipeline.py:75–95): guard, count, sample,
+          // group-count
+          if (rows.nonEmpty) {
+            println(s"[batch $batchId] ${rows.length} rows")
+            showRows(header, rows, 3)
+            val label = batch.schema.fieldIndex("sentiment")
+            val counts = rows.groupBy(r => String.valueOf(r.get(label)))
+              .toArray.sortBy(_._1).map { case (l, rs) => Row(l, rs.length) }
+            showRows(Seq("sentiment", "count"), counts, counts.length)
           }
         } finally batch.unpersist()
         ()
       }
       .start()
-    Seq(console, json, memory, batchWise)
+    GraftSqlBridge.ofRows(spark,
+      MemoryPlan(memory, DataTypeUtils.toAttributes(df.schema)))
+      .createOrReplaceTempView(memoryTable)
+    Seq(query)
   }
 
-  /** Idiomatic fan-out: ONE streaming query; each micro-batch is cached
-    * and written to every sink — 1× source read instead of 4×.
+  /** `Dataset.show(n, truncate = false)`'s table for rows already on the
+    * driver, so the console and K4 prints run no plan and no job.
     */
-  def startFanOutSink(
-      df: DataFrame,
-      outputDir: String,
-      checkpointRoot: String,
-      trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery = {
-    LocalCheckpointFileManager.install(df.sparkSession)
-    df.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$checkpointRoot/fanout")
-      .trigger(trigger)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          batch.write.mode("append").json(s"$outputDir/stream_json")
-          val n = batch.count()
-          if (n > 0) batch.groupBy("sentiment").count().show()
-        } finally batch.unpersist()
-        ()
-      }
-      .start()
+  private def showRows(header: Seq[String], rows: Array[Row], n: Int): Unit = {
+    val cells = header +: rows.take(n).toSeq.map(_.toSeq.map(String.valueOf))
+    val widths = header.indices.map(i => math.max(3, cells.map(_(i).length).max))
+    val rule = widths.map("-" * _).mkString("+", "+", "+")
+    def line(r: Seq[String]): String =
+      r.zip(widths).map { case (c, w) => c.padTo(w, ' ') }.mkString("|", "|", "|")
+    val more = if (rows.length > n) Seq(s"only showing top $n rows") else Nil
+    println((Seq(rule, line(cells.head), rule) ++ cells.tail.map(line) ++
+      (rule +: more)).mkString("", "\n", "\n"))
   }
 
   /** Beyond-reference stream (SURVEY.md §2.7 gap + §7.1(7)): event-time

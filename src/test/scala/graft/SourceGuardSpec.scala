@@ -58,13 +58,21 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(code.map(".writeStream".r.findAllIn(_).size).sum == 1)
   }
 
+  test("NewsStream.startAllSinks starts one writeStream") {
+    val code = Files.readAllLines(
+      new File(src, "main/scala/graft/streaming/NewsStream.scala").toPath)
+      .asScala.filterNot(isComment).mkString("\n")
+    val body = code.drop(code.indexOf("def startAllSinks("))
+    assert(".writeStream".r.findAllIn(body.take(body.indexOf("\n  def "))).size == 1)
+  }
+
   test("the retired in-place ANN ops and per-scorer sinks are named nowhere under src/") {
     val retired = Seq("applyUpsertBatch", "applyDeleteBatch", "applyRebalance",
       "applyRetrainEpochIfDue", "fullDedup", "startMaintenanceSink",
       "startDeleteSink", "startAutoMaintainSink", "startSelfHealingSink",
       "scoreBatchLabelAware", "startLabelAwareServingSink", "startServingSink",
       "startBqServingSink", "startSqServingSink", "startAdaptiveServingSink",
-      "viewCodes")
+      "viewCodes", "startFanOutSink")
     val word = ("\\b(" + retired.mkString("|") + ")\\b").r
     val hits = Files.walk(src.toPath).iterator.asScala
       .filter(p => Files.isRegularFile(p) &&

@@ -83,15 +83,16 @@ class StreamingSpec extends AnyFunSuite {
     val outDir = tmp("fan_out")
     val ckpt = tmp("fan_ckpt")
     NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
-    val q = NewsStream.startFanOutSink(
+    val qs = NewsStream.startAllSinks(
       NewsStream.pipeline(spark, in), outDir, ckpt,
-      Trigger.ProcessingTime("1 second"))
+      Trigger.ProcessingTime("1 second"), memoryTable = "t_fan")
     try {
-      q.processAllAvailable()
+      assert(qs.size == 1)
+      qs.foreach(_.processAllAvailable())
       val written = spark.read.json(s"$outDir/stream_json")
       assert(written.count() == 6)
       assert(written.columns.contains("sentiment"))
-    } finally q.stop()
+    } finally qs.foreach(_.stop())
   }
 
   test("Trigger.AvailableNow drains the backlog, stops itself, resumes incrementally") {
@@ -529,6 +530,137 @@ class StreamingSpec extends AnyFunSuite {
       assert(spark.table("t_all").count() == 6)
       assert(spark.read.json(s"$out/stream_json").count() == 6)
     } finally qs.foreach(_.stop())
+  }
+
+  /** Drain `in` through the four sinks once, with AvailableNow. */
+  private def drainAllSinks(in: String, out: String, ckpt: String,
+      table: String): Unit =
+    NewsStream.startAllSinks(NewsStream.pipeline(spark, in), out, ckpt,
+      Trigger.AvailableNow(), memoryTable = table)
+      .foreach(q => assert(q.awaitTermination(120000), "drain did not end"))
+
+  /** The JSON sink's rows, through its `_spark_metadata` log, with
+    * processing_time read back as the timestamp the pipeline stamps.
+    */
+  private def jsonSinkRows(out: String): org.apache.spark.sql.DataFrame = {
+    import org.apache.spark.sql.types._
+    spark.read.schema(StructType(pipeline.NewsPipeline.processedSchema.map(f =>
+      if (f.name == "processing_time") f.copy(dataType = TimestampType) else f)))
+      .json(s"$out/stream_json")
+  }
+
+  /** `_spark_metadata` entry name -> content. */
+  private def sinkLog(out: String): Map[String, String] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(out, "stream_json", "_spark_metadata"))
+      .iterator.asScala.map(p => p.getFileName.toString ->
+        new String(Files.readAllBytes(p), "UTF-8")).toMap
+  }
+
+  test("startAllSinks reads each article once per micro-batch") {
+    import java.util.concurrent.ConcurrentHashMap
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler._
+    val in = tmp("once_in")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+    // the job group (a streaming query's run id) of each job and stage,
+    // and the input records each stage's tasks read
+    val jobGroup = new ConcurrentHashMap[Int, String]
+    val stageGroup = new ConcurrentHashMap[Int, String]
+    val read = new ConcurrentHashMap[Int, java.lang.Long]
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val g = Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse("")
+        jobGroup.put(e.jobId, g)
+        e.stageIds.foreach(stageGroup.put(_, g))
+      }
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        Option(e.taskMetrics).foreach(m => read.merge(e.stageId,
+          m.inputMetrics.recordsRead, (a, b) => a + b))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val qs = NewsStream.startAllSinks(NewsStream.pipeline(spark, in),
+        tmp("once_out"), tmp("once_ck"), Trigger.AvailableNow(),
+        memoryTable = "t_once")
+      qs.foreach(_.awaitTermination(120000))
+      org.apache.spark.sql.GraftSqlBridge.waitListenersEmpty(
+        spark.sparkContext, 60000)
+      val runs = qs.map(_.runId.toString).toSet
+      // one batch, two jobs: the JSON write (which fills the cache) and
+      // the collect; console and K4 print from the collected rows
+      assert(jobGroup.values.asScala.count(runs) == 2)
+      // the 6 file records once, plus 1: the collect reads the batch's
+      // one cached column batch back, and Spark counts each cached
+      // block element as a record. Four queries read the file 4 times.
+      val recordsRead = read.asScala.collect {
+        case (stage, n) if runs(stageGroup.getOrDefault(stage, "")) => n.longValue
+      }.sum
+      assert(recordsRead == 6 + 1)
+      assert(qs.flatMap(_.recentProgress).map(_.numInputRows).sum == 6)
+      assert(spark.table("t_once").count() == 6)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("startAllSinks: the JSON sink and the memory table hold identical rows") {
+    val in = tmp("same_in")
+    val out = tmp("same_out")
+    val ckpt = tmp("same_ck")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+    NewsStream.writeSampleBatch(in, batchId = 1, rows = 5)
+    val qs = NewsStream.startAllSinks(NewsStream.pipeline(spark, in), out,
+      ckpt, Trigger.ProcessingTime("1 second"), memoryTable = "t_same")
+    try {
+      qs.foreach(_.processAllAvailable())
+      NewsStream.writeSampleBatch(in, batchId = 2, rows = 4)
+      qs.foreach(_.processAllAvailable())
+    } finally qs.foreach(_.stop())
+    val json = jsonSinkRows(out)
+    val jsonRows = json.collect()
+    val memRows = spark.table("t_same").select(json.columns.map(col): _*).collect()
+    assert(jsonRows.length == 15 && memRows.length == 15)
+    assert(jsonRows.toSet == memRows.toSet)
+  }
+
+  test("startAllSinks: a replayed batch leaves the JSON rows and sink log unchanged") {
+    val in = tmp("replay_in")
+    val out = tmp("replay_out")
+    val ckpt = tmp("replay_ck")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+    drainAllSinks(in, out, ckpt, "t_replay")
+    NewsStream.writeSampleBatch(in, batchId = 1, rows = 5)
+    drainAllSinks(in, out, ckpt, "t_replay")
+    val rows = jsonSinkRows(out).collect().toSet
+    val log = sinkLog(out)
+    assert(rows.size == 11 && log.keySet == Set("0", "1"))
+    // the last batch's output is committed but its trigger is not: the
+    // restart runs batch 1 again and both Spark sinks see its id again
+    java.nio.file.Files.delete(java.nio.file.Paths.get(ckpt, "json", "commits", "1"))
+    drainAllSinks(in, out, ckpt, "t_replay")
+    assert(new java.io.File(ckpt, "json/commits/1").isFile)
+    assert(jsonSinkRows(out).collect().toSet == rows)
+    assert(sinkLog(out) == log)
+    assert(spark.table("t_replay").count() == 5)
+  }
+
+  test("startAllSinks resumes the four-query layout's JSON checkpoint") {
+    val in = tmp("layout_in")
+    val out = tmp("layout_out")
+    val ckpt = tmp("layout_ck")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+    // the JSON query of the four-query layout, alone
+    assert(NewsStream.pipeline(spark, in).writeStream.format("json")
+      .outputMode("append")
+      .option("path", s"$out/stream_json")
+      .option("checkpointLocation", s"$ckpt/json")
+      .trigger(Trigger.AvailableNow()).start().awaitTermination(120000))
+    NewsStream.writeSampleBatch(in, batchId = 1, rows = 5)
+    drainAllSinks(in, out, ckpt, "t_layout")
+    val ids = jsonSinkRows(out).select("id").collect().map(_.getString(0))
+    assert(ids.length == 11 && ids.distinct.length == 11)
+    assert(sinkLog(out).keySet == Set("0", "1"))
+    assert(spark.table("t_layout").count() == 5)
   }
 
   test("watermarked stream-stream join matches rows within the time bound") {
