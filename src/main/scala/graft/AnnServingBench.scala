@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.index.IndexStore
+
 /** Sustained throughput of the STREAMING ANN serving path — a staged
   * backlog of query-vector NDJSON files drained with
   * Trigger.AvailableNow through AnnServing.startScoringSink against
@@ -25,13 +27,14 @@ import org.apache.spark.sql.types._
   * selectivity switch. The maintenance channels stage a backlog of NEW
   * vectors (corpus vectors under fresh ids) and drain it through
   * startVersionedSelfHealingSink against a published copy of the
-  * index, in vectors/second: `maintain_versioned` (single-writer
-  * publishes), `maintain_versioned_cas` (compare-and-swap publishes)
-  * and `maintain_upsert_cadence` (the side-table refresh cadence).
+  * index, in vectors/second: `maintain_versioned` (the full
+  * self-healing chain; every publish is the store's compare-and-swap
+  * commit) and `maintain_upsert_cadence` (the side-table refresh
+  * cadence).
   *
   * Usage: runMain graft.AnnServingBench [sfDir] [nQueries] [nFiles]
   *   [ivfpq|bq|adaptive|adaptive_rare|maintain_versioned|
-  *    maintain_versioned_cas|maintain_upsert_cadence]
+  *    maintain_upsert_cadence]
   */
 object AnnServingBench {
   def main(args: Array[String]): Unit = {
@@ -48,13 +51,6 @@ object AnnServingBench {
     val vectorsPath = s"$sfDir/embeddings.parquet"
     if (channel == "maintain_versioned") {
       maintainVersioned(spark, idx, sfDir, nQ, nFiles); return
-    }
-    // same workload with the per-batch upsert publish routed through
-    // the optimistic CAS commit — prices the multi-writer safety
-    // premium (a couple of driver-side FS ops per publish; expect
-    // parity with maintain_versioned within noise)
-    if (channel == "maintain_versioned_cas") {
-      maintainVersioned(spark, idx, sfDir, nQ, nFiles, cas = true); return
     }
     if (channel == "maintain_upsert_cadence") {
       maintainUpsertCadence(spark, idx, sfDir, nQ, nFiles); return
@@ -150,8 +146,7 @@ object AnnServingBench {
       idx: String,
       sfDir: String,
       nQ: Int,
-      nFiles: Int,
-      cas: Boolean = false): Unit = {
+      nFiles: Int): Unit = {
     val dir = Files.createTempDirectory("ann_maint_ver").toFile
     val work = new java.io.File(dir, "ix").getAbsolutePath
     val full = spark.read.parquet(s"$idx/codes")
@@ -159,7 +154,7 @@ object AnnServingBench {
     spark.read.parquet(s"$idx/centroids")
       .write.parquet(s"$work/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$work/codebook")
-    queries.EmbQueries.publishVersion(spark, work, 1,
+    IndexStore.publishVersion(spark, work, 1,
       s"$work/centroids_v1", s"$work/codes_v1")
     val cellsBefore = spark.read.parquet(s"$work/centroids_v1").count()
 
@@ -189,22 +184,22 @@ object AnnServingBench {
         .option("maxFilesPerTrigger", math.max(1, nFiles / 4))
         .json(inDir.getAbsolutePath),
       work, aug, new java.io.File(dir, "ck").getAbsolutePath,
-      depthsPath = Some(depths), casPublish = cas)
+      depthsPath = Some(depths))
     val drained = q.awaitTermination(600000)
     val sec = (System.nanoTime() - t0) / 1e9
     val (ver, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, work)
-    val applied = queries.EmbQueries.readSegments(spark, codesPath)
+      IndexStore.readManifest(spark, work)
+    val applied = IndexStore.readSegments(spark, codesPath)
       .filter(col("vec_id") >= 1000000000L).count()
     val cellsAfter = spark.read.parquet(centPath).count()
-    val nSegs = codesPath.split(',').length
+    val nSegs = IndexStore.segments(codesPath).size
     val error =
       if (!drained) "\"awaitTermination timed out\""
       else if (applied != staged)
         s""""applied $applied of $staged staged vectors""""
       else "null"
     println(
-      s"""{"metric":"ann_maintain_throughput","unit":"vectors_per_sec","channel":"${if (cas) "maintain_versioned_cas" else "maintain_versioned"}","value":${f"${applied / sec}%.1f"},"n_vectors":$applied,"staged":$staged,"cells_before":$cellsBefore,"cells_after":$cellsAfter,"final_version":$ver,"final_segments":$nSegs,"sec":${f"$sec%.2f"},"error":$error,"sf":"$sfDir"}""")
+      s"""{"metric":"ann_maintain_throughput","unit":"vectors_per_sec","channel":"maintain_versioned","value":${f"${applied / sec}%.1f"},"n_vectors":$applied,"staged":$staged,"cells_before":$cellsBefore,"cells_after":$cellsAfter,"final_version":$ver,"final_segments":$nSegs,"sec":${f"$sec%.2f"},"error":$error,"sf":"$sfDir"}""")
     CacheRegistry.clear(spark)
     spark.stop()
     if (error != "null") System.exit(1)
@@ -254,7 +249,7 @@ object AnnServingBench {
       spark.read.parquet(s"$idx/centroids")
         .write.parquet(s"$work/centroids_v1")
       spark.read.parquet(s"$idx/codebook").write.parquet(s"$work/codebook")
-      queries.EmbQueries.publishVersion(spark, work, 1,
+      IndexStore.publishVersion(spark, work, 1,
         s"$work/centroids_v1", s"$work/codes_v1")
       val depths = new java.io.File(dir, s"depths_$tag").getAbsolutePath
       val t0 = System.nanoTime()
@@ -270,8 +265,8 @@ object AnnServingBench {
       val drained = q.awaitTermination(600000)
       val sec = (System.nanoTime() - t0) / 1e9
       val (ver, _, codesPath) =
-        queries.EmbQueries.readManifest(spark, work)
-      val applied = queries.EmbQueries.readSegments(spark, codesPath)
+        IndexStore.readManifest(spark, work)
+      val applied = IndexStore.readSegments(spark, codesPath)
         .filter(col("vec_id") >= 1000000000L).count()
       if (!drained || applied != staged)
         sys.error(s"$tag run incomplete: drained=$drained " +

@@ -5783,564 +5783,19 @@ object EmbQueries {
     (anchors, scored, rec, chosen)
   }
 
-  /** BLUE/GREEN index publish — versions are LOGICAL: a manifest
-    * points at immutable artifact directories (the Iceberg/Delta
-    * convention), so "building v2" never copies or touches v1's files
-    * and publishing is ONE atomic rename of MANIFEST.json
-    * (FileContext.rename with Options.Rename.OVERWRITE — readers see
-    * either the old or the new manifest, never a torn state; plain
-    * FileSystem.rename refuses an existing destination). Rollback is
-    * publishing the old version id again. The FS resolves from the
-    * manifest path's scheme (the applyCompactionIfDue convention).
-    */
+  // The versioned index store lives in graft.index.IndexStore; these
+  // forwarders keep the names perfbench and the batch queries call.
   private[graft] def publishVersion(
       s: SparkSession, root: String, version: Int,
-      centroids: String, codes: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.$version.tmp")
-    val fs = dst.getFileSystem(conf)
-    val body =
-      s"""{"version":$version,"centroids":"$centroids","codes":"$codes"}\n"""
-    // the immutable per-version LOG entry (VERSION.<v>.json) — the
-    // record [[gcPlan]] walks: without it, nothing remembers which
-    // artifact dirs an old version referenced once MANIFEST.json has
-    // moved on (re-publishing a version — rollback — just rewrites
-    // the same content)
-    val logP = new org.apache.hadoop.fs.Path(s"$root/VERSION.$version.json")
-    // ROLLBACK-FORK SAFETY: a log entry already present with DIFFERENT
-    // content is the record of an abandoned fork (the first publish
-    // after a rollback reuses the fork's version number). Overwriting
-    // it would orphan the fork's uniquely-named artifact dirs with no
-    // record anywhere — a permanent disk leak gcPlan could never see.
-    // Preserve the old entry as VERSION.<v>.orphan.<k>.json; gcPlan
-    // folds orphan-only dirs into its deletable set and gcVersions
-    // retires the orphan logs. A same-content rewrite (checkpoint
-    // replay, rollback itself) stays a plain idempotent overwrite.
-    if (fs.exists(logP)) {
-      val oin = fs.open(logP)
-      val old = try scala.io.Source.fromInputStream(oin, "UTF-8").mkString
-      finally oin.close()
-      if (old != body) {
-        var k = 0
-        var op = new org.apache.hadoop.fs.Path(
-          s"$root/VERSION.$version.orphan.$k.json")
-        while (fs.exists(op)) {
-          k += 1
-          op = new org.apache.hadoop.fs.Path(
-            s"$root/VERSION.$version.orphan.$k.json")
-        }
-        fs.rename(logP, op)
-      }
-    }
-    val lo = fs.create(logP, true)
-    lo.write(body.getBytes("UTF-8"))
-    lo.close()
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, conf)
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
+      centroids: String, codes: String): Unit =
+    graft.index.IndexStore.publishVersion(s, root, version, centroids, codes)
 
-  // ------------------------------------------------------------------
-  // OPTIMISTIC-CONCURRENCY publish (the multi-writer commit protocol).
-  //
-  // [[publishVersion]] is the SINGLE-WRITER primitive: its manifest
-  // rename is last-write-wins, so two maintenance processes that both
-  // built against base version v silently lose one update (the second
-  // rename strands the first writer's segments as an orphan — no leak,
-  // but dropped data with no error). The CAS discipline below makes
-  // that race a DETECTED conflict instead, the Iceberg/Delta
-  // optimistic-commit model realized on plain FS primitives:
-  //
-  //   * a forward commit targets EXACTLY expectedBase+1 and must first
-  //     CLAIM the per-version log slot VERSION.<v+1>.json via
-  //     create(overwrite=false) — atomic on HDFS, precondition-guarded
-  //     on object stores (If-None-Match), best-effort two-step on the
-  //     raw local FS (the spec exercises the sequential interleavings,
-  //     which hold on any FS). Exactly one same-base writer wins the
-  //     slot; the loser sees the claim and returns Conflict WITHOUT
-  //     touching the manifest — its work is never silently dropped.
-  //   * the claim body IS the full next manifest, so ANY process can
-  //     finish a crashed winner's commit (roll-forward helping): a
-  //     conflict-loser that finds the manifest still at expectedBase
-  //     completes the claimed publish itself, then rebases onto it —
-  //     no livelock behind an abandoned claim, no lock to expire.
-  //   * a same-content claim is a crash-retry replay of OUR OWN commit
-  //     and proceeds idempotently (Structured Streaming's foreachBatch
-  //     re-execution lands here).
-  //   * rollback under this discipline goes through [[rollbackTo]],
-  //     which retires the abandoned fork's log entries EAGERLY (to
-  //     orphan records, the [[publishVersion]] convention) so forward
-  //     slots are never left squatted by dead lineages. The legacy
-  //     lazy-orphaning path (re-publish old + next publish reuses the
-  //     fork number) remains for single-writer flows and is pinned by
-  //     EmbVersionedMaintenanceSpec; CAS protects only commits that
-  //     all use CAS — a legacy last-write-wins rename bypasses any
-  //     lock-free protocol by construction.
-  // ------------------------------------------------------------------
-
-  /** A CAS commit lost the optimistic race more times than the caller
-    * was willing to rebase (or the protocol was violated — see
-    * [[publishVersionCas]]). In a Structured Streaming sink this fails
-    * the micro-batch; the engine's retry re-reads the manifest and IS
-    * the rebase.
-    */
-  final class ConcurrentPublishException(msg: String)
-    extends RuntimeException(msg)
-
-  private def readTextFile(
-      fs: org.apache.hadoop.fs.FileSystem,
-      p: org.apache.hadoop.fs.Path): String = {
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-  }
-
-  private def manifestBody(
-      version: Int, centroids: String, codes: String): String =
-    s"""{"version":$version,"centroids":"$centroids","codes":"$codes"}\n"""
-
-  /** Tolerant full parse of a manifest/claim body — None unless all
-    * three fields are present and the version is an int (the
-    * [[readManifest]] regex conventions, without the sys.error).
-    */
-  private def parseManifestBody(txt: String): Option[(Int, String, String)] = {
-    def field(k: String): Option[String] =
-      ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt)
-        .map(_.group(1))
-        .orElse(("\"" + k + "\":([^,}\"]+)").r
-          .findFirstMatchIn(txt).map(_.group(1)))
-        .map(_.trim)
-    for {
-      v <- field("version").flatMap(_.toIntOption)
-      c <- field("centroids")
-      k <- field("codes")
-    } yield (v, c, k)
-  }
-
-  /** Atomically swap MANIFEST.json to `body` (tmp write + rename with
-    * OVERWRITE — the [[publishVersion]] tear-free primitive).
-    */
-  private def swapManifest(
-      s: SparkSession, root: String, version: Int, body: String): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json")
-    val tmp = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.$version.tmp")
-    val fs = dst.getFileSystem(conf)
-    val out = fs.create(tmp, true)
-    out.write(body.getBytes("UTF-8"))
-    out.close()
-    val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-      fs.getUri, conf)
-    fc.rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-  }
-
-  /** Compare-and-swap forward publish: commit `expectedBase + 1` iff
-    * this writer wins the version-slot claim. Returns true on success
-    * (including an idempotent same-content crash-retry replay), false
-    * when the base already moved or another writer claimed the slot
-    * with different content — in which case NOTHING was written and
-    * the caller must rebase (see [[commitCas]], which also
-    * rolls forward an abandoned winner's claim). Forward commits that
-    * want multi-writer safety must ALL use this; rollbacks must go
-    * through [[rollbackTo]] so dead forks never squat the next slot.
-    */
-  private[graft] def publishVersionCas(
-      s: SparkSession, root: String, expectedBase: Int,
-      centroids: String, codes: String): Boolean = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val dst = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json")
-    val fs = dst.getFileSystem(conf)
-    // stale-base early out: the manifest moved since this writer read
-    // it (a racer already committed) — rebuild against the new base
-    if (fs.exists(dst) && readManifest(s, root)._1 != expectedBase)
-      return false
-    val version = expectedBase + 1
-    val body = manifestBody(version, centroids, codes)
-    val logP = new org.apache.hadoop.fs.Path(s"$root/VERSION.$version.json")
-    val claimed =
-      if (fs.exists(logP)) readTextFile(fs, logP) == body
-      else {
-        try {
-          val o = fs.create(logP, false) // no overwrite: the CAS claim
-          o.write(body.getBytes("UTF-8"))
-          o.close()
-          true
-        } catch {
-          case _: java.io.IOException =>
-            // lost the create race — accept only if the winner wrote
-            // OUR body (a concurrent replay of the same commit)
-            fs.exists(logP) && readTextFile(fs, logP) == body
-        }
-      }
-    if (!claimed) return false
-    swapManifest(s, root, version, body)
-    true
-  }
-
-  /** Rebasing CAS commit loop with roll-forward helping. `build` runs
-    * against the current manifest state (version, centroidsPath,
-    * codesPath) and returns the NEXT version's (centroids, codes)
-    * artifact paths — it re-runs on every rebase, so it must be safe
-    * to re-execute (all maintenance builders are: they write fresh
-    * uniquely-named dirs). On conflict with the manifest still at the
-    * base this writer read, the existing claim is a crashed (or
-    * in-flight) winner's commit: its body is the full next manifest,
-    * so this writer COMPLETES that publish (idempotent — if the
-    * claimant is alive both rename the same content) and rebases onto
-    * it. Returns the version this writer's OWN commit published.
-    */
-  private[graft] def commitCas(
-      s: SparkSession, root: String, maxAttempts: Int = 5)(
-      build: (Int, String, String) => (String, String)): Int = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(conf)
-    var attempt = 0
-    while (attempt < maxAttempts) {
-      attempt += 1
-      val (v, cent, codes) = readManifest(s, root)
-      val (nc, nk) = build(v, cent, codes)
-      if (publishVersionCas(s, root, v, nc, nk)) return v + 1
-      // conflict: if the manifest is STILL at v, the slot v+1 holds an
-      // abandoned (or in-flight) winner's claim — roll it forward so
-      // the next rebase sees it as the new base instead of livelocking
-      if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json"))
-          && readManifest(s, root)._1 == v)
-        rollForwardClaim(s, root, v)
-    }
-    throw new ConcurrentPublishException(
-      s"CAS commit at $root lost the race $maxAttempts times — " +
-        "either pathological writer contention or a non-CAS writer " +
-        "is renaming the manifest underneath this protocol")
-  }
-
-  /** Complete an abandoned winner's commit at slot `base + 1` (the
-    * roll-forward half of the helping protocol): the claim body IS the
-    * full next manifest, so publishing it is safe even if the claimant
-    * is alive and about to do the same rename — both swap identical
-    * content. A torn claim (writer died mid-create) is refused loudly,
-    * never published.
-    */
-  private[graft] def rollForwardClaim(
-      s: SparkSession, root: String, base: Int): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val logP =
-      new org.apache.hadoop.fs.Path(s"$root/VERSION.${base + 1}.json")
-    if (fs.exists(logP)) {
-      val claim = readTextFile(fs, logP)
-      if (!parseManifestBody(claim).exists(_._1 == base + 1))
-        sys.error(s"claim $logP does not parse as version ${base + 1} " +
-          s"(torn write from a crashed writer?): $claim")
-      swapManifest(s, root, base + 1, claim)
-    }
-  }
-
-  /** Per-writer attempt tag for CAS-mode artifact dir names: the
-    * sanitized Spark applicationId. Two optimistic builders racing
-    * from the same base BOTH write their next-version dirs before the
-    * slot claim decides the winner — with the fixed `codes_v&lt;v+1&gt;`
-    * naming they would overwrite each other's in-flight (or even
-    * just-published) files. Suffixing every CAS-mode dir with the
-    * writer's own tag makes the attempt dirs disjoint by construction;
-    * the claim then records WHICH writer's dirs are version v+1.
-    * Within one driver the tag is stable, so a same-process retry
-    * overwrites its own attempt dir (the crash-retry self-cleaning
-    * convention of the fixed naming).
-    */
-  private[graft] def attemptTag(s: SparkSession): String =
-    s.sparkContext.applicationId.filter(c => c.isLetterOrDigit || c == '-')
-
-  /** One-shot CAS publish for op bodies whose rebase is "re-run the
-    * whole op" (the foreachBatch retry model — consolidating
-    * maintenance is too expensive to loop inside the op): try the
-    * commit; on conflict DELETE this writer's tag-suffixed attempt
-    * dirs (they lost — nothing references them), roll an abandoned
-    * winner's claim forward so the retry sees a moved base instead of
-    * livelocking, and throw [[ConcurrentPublishException]] to fail the
-    * micro-batch.
-    */
-  private[graft] def publishOrConflict(
-      s: SparkSession, root: String, expectedBase: Int,
-      centroids: String, codes: String): Unit = {
-    if (publishVersionCas(s, root, expectedBase, centroids, codes)) return
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(s.sparkContext.hadoopConfiguration)
-    val tag = attemptTag(s)
-    (centroids.split(',').toSeq ++ codes.split(',').toSeq)
-      .map(_.trim).filter(_.nonEmpty)
-      .filter(p => p.startsWith(root + "/") && p.endsWith("." + tag))
-      .foreach(p => fs.delete(new org.apache.hadoop.fs.Path(p), true))
-    if (fs.exists(new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json"))
-        && readManifest(s, root)._1 == expectedBase)
-      rollForwardClaim(s, root, expectedBase)
-    throw new ConcurrentPublishException(
-      s"version ${expectedBase + 1} at $root was committed by a " +
-        "concurrent writer — this op's attempt dirs were cleaned; " +
-        "re-run to rebase on the new base")
-  }
-
-  /** Sweep STRAY attempt dirs: a CAS writer that crashed BEFORE
-    * claiming its slot leaves tag-suffixed dirs nothing references
-    * (every post-claim crash is covered by roll-forward; pre-claim
-    * there is no record anywhere — this sweep is the record-free
-    * backstop). Deletes dirs directly under `root` whose name looks
-    * like an attempt dir (`codes*`/`centroids*` with a `.tag` suffix),
-    * is referenced by NO manifest / version log / orphan record, and
-    * whose modification time is older than `graceMs` (the grace window
-    * protects a live writer that has built but not yet claimed).
-    * Returns the number of dirs deleted.
-    */
-  private[graft] def gcStrayAttemptDirs(
-      s: SparkSession, root: String,
-      graceMs: Long = 6L * 3600 * 1000): Int = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(conf)
-    if (!fs.exists(rp)) return 0
-    val referenced: Set[String] = {
-      val manifestP = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json")
-      val m =
-        if (fs.exists(manifestP)) {
-          val (_, c, k) = readManifest(s, root); Seq(c, k)
-        } else Seq.empty
-      (m ++ listVersions(s, root).flatMap(v => Seq(v._2, v._3)) ++
-        listOrphans(s, root).flatMap(o => Seq(o._2, o._3)))
-        .flatMap(_.split(',').toSeq).map(_.trim).filter(_.nonEmpty).toSet
-    }
-    val attemptRe = "^(codes|centroids)[^.]*\\.[A-Za-z0-9-]+$".r
-    val now = System.currentTimeMillis()
-    val stray = fs.listStatus(rp).toSeq.filter { st =>
-      st.isDirectory &&
-        attemptRe.findFirstIn(st.getPath.getName).isDefined &&
-        !referenced(st.getPath.toUri.getPath) &&
-        !referenced(st.getPath.toString) &&
-        now - st.getModificationTime >= graceMs
-    }
-    stray.foreach(st => fs.delete(st.getPath, true))
-    stray.size
-  }
-
-  /** Rollback under the CAS discipline: re-publish logged version `v`
-    * and EAGERLY retire every logged version above it to an orphan
-    * record (VERSION.&lt;w&gt;.orphan.&lt;k&gt;.json — the
-    * [[publishVersion]] fork convention, just applied at rollback time
-    * instead of lazily at the next forward publish). The abandoned
-    * fork's uniquely-named dirs stay GC-visible through the orphan
-    * records, and the next CAS commit targets v+1 against a FREE slot
-    * — a dead lineage can never squat the forward path and masquerade
-    * as an in-flight claim to [[commitCas]]'s roll-forward.
-    */
-  private[graft] def rollbackTo(
-      s: SparkSession, root: String, v: Int): Unit = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    val target = listVersions(s, root).find(_._1 == v).getOrElse(
-      sys.error(s"rollback target $v is not in the version log at " +
-        s"$root (expired by GC?)"))
-    listVersions(s, root).filter(_._1 > v).foreach { case (w, _, _) =>
-      val logP = new org.apache.hadoop.fs.Path(s"$root/VERSION.$w.json")
-      var k = 0
-      var op = new org.apache.hadoop.fs.Path(
-        s"$root/VERSION.$w.orphan.$k.json")
-      while (fs.exists(op)) {
-        k += 1
-        op = new org.apache.hadoop.fs.Path(
-          s"$root/VERSION.$w.orphan.$k.json")
-      }
-      fs.rename(logP, op)
-    }
-    swapManifest(s, root, v, manifestBody(v, target._2, target._3))
-  }
-
-  /** All versions ever published at `root`, from the immutable
-    * VERSION.&lt;v&gt;.json log entries — (version, centroidsPath,
-    * codesPath), ascending.
-    */
-  private[graft] def listVersions(
-      s: SparkSession, root: String): Seq[(Int, String, String)] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(conf)
-    if (!fs.exists(rp)) return Seq.empty
-    val re = "^VERSION\\.(\\d+)\\.json$".r
-    fs.listStatus(rp).toSeq
-      .flatMap(st => re.findFirstMatchIn(st.getPath.getName)
-        .map(_ => st.getPath))
-      .map { p =>
-        val in = fs.open(p)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        // quoted values may contain commas (the codes field is a
-        // comma-separated SEGMENT LIST under versioned streaming
-        // maintenance); bare values (the version number) stop at the
-        // JSON delimiters
-        def field(k: String): String =
-          ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt)
-            .map(_.group(1))
-            .orElse(("\"" + k + "\":([^,}\"]+)").r
-              .findFirstMatchIn(txt).map(_.group(1)))
-            .getOrElse(sys.error(s"version log missing $k: $txt")).trim
-        (field("version").toInt, field("centroids"), field("codes"))
-      }
-      .sortBy(_._1)
-  }
-
-  /** Abandoned-fork log entries (VERSION.&lt;v&gt;.orphan.&lt;k&gt;.json —
-    * written by [[publishVersion]] when a post-rollback publish reuses
-    * a fork's version number): (centroidsPath, codesPath) per orphan,
-    * plus the log paths themselves so [[gcVersions]] can retire them.
-    */
-  private def listOrphans(s: SparkSession, root: String)
-      : Seq[(org.apache.hadoop.fs.Path, String, String)] = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val rp = new org.apache.hadoop.fs.Path(root)
-    val fs = rp.getFileSystem(conf)
-    if (!fs.exists(rp)) return Seq.empty
-    val re = "^VERSION\\.\\d+\\.orphan\\.\\d+\\.json$".r
-    fs.listStatus(rp).toSeq
-      .filter(st => re.findFirstIn(st.getPath.getName).isDefined)
-      .map { st =>
-        val in = fs.open(st.getPath)
-        val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-        def field(k: String): String =
-          ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt)
-            .map(_.group(1))
-            .getOrElse(sys.error(s"orphan log missing $k: $txt")).trim
-        (st.getPath, field("centroids"), field("codes"))
-      }
-  }
-
-  /** VERSION GC plan — the retention step the blue/green history
-    * needs once epochs keep publishing: retain the newest `keep`
-    * versions PLUS whatever version the live manifest currently
-    * publishes (after a rollback the published version is an OLD one —
-    * newest-keep alone would delete the very dirs serving points at,
-    * so the manifest is consulted, not assumed), expire the rest, and
-    * list every artifact directory that ONLY expired versions
-    * reference. A dir shared with any retained version is never
-    * deletable (logical versions share immutable dirs by design), and
-    * only paths under `root` are ever offered for deletion (an
-    * externally-located artifact is someone else's lifecycle). Pure
-    * driver-side FS metadata — versions are few by construction.
-    *
-    * @return (retainedVersions, expiredVersions, deletableDirs)
-    */
-  private[graft] def gcPlan(
-      s: SparkSession, root: String, keep: Int)
-      : (Seq[Int], Seq[Int], Seq[String]) = {
-    require(keep >= 1, "must retain at least the published version")
-    val versions = listVersions(s, root)
-    val manifestP = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json")
-    val fs = manifestP.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val published: Option[Int] =
-      if (fs.exists(manifestP)) Some(readManifest(s, root)._1) else None
-    val retainIds =
-      if (versions.size <= keep) versions.map(_._1).toSet
-      else versions.takeRight(keep).map(_._1).toSet ++ published
-    val (retained, expired) = versions.partition(v => retainIds(v._1))
-    // each field may be a comma-separated segment list (versioned
-    // streaming maintenance); a dir shared with ANY retained version's
-    // segment set survives
-    def dirsOf(cent: String, codes: String): Seq[String] =
-      (cent.split(',').toSeq ++ codes.split(',').toSeq)
-        .map(_.trim).filter(_.nonEmpty)
-    val keepDirs = retained.flatMap(v => dirsOf(v._2, v._3)).toSet
-    // abandoned-fork records (see publishVersion): their dirs are
-    // expired BY CONSTRUCTION — no live lineage references a fork —
-    // but still shared-dir-protected like any expired version's
-    val orphanDirs = listOrphans(s, root).flatMap(o => dirsOf(o._2, o._3))
-    val deletable =
-      (expired.flatMap(v => dirsOf(v._2, v._3)) ++ orphanDirs).distinct
-        .filterNot(keepDirs)
-        .filter(_.startsWith(root + "/"))
-    (retained.map(_._1), expired.map(_._1), deletable)
-  }
-
-  /** Execute a [[gcPlan]]: delete the expired-only artifact dirs and
-    * the expired versions' log entries. MANIFEST.json is untouched —
-    * the published version is always retained, so serving never
-    * observes the GC. Returns the deleted dir count.
-    */
-  private[graft] def gcVersions(
-      s: SparkSession, root: String, keep: Int): Int = {
-    val (_, expired, dirs) = gcPlan(s, root, keep)
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(conf)
-    dirs.foreach(d =>
-      fs.delete(new org.apache.hadoop.fs.Path(d), true))
-    expired.foreach(v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$root/VERSION.$v.json"),
-        false))
-    // orphan logs are consumed by the plan above: every dir they
-    // referenced is now deleted or shared with a retained version
-    // (whose own log records it) — the fork's record has done its job
-    listOrphans(s, root).foreach(o => fs.delete(o._1, false))
-    dirs.size
-  }
-
-  /** Read a comma-separated code SEGMENT list (the versioned streaming
-    * maintenance manifest form) as one DataFrame: each segment loads as
-    * its own cell-partitioned root and the roots union — Spark rejects
-    * multiple partitioned roots in a single read
-    * (CONFLICTING_DIRECTORY_STRUCTURES), and a filter on `cell` pushes
-    * through the Union to prune directories per segment.
-    */
-  private[graft] def readSegments(
-      s: SparkSession, csv: String): DataFrame = {
-    val parts = csv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-    if (parts.isEmpty)
-      sys.error(s"manifest codes field holds no segment paths: '$csv'")
-    parts.map(p => s.read.parquet(p)).reduce(_.unionByName(_))
-  }
-
-  /** Read the published manifest: (version, centroidsPath, codesPath).
-    * One tiny driver-side FS read — the serving process resolves its
-    * artifact paths from this, nothing else.
-    */
   private[graft] def readManifest(
-      s: SparkSession, root: String): (Int, String, String) = {
-    val p = new org.apache.hadoop.fs.Path(s"$root/MANIFEST.json")
-    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val in = fs.open(p)
-    val txt = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-    finally in.close()
-    // same list-tolerant parse as listVersions: quoted values may hold
-    // a comma-separated segment list
-    def field(k: String): String =
-      ("\"" + k + "\":\"([^\"]*)\"").r.findFirstMatchIn(txt)
-        .map(_.group(1))
-        .orElse(("\"" + k + "\":([^,}\"]+)").r
-          .findFirstMatchIn(txt).map(_.group(1)))
-        .getOrElse(sys.error(s"manifest missing $k: $txt")).trim
-    (field("version").toInt, field("centroids"), field("codes"))
-  }
+      s: SparkSession, root: String): (Int, String, String) =
+    graft.index.IndexStore.readManifest(s, root)
 
-  /** TIME-TRAVEL resolve: the artifact paths (centroids, codes) any
-    * LOGGED version serves — not just the published one. Versions are
-    * logical and their dirs immutable, so reading an old version after
-    * later maintenance returns its exact historical answers for free;
-    * the horizon is GC retention ([[gcVersions]] deletes expired
-    * versions' logs and exclusively-owned dirs). After a rollback the
-    * reused version number resolves to the CURRENT lineage (the
-    * abandoned fork's entry was moved to an orphan record — orphans
-    * are dead lineages, deliberately not addressable here).
-    */
-  private[graft] def readManifestAt(
-      s: SparkSession, root: String, version: Int): (String, String) =
-    listVersions(s, root).find(_._1 == version)
-      .map(v => (v._2, v._3))
-      .getOrElse {
-        val logged = listVersions(s, root).map(_._1)
-        sys.error(s"version $version is not in the log at $root " +
-          s"(expired by GC or never published); logged: " +
-          s"[${logged.mkString(", ")}]")
-      }
+  private[graft] def readSegments(s: SparkSession, csv: String): DataFrame =
+    graft.index.IndexStore.readSegments(s, csv)
 
   /** The publish history of the served index, run once per
     * (session, dir): v1 = the as-built artifacts, v2 = the rebalanced

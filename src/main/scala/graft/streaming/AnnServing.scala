@@ -6,6 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
+import graft.index.IndexStore
+
 /** Streaming ANN serving: score a micro-batched stream of query vectors
   * against the PERSISTED IVF+PQ index (the self-contained layout
   * EmbQueries.servedCodes writes — centroids/ + codebook/ + codes/
@@ -199,7 +201,7 @@ object AnnServing {
       .filter(col("arn") <= coalesce(col("np"), lit(2)))
       .select(col("qid"), col("qvec"), col("clab").as("cell"))
     // pruned candidate fetch: only the probed cells' rows, exact rerank
-    val codes = graft.queries.EmbQueries.readSegments(spark, codesPath)
+    val codes = IndexStore.readSegments(spark, codesPath)
       .select(col("vec_id"), col("cell"))
     val wR = Window.partitionBy(col("qid"))
       .orderBy(col("sim").desc, col("vec_id"))
@@ -314,7 +316,7 @@ object AnnServing {
     startScoringSink(stream, outDir, checkpoint, trigger) { batch =>
       val s = batch.sparkSession
       val (ver, centPath, codesPath) =
-        graft.queries.EmbQueries.readManifest(s, manifestRoot)
+        IndexStore.readManifest(s, manifestRoot)
       scoreBatchAt(s, centPath, codesPath,
         s"$manifestRoot/codebook", s.read.parquet(vectorsPath),
         batch, k)
@@ -429,7 +431,7 @@ object AnnServing {
     // so the probed-cell filter still prunes directories per segment
     val masked = excludeIds.foldLeft(
       codeFilter.foldLeft(
-        graft.queries.EmbQueries.readSegments(spark, codesPath)
+        IndexStore.readSegments(spark, codesPath)
           .filter(col("cell").isin(probedCells.map(Int.box): _*)))(_.filter(_)))(
       (d, t) => d.join(broadcast(t.select("vec_id")),
         Seq("vec_id"), "left_anti"))
@@ -469,7 +471,7 @@ object AnnServing {
     * two operating epochs needs, at zero storage cost beyond what the
     * version log already retains. The horizon is GC retention:
     * an expired version fails loudly in the resolve
-    * ([[graft.queries.EmbQueries.readManifestAt]]), never serves a
+    * ([[IndexStore.readManifestAt]]), never serves a
     * partially-deleted index.
     */
   def scoreBatchAtVersion(
@@ -482,7 +484,7 @@ object AnnServing {
       nprobe: Int = 2,
       shortN: Int = graft.queries.EmbQueries.IvfPqShortN): DataFrame = {
     val (centPath, codesPath) =
-      graft.queries.EmbQueries.readManifestAt(spark, root, version)
+      IndexStore.readManifestAt(spark, root, version)
     scoreBatchAt(spark, centPath, codesPath, s"$root/codebook",
       spark.read.parquet(vectorsPath), batch, k, nprobe, shortN)
   }
@@ -558,7 +560,7 @@ object AnnServing {
     startScoringSink(stream, outDir, checkpoint, trigger) { batch =>
       val s = batch.sparkSession
       val (ver, centPath, codesPath) =
-        graft.queries.EmbQueries.readManifest(s, manifestRoot)
+        IndexStore.readManifest(s, manifestRoot)
       scoreBatchLabelAwareAt(s, centPath, codesPath, vectorsPath,
         depthsPath, batch, k, indexVersion = Some(ver))
         .withColumn("version", lit(ver))
@@ -567,34 +569,36 @@ object AnnServing {
   // ------------------------------------------------------------------
   // THE ONE INDEX WRITER. Every change to an ANN index after its build
   // is a versioned op below (upsert, rebalance, retrain epoch, delete,
-  // compaction), published through the SAME publishVersion +
-  // MANIFEST.json machinery the batch publish chain owns
-  // (EmbQueries.publishVersion / publishOrConflict / readManifest /
-  // gcPlan). Nothing writes into an as-built index dir after
-  // EmbQueries.ensureServedIndex creates it, so the unversioned readers
-  // above (scoreBatch, scoreBatchBq, scoreBatchSq, scoreBatchAdaptive)
-  // read an immutable artifact, and a maintained index is served from
-  // its manifest (startPublishedServingSink, scoreBatchAt).
+  // compaction). Each op is a build closure run through
+  // graft.index.IndexStore.commitCas, the store's one forward commit:
+  // the closure reads the published View, writes version v+1's fresh
+  // dirs (View.next — named with the writer's attempt tag) and returns
+  // the (centroids, codes) v+1 records, or None when there is nothing
+  // to publish; the commit is a compare-and-swap claim of slot v+1 plus
+  // one atomic manifest rename. A concurrent writer on the same root is
+  // a detected conflict: the loser's fresh dirs are deleted and the op
+  // rebases in place on the winner's view (within commitCas's attempt
+  // bound), never a lost update. Nothing writes into an as-built index
+  // dir after EmbQueries.ensureServedIndex creates it, so the
+  // unversioned readers above (scoreBatch, scoreBatchBq, scoreBatchSq,
+  // scoreBatchAdaptive) read an immutable artifact, and a maintained
+  // index is served from its manifest (startPublishedServingSink,
+  // scoreBatchAt).
   //
-  // Layout under `root`: MANIFEST.json + VERSION.<v>.json (the
-  // immutable log), centroids_v<v>/ dirs, code SEGMENT dirs, and the
-  // global codebook/ (maintenance never retrains it). The manifest's
-  // `codes` field is an ordered comma-separated list of immutable
-  // segment dirs — every consumer (scoreBatchAt, emb_ivfpq_published,
-  // gcPlan) already splits on ','. Each op writes version v+1's dirs
-  // fresh and then publishes them (publishNext); with `cas` the dir
-  // names carry the writer's attempt tag and the publish is a
-  // compare-and-swap on v, so a concurrent writer is a detected
-  // conflict, never a lost update.
+  // Layout under `root`: the IndexStore manifest + version log, the
+  // centroids_v<v>.<tag>/ dirs, code SEGMENT dirs, and the global
+  // codebook/ (maintenance never retrains it). The manifest's `codes`
+  // field is an ordered list of immutable segment dirs
+  // (IndexStore.segments splits it).
   //
   // Why this shape has no torn-index window and no overwrite-recache
   // hazard BY CONSTRUCTION:
   //   1. every write lands in a FRESH dir that no manifest references
   //      yet; the publish is one atomic rename. A crash at any point
-  //      leaves the old version serving intact, and the orphan v_next
-  //      dirs are overwritten by the checkpoint replay (same version
-  //      number re-derives from the unchanged manifest) or collected
-  //      by GC;
+  //      leaves the old version serving intact; the orphan v_next dirs
+  //      are overwritten by a same-driver replay (same version and tag
+  //      re-derive from the unchanged manifest), and a restarted
+  //      driver's sink sweeps the aged ones (gcStrayAttemptDirs);
   //   2. no plan ever reads a path an op replaces, so there is no
   //      stale file listing to refresh, no recached plan to defend
   //      against and no lineage to cut before a write.
@@ -614,56 +618,19 @@ object AnnServing {
   // Replay semantics (foreachBatch redelivery after a crash, BEFORE
   // or AFTER the publish): every op re-derives its inputs from the
   // manifest's CURRENT view. A pre-publish replay recomputes and
-  // republishes the same version. Post-publish, upsert and delete are
-  // strictly IDEMPOTENT (the dedup/anti-join finds nothing — zero
-  // rows, no publish); rebalance and the epoch are CONVERGING
-  // maintenance decisions, not no-ops — a replay re-measures the
-  // published view's health and may legitimately act again (e.g. a
-  // post-epoch state whose dominant region still trips the skew
-  // rule), publishing a strictly newer consistent version. Redelivery
-  // therefore never corrupts state; it can only advance maintenance.
-  // With a replayable source and this idempotent sink, a maintenance
-  // stream is exactly-once in the Structured Streaming sense.
+  // republishes the same version; a replay after a restart rolls the
+  // crashed driver's claim forward and rebases on it. Post-publish,
+  // upsert and delete are strictly IDEMPOTENT (the dedup/anti-join
+  // finds nothing — zero rows, no publish); rebalance and the epoch
+  // are CONVERGING maintenance decisions, not no-ops — a replay
+  // re-measures the published view's health and may legitimately act
+  // again (e.g. a post-epoch state whose dominant region still trips
+  // the skew rule), publishing a strictly newer consistent version.
+  // Redelivery therefore never corrupts state; it can only advance
+  // maintenance. With a replayable source and this idempotent sink, a
+  // maintenance stream is exactly-once in the Structured Streaming
+  // sense.
   // ------------------------------------------------------------------
-
-  /** The manifest's current view: (version, centroidsPath, ordered
-    * code-segment paths).
-    */
-  private def manifestView(
-      spark: SparkSession, root: String): (Int, String, Seq[String]) = {
-    val (v, cent, codes) =
-      graft.queries.EmbQueries.readManifest(spark, root)
-    (v, cent, codes.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
-  }
-
-  /** Version v+1's fresh dir `<name>_v<v+1>` under root. With `cas` it
-    * carries the writer's attempt tag
-    * ([[graft.queries.EmbQueries.attemptTag]]), so racing builders'
-    * dirs are disjoint and the slot claim decides whose dirs v+1
-    * records; the tag is stable within one driver, so a crash-retry
-    * overwrites its own dir either way.
-    */
-  private def nextDir(spark: SparkSession, root: String, v: Int,
-      cas: Boolean)(name: String): String =
-    s"$root/${name}_v${v + 1}" +
-      (if (cas) "." + graft.queries.EmbQueries.attemptTag(spark) else "")
-
-  /** Publish version v+1 over the view resolved at version v. `write`
-    * gets [[nextDir]] for v+1, writes the fresh dirs and returns the
-    * (centroids, codes) the version records. Without `cas` this is the
-    * single-writer publish; with it, the compare-and-swap on v — a lost
-    * race deletes this writer's dirs and throws
-    * ConcurrentPublishException, so a foreachBatch retry re-runs the op
-    * on the winner's view ([[graft.queries.EmbQueries.publishOrConflict]]).
-    */
-  private def publishNext(spark: SparkSession, root: String, v: Int,
-      cas: Boolean)(write: (String => String) => (String, String)): Unit = {
-    val (cent, codes) = write(nextDir(spark, root, v, cas))
-    if (cas)
-      graft.queries.EmbQueries.publishOrConflict(spark, root, v, cent, codes)
-    else
-      graft.queries.EmbQueries.publishVersion(spark, root, v + 1, cent, codes)
-  }
 
   /** Normalize an arriving upsert micro-batch to the index row shape:
     * (vec_id LONG, embedding ARRAY&lt;FLOAT&gt;, label INT — NULL when
@@ -800,22 +767,13 @@ object AnnServing {
   /** VERSIONED upsert: encode the batch against the published
     * centroids (encodeBatch — the batch build's arithmetic, so a
     * streamed index converges ROW-IDENTICAL to the batch-built one
-    * over the same vectors), dedup against the published view, write the fresh rows as ONE new
-    * immutable segment, publish version+1 whose segment list is the
-    * old list plus the new dir. O(batch) data written; the manifest
-    * rename is the only mutation of shared state.
-    *
-    * When `cas` is set the publish goes through the optimistic
-    * compare-and-swap commit ([[graft.queries.EmbQueries.commitCas]]):
-    * a concurrent writer on the same root becomes a rebase (the
-    * encode/dedup/segment-write re-runs against the racer's published
-    * view — the dedup makes the rebase idempotent under id overlap)
-    * instead of a silent lost update, and pathological contention
-    * surfaces as ConcurrentPublishException, which in a foreachBatch
-    * sink fails the micro-batch so the engine's retry continues the
-    * rebase. The default path stays the single-writer publish the
-    * existing chain pins (same version numbering in every
-    * non-conflict run).
+    * over the same vectors), dedup against the published view, write
+    * the fresh rows as ONE new immutable segment, publish version+1
+    * whose segment list is the old list plus the new dir. O(batch) data
+    * written; the manifest rename is the only mutation of shared state.
+    * Under a concurrent writer the encode/dedup/segment-write re-runs
+    * against the racer's published view (the dedup makes the rebase
+    * idempotent under id overlap).
     *
     * @return number of index rows the new version adds (0 = no new
     *         version published)
@@ -823,17 +781,12 @@ object AnnServing {
   def applyUpsertBatchVersioned(
       spark: SparkSession,
       root: String,
-      batch: DataFrame,
-      cas: Boolean = false): Long = {
+      batch: DataFrame): Long = {
     val b = normalizeUpsertBatch(batch)
     if (b.isEmpty) return 0L
-
-    // one attempt against a given manifest state: encode, dedup,
-    // write the fresh segment, return (segmentPath, freshCount) —
-    // None when every row is already present (no publish needed)
-    def attempt(v: Int, centPath: String, segs: Seq[String])
-        : Option[(String, Long)] = {
-      val rows = encodeBatch(spark, b, centPath, s"$root/codebook")
+    var inserted = 0L
+    IndexStore.commitCas(spark, root) { view =>
+      val rows = encodeBatch(spark, b, view.centroids, s"$root/codebook")
         .persist()
       rows.count()
       // full-view dedup: maintenance can change centroids between
@@ -841,68 +794,26 @@ object AnnServing {
       // the one its indexed row lives in (at 100 TB a point-lookup
       // against the id-keyed store; the 1-column scan of the 8-byte
       // code segments is the local stand-in)
-      val dupIds = graft.queries.EmbQueries.readSegments(spark,
-        segs.mkString(","))
+      val dupIds = IndexStore.readSegments(spark, view.codes)
         .join(broadcast(rows.select("vec_id")), Seq("vec_id"), "left_semi")
         .select("vec_id").distinct()
       val fresh = rows
         .join(broadcast(dupIds), Seq("vec_id"), "left_anti").persist()
-      val n = fresh.count()
+      inserted = fresh.count()
       val out =
-        if (n > 0) {
+        if (inserted > 0) {
           // overwrite: a crash-retry of the SAME batch re-derives the
           // same version number from the unchanged manifest and
           // rewrites the orphan dir cleanly
-          val seg = nextDir(spark, root, v, cas)("codes_up")
+          val seg = view.next("codes_up")
           fresh.write.mode("overwrite").partitionBy("cell").parquet(seg)
-          Some((seg, n))
+          Some((view.centroids, (view.segments :+ seg).mkString(",")))
         } else None
       fresh.unpersist()
       rows.unpersist()
       out
     }
-
-    if (!cas) {
-      val (v, centPath, segs) = manifestView(spark, root)
-      attempt(v, centPath, segs) match {
-        case Some((seg, n)) =>
-          graft.queries.EmbQueries.publishVersion(spark, root, v + 1,
-            centPath, (segs :+ seg).mkString(","))
-          n
-        case None => 0L
-      }
-    } else {
-      // CAS: the build closure re-runs per rebase; a rebase where the
-      // racer already inserted every id escapes without publishing an
-      // empty advance (the control throwable below, caught here). A
-      // conflicted attempt's segment dir is deleted before the rebase
-      // writes its own — no unreferenced dir survives the loop.
-      object AllRowsPresent extends scala.util.control.ControlThrowable
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      var inserted = 0L
-      var lastSeg: Option[String] = None
-      def dropLastSeg(): Unit = lastSeg.foreach { p =>
-        fs.delete(new org.apache.hadoop.fs.Path(p), true)
-        lastSeg = None
-      }
-      try {
-        graft.queries.EmbQueries.commitCas(spark, root) {
-          (v, centPath, codesCsv) =>
-            dropLastSeg()
-            val segs =
-              codesCsv.split(',').toSeq.map(_.trim).filter(_.nonEmpty)
-            attempt(v, centPath, segs) match {
-              case Some((seg, n)) =>
-                inserted = n
-                lastSeg = Some(seg)
-                (centPath, (segs :+ seg).mkString(","))
-              case None => throw AllRowsPresent
-            }
-        }
-      } catch { case AllRowsPresent => dropLastSeg() }
-      inserted
-    }
+    inserted
   }
 
   /** VERSIONED cell rebalance: same overgrown-cell detection and
@@ -925,91 +836,91 @@ object AnnServing {
       root: String,
       vectorsPath: String,
       num: Int = graft.queries.EmbQueries.RebalanceNum,
-      den: Int = graft.queries.EmbQueries.RebalanceDen,
-      cas: Boolean = false): Long = {
-    val (v, centPath, segs) = manifestView(spark, root)
-    val codes = graft.queries.EmbQueries.readSegments(spark,
-      segs.mkString(","))
-    val szRows = codes.groupBy("cell").agg(count(lit(1)).as("n"))
-      .collect()
-    val nCells = szRows.length.toLong
-    val total = szRows.map(_.getLong(1)).sum
-    val overgrown = szRows
-      .filter(r => den * r.getLong(1) * nCells > num * total)
-      .map(_.getInt(0)).sorted
-    if (overgrown.isEmpty) return 0L
+      den: Int = graft.queries.EmbQueries.RebalanceDen): Long = {
+    var nMoved = 0L
+    IndexStore.commitCas(spark, root) { view =>
+      nMoved = 0L
+      val codes = IndexStore.readSegments(spark, view.codes)
+      val szRows = codes.groupBy("cell").agg(count(lit(1)).as("n"))
+        .collect()
+      val nCells = szRows.length.toLong
+      val total = szRows.map(_.getLong(1)).sum
+      val overgrown = szRows
+        .filter(r => den * r.getLong(1) * nCells > num * total)
+        .map(_.getInt(0)).sorted
+      if (overgrown.isEmpty) None
+      else {
+        val cent = spark.read.parquet(view.centroids)
+        val maxLabel = cent.agg(max(col("c_label"))).collect()(0).getInt(0)
+        val newId: Map[Int, Int] = overgrown.zipWithIndex
+          .map { case (c, i) => c -> (maxLabel + i + 1) }.toMap
+        val ogCols = overgrown.map(Int.box).toSeq
 
-    val cent = spark.read.parquet(centPath)
-    val maxLabel = cent.agg(max(col("c_label"))).collect()(0).getInt(0)
-    val newId: Map[Int, Int] = overgrown.zipWithIndex
-      .map { case (c, i) => c -> (maxLabel + i + 1) }.toMap
-    val ogCols = overgrown.map(Int.box).toSeq
+        val vecs = spark.read.parquet(vectorsPath)
+          .select(col("vec_id"), col("embedding").cast("array<float>")
+            .as("mvec"))
+        // LEFT join + strict-inequality move rule: a row whose vector is
+        // missing from the store (store lag, partial restore) keeps NULL
+        // distances and stays in its cell — an inner join would silently
+        // DROP it from the consolidated segment. Seed A = the cell's
+        // smallest vec_id that HAS a vector; a cell of only vectorless
+        // rows gets no seed and moves nothing
+        val mem = codes.filter(col("cell").isin(ogCols: _*))
+          .join(vecs, Seq("vec_id"), "left")
+        val seedAV = mem.filter(col("mvec").isNotNull)
+          .groupBy("cell").agg(min(col("vec_id")).as("avid"))
+          .join(vecs.select(col("vec_id").as("avid"),
+            col("mvec").as("avec")), "avid")
+          .select("cell", "avec")
+        val dA = mem.join(broadcast(seedAV), Seq("cell"), "left")
+          .withColumn("d2a",
+            graft.functions.VecL2Sq.column(col("mvec"), col("avec")))
+        val wB = Window.partitionBy(col("cell"))
+          .orderBy(col("d2a").desc_nulls_last, col("vec_id"))
+        val seedBV = dA.withColumn("rn", row_number().over(wB))
+          .filter(col("rn") === 1)
+          .select(col("cell"), col("mvec").as("bvec"))
+        val moved = dA.join(broadcast(seedBV), "cell")
+          .withColumn("d2b",
+            graft.functions.VecL2Sq.column(col("mvec"), col("bvec")))
+          .select(col("vec_id"), col("codes"), col("label"),
+            when(col("d2b") < col("d2a"),
+              element_at(typedLit(newId), col("cell")))
+              .otherwise(col("cell")).as("cell"),
+            col("mvec"))
+        nMoved = moved.filter(col("cell") > maxLabel).count()
 
-    val vecs = spark.read.parquet(vectorsPath)
-      .select(col("vec_id"), col("embedding").cast("array<float>")
-        .as("mvec"))
-    // LEFT join + strict-inequality move rule: a row whose vector is
-    // missing from the store (store lag, partial restore) keeps NULL
-    // distances and stays in its cell — an inner join would silently
-    // DROP it from the consolidated segment. Seed A = the cell's
-    // smallest vec_id that HAS a vector; a cell of only vectorless rows
-    // gets no seed and moves nothing
-    val mem = codes.filter(col("cell").isin(ogCols: _*))
-      .join(vecs, Seq("vec_id"), "left")
-    val seedAV = mem.filter(col("mvec").isNotNull)
-      .groupBy("cell").agg(min(col("vec_id")).as("avid"))
-      .join(vecs.select(col("vec_id").as("avid"),
-        col("mvec").as("avec")), "avid")
-      .select("cell", "avec")
-    val dA = mem.join(broadcast(seedAV), Seq("cell"), "left")
-      .withColumn("d2a",
-        graft.functions.VecL2Sq.column(col("mvec"), col("avec")))
-    val wB = Window.partitionBy(col("cell"))
-      .orderBy(col("d2a").desc_nulls_last, col("vec_id"))
-    val seedBV = dA.withColumn("rn", row_number().over(wB))
-      .filter(col("rn") === 1)
-      .select(col("cell"), col("mvec").as("bvec"))
-    val moved = dA.join(broadcast(seedBV), "cell")
-      .withColumn("d2b",
-        graft.functions.VecL2Sq.column(col("mvec"), col("bvec")))
-      .select(col("vec_id"), col("codes"), col("label"),
-        when(col("d2b") < col("d2a"),
-          element_at(typedLit(newId), col("cell")))
-          .otherwise(col("cell")).as("cell"),
-        col("mvec"))
-    val nMoved = moved.filter(col("cell") > maxLabel).count()
-
-    // consolidated v+1 codes: split memberships + untouched cells —
-    // reads only the IMMUTABLE old segments, writes only fresh dirs
-    publishNext(spark, root, v, cas) { next =>
-      val codesNext = next("codes")
-      val centNext = next("centroids")
-      moved.select("vec_id", "codes", "label", "cell")
-        .unionByName(codes.filter(!col("cell").isin(ogCols: _*))
-          .select("vec_id", "codes", "label", "cell"))
-        .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-      val splitCent = moved
-        .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
-        .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
-        .groupBy("cell", "dim")
-        .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
-        .groupBy("cell")
-        .agg(transform(
-          array_sort(collect_list(struct(col("dim"), col("cv")))),
-          x => x.getField("cv")).as("cvec"))
-        .select(col("cell").as("c_label"), col("cvec"))
-      // an overgrown cell whose rows are ALL vectorless contributes no
-      // mean (posexplode drops NULL mvec) yet keeps its rows in
-      // codesNext — without its OLD centroid it would become
-      // unreachable by probing (the all-vectorless rescue the epoch
-      // does via its live/left_anti union)
-      val rescued = cent.filter(col("c_label").isin(ogCols: _*))
-        .join(splitCent.select("c_label"), Seq("c_label"), "left_anti")
-      splitCent
-        .unionByName(rescued)
-        .unionByName(cent.filter(!col("c_label").isin(ogCols: _*)))
-        .write.mode("overwrite").parquet(centNext)
-      (centNext, codesNext)
+        // consolidated v+1 codes: split memberships + untouched cells —
+        // reads only the IMMUTABLE old segments, writes only fresh dirs
+        val codesNext = view.next("codes")
+        val centNext = view.next("centroids")
+        moved.select("vec_id", "codes", "label", "cell")
+          .unionByName(codes.filter(!col("cell").isin(ogCols: _*))
+            .select("vec_id", "codes", "label", "cell"))
+          .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+        val splitCent = moved
+          .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
+          .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
+          .groupBy("cell", "dim")
+          .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
+          .groupBy("cell")
+          .agg(transform(
+            array_sort(collect_list(struct(col("dim"), col("cv")))),
+            x => x.getField("cv")).as("cvec"))
+          .select(col("cell").as("c_label"), col("cvec"))
+        // an overgrown cell whose rows are ALL vectorless contributes no
+        // mean (posexplode drops NULL mvec) yet keeps its rows in
+        // codesNext — without its OLD centroid it would become
+        // unreachable by probing (the all-vectorless rescue the epoch
+        // does via its live/left_anti union)
+        val rescued = cent.filter(col("c_label").isin(ogCols: _*))
+          .join(splitCent.select("c_label"), Seq("c_label"), "left_anti")
+        splitCent
+          .unionByName(rescued)
+          .unionByName(cent.filter(!col("c_label").isin(ogCols: _*)))
+          .write.mode("overwrite").parquet(centNext)
+        Some((centNext, codesNext))
+      }
     }
     nMoved
   }
@@ -1036,82 +947,81 @@ object AnnServing {
       root: String,
       vectorsPath: String,
       num: Int = graft.queries.EmbQueries.RebalanceNum,
-      den: Int = graft.queries.EmbQueries.RebalanceDen,
-      cas: Boolean = false): (Boolean, Long) = {
-    val (v, centPath, segs) = manifestView(spark, root)
-    val codes = graft.queries.EmbQueries.readSegments(spark,
-      segs.mkString(","))
-    val centRaw = spark.read.parquet(centPath)
-    val cent = centRaw
-      .select(col("c_label").as("clab"), col("cvec"))
-      .groupBy("clab").agg(first(col("cvec")).as("cvec"))
-    val vecs = spark.read.parquet(vectorsPath)
-      .select(col("vec_id"),
-        col("embedding").cast("array<float>").as("mvec"))
-    val szRows = codes.groupBy("cell").agg(count(lit(1)).as("cn"))
-      .collect()
-    val nCells = szRows.length.toLong
-    val total = szRows.map(_.getLong(1)).sum
-    val maxCell = if (szRows.isEmpty) 0L else szRows.map(_.getLong(1)).max
-    val w = Window.partitionBy(col("vec_id"))
-      .orderBy(col("d2").asc_nulls_last, col("clab"))
-    val mis = codes.select("vec_id", "cell")
-      .join(vecs, Seq("vec_id"), "left")
-      .crossJoin(broadcast(cent))
-      .withColumn("d2",
-        graft.functions.VecL2Sq.column(col("mvec"), col("cvec")))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .filter(col("d2").isNotNull && col("clab") =!= col("cell"))
-      .count()
-    val skew = den.toLong * maxCell * nCells > num.toLong * total
-    val drift = total > 0 && mis * 10 >= total
-    if (!(skew || drift)) return (false, mis)
-
-    // M-step: per-cell means over the current memberships
-    val cent3 = codes.select("vec_id", "cell")
-      .join(vecs, Seq("vec_id"))
-      .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
-      .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
-      .groupBy("cell", "dim")
-      .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
-      .groupBy("cell")
-      .agg(transform(
-        array_sort(collect_list(struct(col("dim"), col("cv")))),
-        x => x.getField("cv")).as("cvec"))
-      .select(col("cell").as("c_label"), col("cvec"))
-    val cent3B = cent3
-      .select(col("c_label").as("nlab"), col("cvec").as("ncvec"))
-    // E-step: reassign every vectored row; NULL distance keeps cell
-    val wE = Window.partitionBy(col("vec_id"))
-      .orderBy(col("nd2").asc_nulls_last, col("nlab"))
-    val asg = codes
-      .join(vecs, Seq("vec_id"), "left")
-      .crossJoin(broadcast(cent3B))
-      .withColumn("nd2",
-        graft.functions.VecL2Sq.column(col("mvec"), col("ncvec")))
-      .withColumn("rn", row_number().over(wE))
-      .filter(col("rn") === 1)
-      .select(col("vec_id"), col("codes"), col("label"),
-        when(col("nd2").isNotNull, col("nlab"))
-          .otherwise(col("cell")).as("cell"))
-    publishNext(spark, root, v, cas) { next =>
-      val codesNext = next("codes")
-      val centNext = next("centroids")
-      asg.write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-      // final centroids read back off the WRITTEN codes (a fresh dir —
-      // reading it is safe): epoch means for surviving cells, plus the
-      // old centroid for any all-vectorless cell the means pass missed
-      val live = spark.read.parquet(codesNext)
-        .select(col("cell").as("c_label")).distinct()
-      cent3.join(live, Seq("c_label"), "left_semi")
-        .unionByName(centRaw
-          .join(live, Seq("c_label"), "left_semi")
-          .join(cent3.select("c_label"), Seq("c_label"), "left_anti"))
-        .write.mode("overwrite").parquet(centNext)
-      (centNext, codesNext)
+      den: Int = graft.queries.EmbQueries.RebalanceDen): (Boolean, Long) = {
+    var mis = 0L
+    val published = IndexStore.commitCas(spark, root) { view =>
+      val codes = IndexStore.readSegments(spark, view.codes)
+      val centRaw = spark.read.parquet(view.centroids)
+      val cent = centRaw
+        .select(col("c_label").as("clab"), col("cvec"))
+        .groupBy("clab").agg(first(col("cvec")).as("cvec"))
+      val vecs = spark.read.parquet(vectorsPath)
+        .select(col("vec_id"),
+          col("embedding").cast("array<float>").as("mvec"))
+      val szRows = codes.groupBy("cell").agg(count(lit(1)).as("cn"))
+        .collect()
+      val nCells = szRows.length.toLong
+      val total = szRows.map(_.getLong(1)).sum
+      val maxCell = if (szRows.isEmpty) 0L else szRows.map(_.getLong(1)).max
+      val w = Window.partitionBy(col("vec_id"))
+        .orderBy(col("d2").asc_nulls_last, col("clab"))
+      mis = codes.select("vec_id", "cell")
+        .join(vecs, Seq("vec_id"), "left")
+        .crossJoin(broadcast(cent))
+        .withColumn("d2",
+          graft.functions.VecL2Sq.column(col("mvec"), col("cvec")))
+        .withColumn("rn", row_number().over(w))
+        .filter(col("rn") === 1)
+        .filter(col("d2").isNotNull && col("clab") =!= col("cell"))
+        .count()
+      val skew = den.toLong * maxCell * nCells > num.toLong * total
+      val drift = total > 0 && mis * 10 >= total
+      if (!(skew || drift)) None
+      else {
+        // M-step: per-cell means over the current memberships
+        val cent3 = codes.select("vec_id", "cell")
+          .join(vecs, Seq("vec_id"))
+          .select(col("cell"), posexplode(col("mvec")).as(Seq("dim", "v")))
+          .withColumn("vi", graft.queries.EmbQueries.snap6(col("v")))
+          .groupBy("cell", "dim")
+          .agg(expr(graft.queries.EmbQueries.mean6Expr("vi")).as("cv"))
+          .groupBy("cell")
+          .agg(transform(
+            array_sort(collect_list(struct(col("dim"), col("cv")))),
+            x => x.getField("cv")).as("cvec"))
+          .select(col("cell").as("c_label"), col("cvec"))
+        val cent3B = cent3
+          .select(col("c_label").as("nlab"), col("cvec").as("ncvec"))
+        // E-step: reassign every vectored row; NULL distance keeps cell
+        val wE = Window.partitionBy(col("vec_id"))
+          .orderBy(col("nd2").asc_nulls_last, col("nlab"))
+        val asg = codes
+          .join(vecs, Seq("vec_id"), "left")
+          .crossJoin(broadcast(cent3B))
+          .withColumn("nd2",
+            graft.functions.VecL2Sq.column(col("mvec"), col("ncvec")))
+          .withColumn("rn", row_number().over(wE))
+          .filter(col("rn") === 1)
+          .select(col("vec_id"), col("codes"), col("label"),
+            when(col("nd2").isNotNull, col("nlab"))
+              .otherwise(col("cell")).as("cell"))
+        val codesNext = view.next("codes")
+        val centNext = view.next("centroids")
+        asg.write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+        // final centroids read back off the WRITTEN codes (a fresh dir —
+        // reading it is safe): epoch means for surviving cells, plus the
+        // old centroid for any all-vectorless cell the means pass missed
+        val live = spark.read.parquet(codesNext)
+          .select(col("cell").as("c_label")).distinct()
+        cent3.join(live, Seq("c_label"), "left_semi")
+          .unionByName(centRaw
+            .join(live, Seq("c_label"), "left_semi")
+            .join(cent3.select("c_label"), Seq("c_label"), "left_anti"))
+          .write.mode("overwrite").parquet(centNext)
+        Some((centNext, codesNext))
+      }
     }
-    (true, mis)
+    (published.nonEmpty, mis)
   }
 
   /** VERSIONED delete: survivors of the published view minus the
@@ -1127,22 +1037,22 @@ object AnnServing {
   def applyDeleteBatchVersioned(
       spark: SparkSession,
       root: String,
-      batch: DataFrame,
-      cas: Boolean = false): Long = {
+      batch: DataFrame): Long = {
     val ids = batch.select(col("vec_id").cast("long").as("vec_id"))
       .distinct()
     if (ids.isEmpty) return 0L
-    val (v, centPath, segs) = manifestView(spark, root)
-    val codes = graft.queries.EmbQueries.readSegments(spark,
-      segs.mkString(","))
-    val removed = codes.join(broadcast(ids), Seq("vec_id"), "left_semi")
-      .count()
-    if (removed == 0L) return 0L
-    publishNext(spark, root, v, cas) { next =>
-      val codesNext = next("codes")
-      codes.join(broadcast(ids), Seq("vec_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-      (centPath, codesNext)
+    var removed = 0L
+    IndexStore.commitCas(spark, root) { view =>
+      val codes = IndexStore.readSegments(spark, view.codes)
+      removed = codes.join(broadcast(ids), Seq("vec_id"), "left_semi")
+        .count()
+      if (removed == 0L) None
+      else {
+        val codesNext = view.next("codes")
+        codes.join(broadcast(ids), Seq("vec_id"), "left_anti")
+          .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+        Some((view.centroids, codesNext))
+      }
     }
     removed
   }
@@ -1169,27 +1079,26 @@ object AnnServing {
   def applyCompactionIfDue(
       spark: SparkSession,
       root: String,
-      maxSegments: Int = 8,
-      cas: Boolean = false): Boolean = {
-    val (v, centPath, segs) = manifestView(spark, root)
-    if (segs.size <= maxSegments) return false
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bySize = segs
-      .map(p => (p, fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(p)).getLength))
-      .sortBy { case (p, bytes) => (bytes, p) }
-    val nMerge = segs.size - maxSegments + 1
-    val merge = bySize.take(nMerge).map(_._1)
-    val kept = segs.filterNot(merge.toSet) // manifest order preserved
-    publishNext(spark, root, v, cas) { next =>
-      val codesNext = next("codes")
-      graft.queries.EmbQueries.readSegments(spark, merge.mkString(","))
-        .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
-      (centPath, (kept :+ codesNext).mkString(","))
-    }
-    true
-  }
+      maxSegments: Int = 8): Boolean =
+    IndexStore.commitCas(spark, root) { view =>
+      val segs = view.segments
+      if (segs.size <= maxSegments) None
+      else {
+        val fs = new org.apache.hadoop.fs.Path(root)
+          .getFileSystem(spark.sparkContext.hadoopConfiguration)
+        val bySize = segs
+          .map(p => (p, fs.getContentSummary(
+            new org.apache.hadoop.fs.Path(p)).getLength))
+          .sortBy { case (p, bytes) => (bytes, p) }
+        val nMerge = segs.size - maxSegments + 1
+        val merge = bySize.take(nMerge).map(_._1)
+        val kept = segs.filterNot(merge.toSet) // manifest order preserved
+        val codesNext = view.next("codes")
+        IndexStore.readSegments(spark, merge.mkString(","))
+          .write.mode("overwrite").partitionBy("cell").parquet(codesNext)
+        Some((view.centroids, (kept :+ codesNext).mkString(",")))
+      }
+    }.nonEmpty
 
   /** Re-derive the (label -> nprobe) serving side table against the
     * manifest's CURRENT version — the post-epoch refresh that keeps
@@ -1218,7 +1127,7 @@ object AnnServing {
       vectorsPath: String,
       outPath: String): Int = {
     val (ver, centPath, codesPath) =
-      graft.queries.EmbQueries.readManifest(spark, root)
+      IndexStore.readManifest(spark, root)
     val e = spark.read.parquet(vectorsPath)
       .select(col("vec_id"),
         col("embedding").cast("array<float>").as("embedding"),
@@ -1238,7 +1147,7 @@ object AnnServing {
       .withColumn("arn", row_number().over(wA))
       .filter(col("arn") <= 4)
       .select(col("a_id"), col("label").as("cell"), col("arn")))
-    val cells = graft.queries.EmbQueries.readSegments(spark, codesPath)
+    val cells = IndexStore.readSegments(spark, codesPath)
       .select(col("vec_id"), col("cell"))
     import spark.implicits._
     val ns = Seq(2, 3, 4).toDF("np")
@@ -1306,7 +1215,7 @@ object AnnServing {
       vectorsPath: String,
       outPath: String): Int = {
     val (ver, centPath, codesPath) =
-      graft.queries.EmbQueries.readManifest(spark, root)
+      IndexStore.readManifest(spark, root)
     val vectors = spark.read.parquet(vectorsPath)
       .select(col("vec_id"),
         col("embedding").cast("array<float>").as("embedding"),
@@ -1402,7 +1311,7 @@ object AnnServing {
     // ONE pruned code scan; per-query shortlist cut at ITS sn
     val wShort = Window.partitionBy(col("qid"))
       .orderBy(col("pq_d2"), col("vec_id"))
-    val short = graft.queries.EmbQueries.readSegments(spark, codesPath)
+    val short = IndexStore.readSegments(spark, codesPath)
       .filter(col("cell").isin(probedCells.map(Int.box): _*))
       .join(broadcast(probe), Seq("cell"))
       .filter(col("vec_id") =!= col("qid"))
@@ -1456,7 +1365,7 @@ object AnnServing {
     startScoringSink(stream, outDir, checkpoint, trigger) { batch =>
       val s = batch.sparkSession
       val (ver, centPath, codesPath) =
-        graft.queries.EmbQueries.readManifest(s, manifestRoot)
+        IndexStore.readManifest(s, manifestRoot)
       scoreBatchBudgetAwareAt(s, centPath, codesPath,
         s"$manifestRoot/codebook", vectorsPath, budgetsPath, batch, k,
         indexVersion = Some(ver))
@@ -1488,7 +1397,14 @@ object AnnServing {
     * behind it is. This keeps the O(corpus) exact-truth pass out of
     * the steady-state upsert path — the per-batch cost an ingest-heavy
     * stream at 100 TB cannot pay — while epoch-class moves keep the
-    * same-batch consistency guarantee.
+    * same-batch consistency guarantee. The retention step also sweeps
+    * aged stray attempt dirs and manifest temp files a crashed driver
+    * left behind (IndexStore.gcStrayAttemptDirs, default grace).
+    *
+    * Every op commits by compare-and-swap, so a zombie twin of this sink
+    * (a failed-over driver's old instance still holding the foreachBatch
+    * open) is a detected conflict and a rebase, never a lost update.
+    * `casPublish` is ignored; it stays for callers that still pass it.
     */
   def startVersionedSelfHealingSink(
       stream: DataFrame,
@@ -1506,19 +1422,13 @@ object AnnServing {
       trigger: Trigger = Trigger.AvailableNow()): StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, _) =>
       val s = batch.sparkSession
-      val v0 = graft.queries.EmbQueries.readManifest(s, root)._1
-      // casPublish hardens the per-batch ops against a zombie twin of
-      // this sink (a failed-over driver's old instance still holding
-      // the foreachBatch open) — its publish becomes a detected
-      // conflict/rebase instead of a silent lost update
-      applyUpsertBatchVersioned(s, root, batch, cas = casPublish)
-      val vUpsert = graft.queries.EmbQueries.readManifest(s, root)._1
-      applyRebalanceVersioned(s, root, vectorsPath, num, den,
-        cas = casPublish)
-      applyRetrainEpochIfDueVersioned(s, root, vectorsPath, num, den,
-        cas = casPublish)
-      applyCompactionIfDue(s, root, maxSegments, cas = casPublish)
-      val vEnd = graft.queries.EmbQueries.readManifest(s, root)._1
+      val v0 = IndexStore.readManifest(s, root)._1
+      applyUpsertBatchVersioned(s, root, batch)
+      val vUpsert = IndexStore.readManifest(s, root)._1
+      applyRebalanceVersioned(s, root, vectorsPath, num, den)
+      applyRetrainEpochIfDueVersioned(s, root, vectorsPath, num, den)
+      applyCompactionIfDue(s, root, maxSegments)
+      val vEnd = IndexStore.readManifest(s, root)._1
       val consolidated = vEnd > vUpsert
       def due(path: String): Boolean = {
         if (vEnd == v0) return false          // nothing moved
@@ -1533,6 +1443,7 @@ object AnnServing {
         if (due(dp)) deriveLabelDepths(s, root, vectorsPath, dp))
       budgetsPath.foreach(bp =>
         if (due(bp)) deriveLabelBudgets(s, root, vectorsPath, bp))
-      graft.queries.EmbQueries.gcVersions(s, root, keepVersions)
+      IndexStore.gcVersions(s, root, keepVersions)
+      IndexStore.gcStrayAttemptDirs(s, root)
     }
 }

@@ -86,7 +86,7 @@ class CheckpointInstallSpec extends AnyFunSuite {
       .parquet(s"$root/codes_v1")
     spark.read.parquet(s"$idx/centroids").write.parquet(s"$root/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$root/codebook")
-    EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids_v1", s"$root/codes_v1")
     val vectorsPath = s"$dir/embeddings.parquet"
     val v = spark.read.parquet(vectorsPath).filter(col("vec_id") === 7)

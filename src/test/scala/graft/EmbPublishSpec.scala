@@ -41,7 +41,7 @@ class EmbPublishSpec extends AnyFunSuite {
 
     val root = indexRoot
     val (v, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, root)
+      index.IndexStore.readManifest(spark, root)
     assert(v == 3)
     assert(centPath.endsWith("centroids_rt"))
     assert(codesPath.endsWith("codes_rt"))
@@ -57,7 +57,7 @@ class EmbPublishSpec extends AnyFunSuite {
     val v1CentBefore = filesOf("centroids")
     val v2CodesBefore = filesOf("codes_reb")
     val v2CentBefore = filesOf("centroids_reb")
-    queries.EmbQueries.publishVersion(spark, root, 3,
+    index.IndexStore.publishVersion(spark, root, 3,
       s"$root/centroids_rt", s"$root/codes_rt")
     assert(filesOf("codes") == v1CodesBefore)
     assert(filesOf("centroids") == v1CentBefore)
@@ -66,9 +66,9 @@ class EmbPublishSpec extends AnyFunSuite {
 
     // ROLLBACK: republish v1; the same query now serves the as-built
     // index, row-identical to emb_ivfpq_served
-    queries.EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids", s"$root/codes")
-    val (v1, c1, k1) = queries.EmbQueries.readManifest(spark, root)
+    val (v1, c1, k1) = index.IndexStore.readManifest(spark, root)
     assert(v1 == 1 && c1.endsWith("centroids") && k1.endsWith("codes"))
     val rolled = Registry.byName("emb_ivfpq_published").build(spark, dir)
       .collect()
@@ -81,9 +81,9 @@ class EmbPublishSpec extends AnyFunSuite {
     assert(rolledPairs == served, s"rolled=$rolledPairs served=$served")
 
     // leave the published state at v3 — the oracle's pinned version
-    queries.EmbQueries.publishVersion(spark, root, 3,
+    index.IndexStore.publishVersion(spark, root, 3,
       s"$root/centroids_rt", s"$root/codes_rt")
-    assert(queries.EmbQueries.readManifest(spark, root)._1 == 3)
+    assert(index.IndexStore.readManifest(spark, root)._1 == 3)
   }
 
   test("version GC: expired-only dirs deleted, shared/retained/external kept") {
@@ -100,39 +100,39 @@ class EmbPublishSpec extends AnyFunSuite {
     val sharedK = mkDir("codes_shared") // v2 and v3 share the codes dir
     val v3c = mkDir("cent_v3")
     val ext = "/definitely/external/artifacts" // outside root: never offered
-    queries.EmbQueries.publishVersion(spark, root, 1, v1c, v1k)
-    queries.EmbQueries.publishVersion(spark, root, 2, v2c, sharedK)
-    queries.EmbQueries.publishVersion(spark, root, 3, v3c, sharedK)
-    queries.EmbQueries.publishVersion(spark, root, 4, v3c, ext)
+    index.IndexStore.publishVersion(spark, root, 1, v1c, v1k)
+    index.IndexStore.publishVersion(spark, root, 2, v2c, sharedK)
+    index.IndexStore.publishVersion(spark, root, 3, v3c, sharedK)
+    index.IndexStore.publishVersion(spark, root, 4, v3c, ext)
 
     // keep 3 => only v1 expires; its two dirs are the whole plan
     val (retained, expired, dirs) =
-      queries.EmbQueries.gcPlan(spark, root, keep = 3)
+      index.IndexStore.gcPlan(spark, root, keep = 3)
     assert(retained == Seq(2, 3, 4) && expired == Seq(1))
     assert(dirs.toSet == Set(v1c, v1k), s"plan: $dirs")
 
-    val deleted = queries.EmbQueries.gcVersions(spark, root, keep = 3)
+    val deleted = index.IndexStore.gcVersions(spark, root, keep = 3)
     assert(deleted == 2)
     assert(!new java.io.File(v1c).exists() && !new java.io.File(v1k).exists())
     // shared + retained dirs untouched, manifest still the published v4
     assert(new java.io.File(sharedK).exists() && new java.io.File(v2c).exists())
-    assert(queries.EmbQueries.readManifest(spark, root)._1 == 4)
-    assert(queries.EmbQueries.listVersions(spark, root).map(_._1) ==
+    assert(index.IndexStore.readManifest(spark, root)._1 == 4)
+    assert(index.IndexStore.listVersions(spark, root).map(_._1) ==
       Seq(2, 3, 4))
 
     // keep 2 => v2 expires; sharedK survives (v3 still references it)
-    val (_, exp2, dirs2) = queries.EmbQueries.gcPlan(spark, root, keep = 2)
+    val (_, exp2, dirs2) = index.IndexStore.gcPlan(spark, root, keep = 2)
     assert(exp2 == Seq(2) && dirs2 == Seq(v2c), s"plan2: $dirs2")
-    queries.EmbQueries.gcVersions(spark, root, keep = 2)
+    index.IndexStore.gcVersions(spark, root, keep = 2)
     assert(new java.io.File(sharedK).exists() && !new java.io.File(v2c).exists())
 
     // keep 1 => v3 expires; its cent dir is shared with v4 (kept) and
     // the external codes path is never offered for deletion
-    val (_, exp3, dirs3) = queries.EmbQueries.gcPlan(spark, root, keep = 1)
+    val (_, exp3, dirs3) = index.IndexStore.gcPlan(spark, root, keep = 1)
     assert(exp3 == Seq(3) && dirs3 == Seq(sharedK), s"plan3: $dirs3")
 
     // more retained than published: a provable no-op
-    val (r4, e4, d4) = queries.EmbQueries.gcPlan(spark, root, keep = 10)
+    val (r4, e4, d4) = index.IndexStore.gcPlan(spark, root, keep = 10)
     assert(r4 == Seq(3, 4) && e4.isEmpty && d4.isEmpty)
 
     // ROLLBACK + GC: republish v3 (an OLD version — the live manifest
@@ -140,15 +140,15 @@ class EmbPublishSpec extends AnyFunSuite {
     // newest (v4) AND the published v3 — nothing the live manifest
     // references is ever offered for deletion, and gcVersions leaves
     // serving intact
-    queries.EmbQueries.publishVersion(spark, root, 3, v3c, sharedK)
-    assert(queries.EmbQueries.readManifest(spark, root)._1 == 3)
-    val (r5, e5, d5) = queries.EmbQueries.gcPlan(spark, root, keep = 1)
+    index.IndexStore.publishVersion(spark, root, 3, v3c, sharedK)
+    assert(index.IndexStore.readManifest(spark, root)._1 == 3)
+    val (r5, e5, d5) = index.IndexStore.gcPlan(spark, root, keep = 1)
     assert(r5 == Seq(3, 4) && e5.isEmpty && d5.isEmpty,
       s"rollback GC must retain the published version: $r5 $e5 $d5")
-    queries.EmbQueries.gcVersions(spark, root, keep = 1)
+    index.IndexStore.gcVersions(spark, root, keep = 1)
     assert(new java.io.File(sharedK).exists() &&
       new java.io.File(v3c).exists())
-    val (_, cRoll, kRoll) = queries.EmbQueries.readManifest(spark, root)
+    val (_, cRoll, kRoll) = index.IndexStore.readManifest(spark, root)
     assert(new java.io.File(cRoll).exists() &&
       new java.io.File(kRoll).exists(),
       "GC after rollback deleted dirs the live manifest points at")

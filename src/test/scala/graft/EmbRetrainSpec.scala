@@ -65,15 +65,15 @@ class EmbRetrainSpec extends AnyFunSuite {
     val root = indexRoot
     // (3) manifest final state + rollback both ways
     val (v, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, root)
+      index.IndexStore.readManifest(spark, root)
     assert(v == 3 && centPath.endsWith("centroids_rt") &&
       codesPath.endsWith("codes_rt"))
-    queries.EmbQueries.publishVersion(spark, root, 2,
+    index.IndexStore.publishVersion(spark, root, 2,
       s"$root/centroids_reb", s"$root/codes_reb")
-    assert(queries.EmbQueries.readManifest(spark, root)._1 == 2)
-    queries.EmbQueries.publishVersion(spark, root, 3,
+    assert(index.IndexStore.readManifest(spark, root)._1 == 2)
+    index.IndexStore.publishVersion(spark, root, 3,
       s"$root/centroids_rt", s"$root/codes_rt")
-    val (v3, c3, k3) = queries.EmbQueries.readManifest(spark, root)
+    val (v3, c3, k3) = index.IndexStore.readManifest(spark, root)
     assert(v3 == 3 && c3.endsWith("centroids_rt") &&
       k3.endsWith("codes_rt"))
     val residue = Option(new java.io.File(root).listFiles())

@@ -76,7 +76,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
   private def servedAnswers(root: String, vecsPath: String,
       batch: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long, Double)] = {
     val (_, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, root)
+      index.IndexStore.readManifest(spark, root)
     graft.streaming.AnnServing.scoreBatchAt(spark, centPath, codesPath,
       s"$root/codebook", spark.read.parquet(vecsPath), batch)
       .collect()
@@ -107,7 +107,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     spark.read.parquet(s"$idx/centroids")
       .write.parquet(s"$vroot/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$vroot/codebook")
-    queries.EmbQueries.publishVersion(spark, vroot, 1,
+    index.IndexStore.publishVersion(spark, vroot, 1,
       s"$vroot/centroids_v1", s"$vroot/codes_v1")
 
     // anchor query batch: three real vectors
@@ -121,20 +121,23 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     val nUp = graft.streaming.AnnServing
       .applyUpsertBatchVersioned(spark, vroot, batch)
     assert(nUp == rows.length.toLong, s"upsert appended $nUp")
-    val (v2, c2, k2) = queries.EmbQueries.readManifest(spark, vroot)
+    val (v2, c2, k2) = index.IndexStore.readManifest(spark, vroot)
     assert(v2 == 2 && c2.endsWith("centroids_v1"))
-    assert(k2 == s"$vroot/codes_v1,$vroot/codes_up_v2", k2)
+    // op-written dirs carry the writer's attempt tag
+    val tag = index.IndexStore.attemptTag(spark)
+    assert(k2 == s"$vroot/codes_v1,$vroot/codes_up_v2.$tag", k2)
     // v1 artifacts untouched by the publish (immutability)
     assert(filesOf(s"$vroot/codes_v1") == v1Codes)
     assert(filesOf(s"$vroot/centroids_v1") == v1Cent)
     val answersV2 = servedAnswers(vroot, augPath, anchors)
 
-    // 2) CRASH WINDOW: an orphan unpublished v3 dir (a torn write of
-    // the NEXT version) is invisible — manifest and answers unchanged
+    // 2) CRASH WINDOW: an orphan unpublished v3 dir (this writer's torn
+    // write of the NEXT version) is invisible — manifest and answers
+    // unchanged
     spark.range(5).selectExpr("id AS vec_id", "array(1,2) AS codes",
       "CAST(id AS INT) AS label", "CAST(id AS INT) AS cell")
-      .write.partitionBy("cell").parquet(s"$vroot/codes_v3")
-    assert(queries.EmbQueries.readManifest(spark, vroot)._1 == 2)
+      .write.partitionBy("cell").parquet(s"$vroot/codes_v3.$tag")
+    assert(index.IndexStore.readManifest(spark, vroot)._1 == 2)
     assert(servedAnswers(vroot, augPath, anchors) == answersV2,
       "an unpublished dir changed serving")
 
@@ -142,14 +145,14 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     val movedV = graft.streaming.AnnServing
       .applyRebalanceVersioned(spark, vroot, augPath)
     assert(movedV > 0, "workload did not skew the index")
-    val (v3, _, k3) = queries.EmbQueries.readManifest(spark, vroot)
-    assert(v3 == 3 && k3 == s"$vroot/codes_v3", k3)
+    val (v3, _, k3) = index.IndexStore.readManifest(spark, vroot)
+    assert(v3 == 3 && k3 == s"$vroot/codes_v3.$tag", k3)
 
     // 4) versioned EPOCH when due -> v4
     val (ranV, _) = graft.streaming.AnnServing
       .applyRetrainEpochIfDueVersioned(spark, vroot, augPath)
     assert(ranV, "health rules did not trip")
-    assert(queries.EmbQueries.readManifest(spark, vroot)._1 == 4)
+    assert(index.IndexStore.readManifest(spark, vroot)._1 == 4)
 
     // 5) REPLAY IDEMPOTENCE (upsert/delete — the dedup guarantee): a
     // redelivered batch appends nothing and publishes nothing.
@@ -163,7 +166,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       .applyDeleteBatchVersioned(spark, vroot,
         spark.range(9000000L, 9000005L).toDF("vec_id")) == 0L,
       "deleting absent ids published a version")
-    assert(queries.EmbQueries.readManifest(spark, vroot)._1 == 4,
+    assert(index.IndexStore.readManifest(spark, vroot)._1 == 4,
       "a replayed no-op published a version")
 
     // 6a) TWIN EQUALITY vs the oracle-checked batch artifacts, on
@@ -179,12 +182,12 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     spark.read.parquet(s"$idx/centroids")
       .write.parquet(s"$broot/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$broot/codebook")
-    queries.EmbQueries.publishVersion(spark, broot, 1,
+    index.IndexStore.publishVersion(spark, broot, 1,
       s"$broot/centroids_v1", s"$broot/codes_v1")
     def assertPublishes(root: String, codesDir: String, centDir: String)
         : Unit = {
-      val (_, c, k) = queries.EmbQueries.readManifest(spark, root)
-      val (pk, bk) = (codesKey(queries.EmbQueries.readSegments(spark, k)),
+      val (_, c, k) = index.IndexStore.readManifest(spark, root)
+      val (pk, bk) = (codesKey(index.IndexStore.readSegments(spark, k)),
         codesKey(spark.read.parquet(codesDir)))
       assert(pk.exceptAll(bk).isEmpty && bk.exceptAll(pk).isEmpty,
         s"published codes != $codesDir")
@@ -204,8 +207,8 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     // corpus), so its rebalance (v2 -> v3) and epoch (v3 -> v4) are
     // recomputed here from the versions' raw artifacts
     def viewAt(v: Int) = {
-      val (c, k) = queries.EmbQueries.readManifestAt(spark, vroot, v)
-      (queries.EmbQueries.readSegments(spark, k), spark.read.parquet(c))
+      val (c, k) = index.IndexStore.readManifestAt(spark, vroot, v)
+      (index.IndexStore.readSegments(spark, k), spark.read.parquet(c))
     }
     val (codes2, cent2) = viewAt(2)
     val (codes3, cent3) = viewAt(3)
@@ -284,8 +287,8 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     assert(expectCent4.exceptAll(centKey(cent4)).isEmpty &&
       centKey(cent4).exceptAll(expectCent4).isEmpty,
       "epoch centroids differ from the recomputed M-step")
-    val (_, cPub, kPub) = queries.EmbQueries.readManifest(spark, vroot)
-    val vCodes = queries.EmbQueries.readSegments(spark, kPub)
+    val (_, cPub, kPub) = index.IndexStore.readManifest(spark, vroot)
+    val vCodes = index.IndexStore.readSegments(spark, kPub)
     val vCent = spark.read.parquet(cPub)
 
     // 7) INDEPENDENT POST-CHECK: zero vectored rows outside their
@@ -312,18 +315,18 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     // 8) ROLLBACK: republish v2 -> the upsert-era answers, exactly;
     // then back to v4
     val answersV4 = servedAnswers(vroot, augPath, anchors)
-    queries.EmbQueries.publishVersion(spark, vroot, 2,
-      s"$vroot/centroids_v1", s"$vroot/codes_v1,$vroot/codes_up_v2")
+    val (c2At, k2At) = index.IndexStore.readManifestAt(spark, vroot, 2)
+    index.IndexStore.publishVersion(spark, vroot, 2, c2At, k2At)
     assert(servedAnswers(vroot, augPath, anchors) == answersV2,
       "rollback did not restore the old version's answers")
-    queries.EmbQueries.publishVersion(spark, vroot, 4, cPub, kPub)
+    index.IndexStore.publishVersion(spark, vroot, 4, cPub, kPub)
     assert(servedAnswers(vroot, augPath, anchors) == answersV4)
 
     // 9) GC keep=1: published v4 retained, earlier exclusive segments
     // deleted, serving intact
-    val deleted = queries.EmbQueries.gcVersions(spark, vroot, keep = 1)
+    val deleted = index.IndexStore.gcVersions(spark, vroot, keep = 1)
     assert(deleted > 0)
-    assert(!new java.io.File(s"$vroot/codes_up_v2").exists(),
+    assert(!new java.io.File(index.IndexStore.segments(k2At).last).exists(),
       "expired upsert segment survived GC")
     assert(servedAnswers(vroot, augPath, anchors) == answersV4,
       "GC broke serving")
@@ -354,7 +357,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       spark.read.parquet(s"$idx/centroids")
         .write.parquet(s"$r/centroids_v1")
       spark.read.parquet(s"$idx/codebook").write.parquet(s"$r/codebook")
-      queries.EmbQueries.publishVersion(spark, r, 1,
+      index.IndexStore.publishVersion(spark, r, 1,
         s"$r/centroids_v1", s"$r/codes_v1")
     }
 
@@ -386,13 +389,13 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     val (ran, _) = graft.streaming.AnnServing
       .applyRetrainEpochIfDueVersioned(spark, droot, augPath)
     assert(ran)
-    queries.EmbQueries.gcVersions(spark, droot, keep = 3)
+    index.IndexStore.gcVersions(spark, droot, keep = 3)
 
-    val (vs, cs, ks) = queries.EmbQueries.readManifest(spark, sroot)
-    val (vd, cd, kd) = queries.EmbQueries.readManifest(spark, droot)
+    val (vs, cs, ks) = index.IndexStore.readManifest(spark, sroot)
+    val (vd, cd, kd) = index.IndexStore.readManifest(spark, droot)
     assert(vs == vd, s"sink published v$vs, direct v$vd")
-    val sC = queries.EmbQueries.readSegments(spark, ks)
-    val dC = queries.EmbQueries.readSegments(spark, kd)
+    val sC = index.IndexStore.readSegments(spark, ks)
+    val dC = index.IndexStore.readSegments(spark, kd)
     assert(codesKey(sC).exceptAll(codesKey(dC)).isEmpty)
     assert(codesKey(dC).exceptAll(codesKey(sC)).isEmpty)
     assert(centKey(spark.read.parquet(cs))
@@ -429,7 +432,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     spark.read.parquet(s"$idx/centroids")
       .write.parquet(s"$vroot/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$vroot/codebook")
-    queries.EmbQueries.publishVersion(spark, vroot, 1,
+    index.IndexStore.publishVersion(spark, vroot, 1,
       s"$vroot/centroids_v1", s"$vroot/codes_v1")
 
     // three tiny disjoint upserts: one clone of vectors 1..3 each —
@@ -442,10 +445,10 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       assert(graft.streaming.AnnServing
         .applyUpsertBatchVersioned(spark, vroot, batch) == 1L)
     }
-    val (v4, _, k4) = queries.EmbQueries.readManifest(spark, vroot)
+    val (v4, _, k4) = index.IndexStore.readManifest(spark, vroot)
     assert(v4 == 4 && k4.split(',').length == 4,
       s"expected 4 segments after 3 upserts, got $k4")
-    val before = queries.EmbQueries.readSegments(spark, k4)
+    val before = index.IndexStore.readSegments(spark, k4)
     val nBefore = before.count()
     val keyBefore = codesKey(before).collect().map(_.toString).sorted
     // fingerprint of the big base segment's data files — size-tiered
@@ -474,23 +477,23 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       .applyCompactionIfDue(spark, vroot, maxSegments = 4))
     assert(graft.streaming.AnnServing
       .applyCompactionIfDue(spark, vroot, maxSegments = 3))
-    val (v5, _, k5) = queries.EmbQueries.readManifest(spark, vroot)
+    val (v5, _, k5) = index.IndexStore.readManifest(spark, vroot)
     val segs5 = k5.split(',').toSeq
     assert(v5 == 5 && segs5.length == 3, k5)
     assert(segs5.contains(s"$vroot/codes_v1"),
       s"tiered compaction rewrote the big base segment: $k5")
     assert(fileKey(s"$vroot/codes_v1") == baseBefore,
       "base segment files changed across a tiered compaction")
-    val after = queries.EmbQueries.readSegments(spark, k5)
+    val after = index.IndexStore.readSegments(spark, k5)
     assert(after.count() == nBefore)
     assert(codesKey(after).collect().map(_.toString).sorted
       .sameElements(keyBefore), "compaction changed the row set")
     // and the segmented version remains rollback-able until GC
-    queries.EmbQueries.publishVersion(spark, vroot, 4,
+    index.IndexStore.publishVersion(spark, vroot, 4,
       s"$vroot/centroids_v1", k4)
-    assert(queries.EmbQueries
+    assert(index.IndexStore
       .readSegments(spark,
-        queries.EmbQueries.readManifest(spark, vroot)._3)
+        index.IndexStore.readManifest(spark, vroot)._3)
       .count() == nBefore)
     ()
   }
@@ -529,7 +532,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       spark.read.parquet(s"$idx/centroids")
         .write.parquet(s"$r/centroids_v1")
       spark.read.parquet(s"$idx/codebook").write.parquet(s"$r/codebook")
-      queries.EmbQueries.publishVersion(spark, r, 1,
+      index.IndexStore.publishVersion(spark, r, 1,
         s"$r/centroids_v1", s"$r/codes_v1")
     }
     def writeFile(in: String, name: String,
@@ -558,7 +561,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     // the restart with the same checkpoint must process ONLY batch B
     writeFile(in, "a.json", batchA)
     runSink()
-    val vMid = queries.EmbQueries.readManifest(spark, sroot)._1
+    val vMid = index.IndexStore.readManifest(spark, sroot)._1
     assert(vMid > 1, "batch A published nothing")
     writeFile(in, "b.json", batchB)
     runSink()
@@ -573,13 +576,13 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       graft.streaming.AnnServing.applyRetrainEpochIfDueVersioned(
         spark, droot, augPath)
       graft.streaming.AnnServing.applyCompactionIfDue(spark, droot, 8)
-      queries.EmbQueries.gcVersions(spark, droot, 3)
+      index.IndexStore.gcVersions(spark, droot, 3)
     }
-    val (vs, cs, ks) = queries.EmbQueries.readManifest(spark, sroot)
-    val (vd, cd, kd) = queries.EmbQueries.readManifest(spark, droot)
+    val (vs, cs, ks) = index.IndexStore.readManifest(spark, sroot)
+    val (vd, cd, kd) = index.IndexStore.readManifest(spark, droot)
     assert(vs == vd, s"restart chain published v$vs, twin v$vd")
-    val sC = queries.EmbQueries.readSegments(spark, ks)
-    val dC = queries.EmbQueries.readSegments(spark, kd)
+    val sC = index.IndexStore.readSegments(spark, ks)
+    val dC = index.IndexStore.readSegments(spark, kd)
     assert(codesKey(sC).exceptAll(codesKey(dC)).isEmpty)
     assert(codesKey(dC).exceptAll(codesKey(sC)).isEmpty)
     assert(centKey(spark.read.parquet(cs))
@@ -620,12 +623,12 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     Seq((0L, Seq(8, 8, 0, 0, 0, 0, 0, 0), 0, 0))
       .toDF("vec_id", "codes", "label", "cell")
       .write.partitionBy("cell").parquet(s"$root/codes_v1")
-    queries.EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids_v1", s"$root/codes_v1")
     assert(graft.streaming.AnnServing.applyUpsertBatchVersioned(
       spark, root, baseRows.drop(1)
         .toDF("vec_id", "embedding", "label")) == 119L)
-    val vQ = queries.EmbQueries.readManifest(spark, root)._1
+    val vQ = index.IndexStore.readManifest(spark, root)._1
     assert(vQ == 2)
 
     // the vector store: base + the upsert clones + the skew clones
@@ -676,7 +679,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     writeFile(in, "a.json", Seq(clone(6000000L, 0)))
     writeFile(in, "b.json", Seq(clone(7000000L, 0)))
     runSink()
-    assert(queries.EmbQueries.readManifest(spark, root)._1 == vQ + 2,
+    assert(index.IndexStore.readManifest(spark, root)._1 == vQ + 2,
       "upsert-only batches consolidated — quiescence assumption broke")
     assert(graft.streaming.AnnServing
       .listSideTableVersions(spark, depths) == Seq(vQ + 1),
@@ -689,7 +692,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     // batch, at the new published version
     writeFile(in, "c.json", skew.toSeq)
     runSink()
-    val vEnd = queries.EmbQueries.readManifest(spark, root)._1
+    val vEnd = index.IndexStore.readManifest(spark, root)._1
     assert(vEnd > vQ + 3,
       "skew batch published no consolidating advance")
     assert(graft.streaming.AnnServing
@@ -722,14 +725,14 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     }
     val c1 = mkdir("centroids_v1"); val k1 = mkdir("codes_v1")
     val c2 = mkdir("centroids_v2"); val k2 = mkdir("codes_v2")
-    queries.EmbQueries.publishVersion(spark, root, 1, c1, k1)
-    queries.EmbQueries.publishVersion(spark, root, 2, c2, k2)
+    index.IndexStore.publishVersion(spark, root, 1, c1, k1)
+    index.IndexStore.publishVersion(spark, root, 2, c2, k2)
     // rollback to v1 (same-content rewrite of VERSION.1.json — no
     // orphan), then the next maintenance op reuses version number 2
     // with DIFFERENT artifacts: the abandoned fork
-    queries.EmbQueries.publishVersion(spark, root, 1, c1, k1)
+    index.IndexStore.publishVersion(spark, root, 1, c1, k1)
     val c2b = mkdir("centroids_v2b"); val k2b = mkdir("codes_v2b")
-    queries.EmbQueries.publishVersion(spark, root, 2, c2b, k2b)
+    index.IndexStore.publishVersion(spark, root, 2, c2b, k2b)
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     def ex(p: String): Boolean =
@@ -738,16 +741,16 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
       "fork publish overwrote the old VERSION.2.json without a record")
     // the fork's dirs are in the GC plan even while few versions exist
     val (retained, _, deletable) =
-      queries.EmbQueries.gcPlan(spark, root, keep = 2)
+      index.IndexStore.gcPlan(spark, root, keep = 2)
     assert(retained == Seq(1, 2))
     assert(deletable.toSet == Set(c2, k2),
       s"fork-only dirs missing from the plan: $deletable")
-    assert(queries.EmbQueries.gcVersions(spark, root, keep = 2) == 2)
+    assert(index.IndexStore.gcVersions(spark, root, keep = 2) == 2)
     assert(!ex(c2) && !ex(k2), "fork dirs leaked")
     assert(!ex(s"$root/VERSION.2.orphan.0.json"), "orphan log leaked")
     // the live lineage is untouched
     assert(ex(c1) && ex(k1) && ex(c2b) && ex(k2b))
-    val (v, cp, kp) = queries.EmbQueries.readManifest(spark, root)
+    val (v, cp, kp) = index.IndexStore.readManifest(spark, root)
     assert(v == 2 && cp == c2b && kp == k2b)
     ()
   }
@@ -765,7 +768,7 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     val cents = Seq((0, Seq(0.25f, 0.25f)), (1, Seq(0.75f, 0.75f)))
       .toDF("c_label", "cvec")
     cents.write.parquet(s"$root/centroids_v1")
-    queries.EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids_v1", s"$root/codes_v1")
     val vecs = tmp("ann_rescue_vecs") + "/v.parquet"
     Seq((1L, Seq(0.75f, 0.75f), 7))
@@ -774,10 +777,10 @@ class EmbVersionedMaintenanceSpec extends AnyFunSuite {
     val moved = graft.streaming.AnnServing
       .applyRebalanceVersioned(spark, root, vecs)
     assert(moved == 0L, "vectorless rows must keep their cell")
-    val (v, cp, kp) = queries.EmbQueries.readManifest(spark, root)
+    val (v, cp, kp) = index.IndexStore.readManifest(spark, root)
     assert(v == 2, "overgrown detection must still publish v2")
     // every row survived, cell memberships unchanged
-    val after = queries.EmbQueries.readSegments(spark, kp)
+    val after = index.IndexStore.readSegments(spark, kp)
     assert(after.filter(col("cell") === 0).count() == 10)
     assert(after.filter(col("cell") === 1).count() == 1)
     // THE RESCUE: cell 0 (all-vectorless, overgrown) kept its OLD

@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-tree guards: every entry point builds its session from
   * graft.Session, the retired bench env knobs stay retired, and the ANN
   * index keeps its one writer (the versioned ops behind one sink
-  * builder).
+  * builder) and its one store (graft.index.IndexStore, CAS-only).
   */
 class SourceGuardSpec extends AnyFunSuite {
   private lazy val src: File =
@@ -72,7 +72,8 @@ class SourceGuardSpec extends AnyFunSuite {
       "startDeleteSink", "startAutoMaintainSink", "startSelfHealingSink",
       "scoreBatchLabelAware", "startLabelAwareServingSink", "startServingSink",
       "startBqServingSink", "startSqServingSink", "startAdaptiveServingSink",
-      "viewCodes", "startFanOutSink")
+      "viewCodes", "startFanOutSink", "publishOrConflict",
+      "maintain_versioned_cas")
     val word = ("\\b(" + retired.mkString("|") + ")\\b").r
     val hits = Files.walk(src.toPath).iterator.asScala
       .filter(p => Files.isRegularFile(p) &&
@@ -81,5 +82,21 @@ class SourceGuardSpec extends AnyFunSuite {
         .flatMap(word.findAllIn(_)).map(src.toPath.relativize(p) + ": " + _))
       .toSeq
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("no op takes a cas flag: the only cas parameter left is casPublish") {
+    val flag = "\\bcas\\s*[:=]".r
+    val hits = Files.walk(new File(src, "main/scala").toPath).iterator.asScala
+      .filter(p => Files.isRegularFile(p))
+      .flatMap(p => Files.readAllLines(p).asScala.filterNot(isComment)
+        .filter(l => flag.findFirstIn(l).isDefined)
+        .map(src.toPath.relativize(p) + ": " + _.trim))
+      .toSeq
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("MANIFEST.json is named in src/main code only in graft/index/IndexStore.scala") {
+    assert(filesContaining(new File(src, "main/scala"), "MANIFEST.json",
+      codeOnly = true) == Seq("main/scala/graft/index/IndexStore.scala"))
   }
 }

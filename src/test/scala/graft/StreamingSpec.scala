@@ -25,16 +25,16 @@ class StreamingSpec extends AnyFunSuite {
     codes.write.partitionBy("cell").parquet(s"$root/codes_v1")
     spark.read.parquet(s"$idx/centroids").write.parquet(s"$root/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$root/codebook")
-    queries.EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids_v1", s"$root/codes_v1")
     root
   }
 
   /** The code rows / centroids the root's manifest publishes. */
-  private def publishedCodes(root: String) = queries.EmbQueries
-    .readSegments(spark, queries.EmbQueries.readManifest(spark, root)._3)
+  private def publishedCodes(root: String) = index.IndexStore
+    .readSegments(spark, index.IndexStore.readManifest(spark, root)._3)
   private def publishedCent(root: String) = spark.read.parquet(
-    queries.EmbQueries.readManifest(spark, root)._2)
+    index.IndexStore.readManifest(spark, root)._2)
 
   /** Upsert / delete micro-batches through the ANN sink builder. */
   private def upsertSink(stream: org.apache.spark.sql.DataFrame,
@@ -1384,7 +1384,7 @@ class StreamingSpec extends AnyFunSuite {
       work, tmp("ann_maint_ckpt"))
     assert(q.awaitTermination(120000))
     // one published upsert version per micro-batch
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3)
+    assert(index.IndexStore.readManifest(spark, work)._1 == 3)
 
     // 1. the maintained index is row-identical to the batch-built full
     // served index — same cells, same codes, same inlined attribute,
@@ -1402,7 +1402,7 @@ class StreamingSpec extends AnyFunSuite {
     val probe = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val (_, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, work)
+      index.IndexStore.readManifest(spark, work)
     val answerWork = graft.streaming.AnnServing
       .scoreBatchAt(spark, centPath, codesPath, s"$work/codebook",
         spark.read.parquet(vectorsPath), probe)
@@ -1420,7 +1420,7 @@ class StreamingSpec extends AnyFunSuite {
     val appended = graft.streaming.AnnServing
       .applyUpsertBatchVersioned(spark, work, replay)
     assert(appended == 0L, s"replay appended $appended rows")
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3,
+    assert(index.IndexStore.readManifest(spark, work)._1 == 3,
       "a replayed batch published a version")
     val afterReplay = publishedCodes(work)
     assert(key(afterReplay).exceptAll(key(full)).isEmpty)
@@ -1459,14 +1459,14 @@ class StreamingSpec extends AnyFunSuite {
     }
 
     // serve qid 0 under the OLD version
-    queries.EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids", s"$root/codes")
     Files.write(java.nio.file.Paths.get(in, "q0.json"),
       (vecJson(0L) + "\n").getBytes("UTF-8"))
     runSink()
 
     // SWAP under the same checkpointed stream, then serve qid 7
-    queries.EmbQueries.publishVersion(spark, root, 2,
+    index.IndexStore.publishVersion(spark, root, 2,
       s"$root/centroids_reb", s"$root/codes_reb")
     Files.write(java.nio.file.Paths.get(in, "q7.json"),
       (vecJson(7L) + "\n").getBytes("UTF-8"))
@@ -1502,7 +1502,7 @@ class StreamingSpec extends AnyFunSuite {
     // restore the lifecycle's final published state (v3 — the
     // retrained epoch) so later consumers of the shared manifest see
     // the canonical ending
-    queries.EmbQueries.publishVersion(spark, root, 3,
+    index.IndexStore.publishVersion(spark, root, 3,
       s"$root/centroids_rt", s"$root/codes_rt")
   }
 
@@ -1577,7 +1577,7 @@ class StreamingSpec extends AnyFunSuite {
       .write.mode("overwrite").parquet(depthsPath)
     val root = queries.EmbQueries.indexPath(dir)
     val (ver, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, root)
+      index.IndexStore.readManifest(spark, root)
     assert(ver == 3, s"repair must publish/serve the v3 epoch, got v$ver")
     // stream every anchor (vec_id < 8) with its label — the same
     // query universe the batch emb_label_aware_serving answers
@@ -1706,7 +1706,7 @@ class StreamingSpec extends AnyFunSuite {
     // a query whose label has no budget row serves at the FULL budget
     // (6, 40) — the batch repair's own fallback — and still answers
     val (_, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, root)
+      index.IndexStore.readManifest(spark, root)
     val fallback = graft.streaming.AnnServing.scoreBatchBudgetAwareAt(
       spark, centPath, codesPath, s"$root/codebook",
       s"$dir/embeddings.parquet", budgetsPath,
@@ -1828,8 +1828,8 @@ class StreamingSpec extends AnyFunSuite {
     graft.streaming.AnnServing.applyRebalanceVersioned(spark, twin, augPath)
     graft.streaming.AnnServing
       .applyRetrainEpochIfDueVersioned(spark, twin, augPath)
-    assert(queries.EmbQueries.readManifest(spark, work)._1 ==
-      queries.EmbQueries.readManifest(spark, twin)._1)
+    assert(index.IndexStore.readManifest(spark, work)._1 ==
+      index.IndexStore.readManifest(spark, twin)._1)
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(
       col("vec_id"), col("cell"), col("label"),
       array_join(transform(col("codes"), c => c.cast("string")), ",")
@@ -1868,11 +1868,11 @@ class StreamingSpec extends AnyFunSuite {
     // replay the full workload: the full-view dedup rejects every
     // re-arriving id even though centroids changed since they were
     // first applied, and nothing is published
-    val vBefore = queries.EmbQueries.readManifest(spark, work)._1
+    val vBefore = index.IndexStore.readManifest(spark, work)._1
     val appended = graft.streaming.AnnServing.applyUpsertBatchVersioned(
       spark, work, batchDf(rowsA ++ rowsB))
     assert(appended == 0L, s"replay appended $appended rows")
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == vBefore)
+    assert(index.IndexStore.readManifest(spark, work)._1 == vBefore)
 
     // integrity: every base id + every new id present exactly once,
     // and each new id carries its source member's exact codes (same
@@ -2014,7 +2014,7 @@ class StreamingSpec extends AnyFunSuite {
 
     val moved = graft.streaming.AnnServing.applyRebalanceVersioned(
       spark, work, s"$gap/embeddings.parquet")
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == 2)
+    assert(index.IndexStore.readManifest(spark, work)._1 == 2)
 
     val after = publishedCodes(work)
     // nothing lost, nothing invented — only `cell` may differ
@@ -2062,7 +2062,7 @@ class StreamingSpec extends AnyFunSuite {
         .map(f => f.toString -> Files.size(f)).toMap
     }
     def segmentFiles(): Map[String, Map[String, Long]] =
-      queries.EmbQueries.readManifest(spark, work)._3.split(',').toSeq
+      index.IndexStore.readManifest(spark, work)._3.split(',').toSeq
         .map(seg => seg -> parquetFiles(seg)).toMap
 
     // tombstones arrive as TWO micro-batches of {vec_id} rows, the
@@ -2084,11 +2084,11 @@ class StreamingSpec extends AnyFunSuite {
     val filesV1 = segmentFiles()
     dump("t0.json", col("vec_id") % 20 === 7 && col("vec_id") =!= 0)
     drain()
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == 2)
+    assert(index.IndexStore.readManifest(spark, work)._1 == 2)
     val filesV2 = segmentFiles()
     dump("t1.json", col("vec_id") % 20 === 17)
     drain()
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3)
+    assert(index.IndexStore.readManifest(spark, work)._1 == 3)
 
     // 1. row-identical to full-minus-tombstoned, no tombstone survives
     val compacted = publishedCodes(work)
@@ -2117,7 +2117,7 @@ class StreamingSpec extends AnyFunSuite {
     val probe = emb.filter(col("vec_id") === 0)
       .select(col("vec_id").as("qid"), col("embedding").as("qvec"))
     val (_, centPath, codesPath) =
-      queries.EmbQueries.readManifest(spark, work)
+      index.IndexStore.readManifest(spark, work)
     val aw = graft.streaming.AnnServing
       .scoreBatchAt(spark, centPath, codesPath, s"$work/codebook", emb,
         probe)
@@ -2173,7 +2173,7 @@ class StreamingSpec extends AnyFunSuite {
     assert(deleteSink(spark.readStream.schema(
         StructType(Seq(StructField("vec_id", LongType)))).json(delIn),
       work, tmp("ann_life_ck2")).awaitTermination(120000))
-    assert(queries.EmbQueries.readManifest(spark, work)._1 == 3)
+    assert(index.IndexStore.readManifest(spark, work)._1 == 3)
 
     val end = publishedCodes(work)
     val key = (d: org.apache.spark.sql.DataFrame) => d.select(

@@ -31,7 +31,7 @@ class TimeTravelSpec extends AnyFunSuite {
     full.write.partitionBy("cell").parquet(s"$root/codes_v1")
     spark.read.parquet(s"$idx/centroids").write.parquet(s"$root/centroids_v1")
     spark.read.parquet(s"$idx/codebook").write.parquet(s"$root/codebook")
-    queries.EmbQueries.publishVersion(spark, root, 1,
+    index.IndexStore.publishVersion(spark, root, 1,
       s"$root/centroids_v1", s"$root/codes_v1")
 
     // upsert rows: clones of the biggest cell's members, far ids —
@@ -73,10 +73,10 @@ class TimeTravelSpec extends AnyFunSuite {
     // the chain genuinely advanced: v2's view carries the new rows
     // (top-k for these anchors may or may not shift — the pin below is
     // bit-equality per version, not inequality across versions)
-    val k1 = queries.EmbQueries.readManifestAt(spark, root, 1)._2
-    val k2 = queries.EmbQueries.readManifestAt(spark, root, 2)._2
-    assert(queries.EmbQueries.readSegments(spark, k2).count() ==
-      queries.EmbQueries.readSegments(spark, k1).count() + rows.length)
+    val k1 = index.IndexStore.readManifestAt(spark, root, 1)._2
+    val k2 = index.IndexStore.readManifestAt(spark, root, 2)._2
+    assert(index.IndexStore.readSegments(spark, k2).count() ==
+      index.IndexStore.readSegments(spark, k1).count() + rows.length)
     val moved = streaming.AnnServing
       .applyRebalanceVersioned(spark, root, augPath)
     assert(moved > 0, "skew workload must trip the rebalance")
@@ -89,14 +89,14 @@ class TimeTravelSpec extends AnyFunSuite {
     assert(servedAt(3) == atV3)
     // the travel read at the published version IS the live read
     val (vLive, centLive, codesLive) =
-      queries.EmbQueries.readManifest(spark, root)
+      index.IndexStore.readManifest(spark, root)
     assert(vLive == 3)
-    assert(queries.EmbQueries.readManifestAt(spark, root, 3) ==
+    assert(index.IndexStore.readManifestAt(spark, root, 3) ==
       ((centLive, codesLive)))
 
     // GC to keep=1 retains only the published newest; the expired
     // horizon fails in the resolve with the version named
-    assert(queries.EmbQueries.gcVersions(spark, root, keep = 1) > 0)
+    assert(index.IndexStore.gcVersions(spark, root, keep = 1) > 0)
     assert(servedAt(3) == atV3, "GC must not touch the live version")
     val e = intercept[RuntimeException] { servedAt(1) }
     assert(e.getMessage.contains("version 1") &&
