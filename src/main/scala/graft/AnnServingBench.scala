@@ -43,19 +43,42 @@ object AnnServingBench {
     val nFiles = args.drop(2).headOption.map(_.toInt).getOrElse(8)
     val channel = args.drop(3).headOption.getOrElse("ivfpq")
     val spark = Session.start()
-
-    // offline: the served index + the query backlog (vectors cycled
-    // from the corpus itself, qids disjoint from vec_ids so no
-    // self-exclusion interplay)
     val idx = queries.EmbQueries.ensureServedIndex(spark, sfDir)
+    val ok = channel match {
+      case "maintain_versioned" => inTempDir("ann_maint_ver")(
+        maintainVersioned(spark, idx, sfDir, nQ, nFiles, _))
+      case "maintain_upsert_cadence" => inTempDir("ann_maint_cad")(
+        maintainUpsertCadence(spark, idx, sfDir, nQ, nFiles, _))
+      case _ => inTempDir("ann_tp")(
+        serve(spark, idx, sfDir, nQ, nFiles, channel, _))
+    }
+    CacheRegistry.clear(spark)
+    spark.stop()
+    if (!ok) System.exit(1)
+  }
+
+  /** `body` over a fresh working dir under `java.io.tmpdir`, deleted
+    * afterwards whether or not `body` throws.
+    */
+  private def inTempDir[T](prefix: String)(body: java.io.File => T): T = {
+    val dir = Files.createTempDirectory(prefix).toFile
+    try body(dir) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
+
+  /** The serving channels; false when the drain timed out or answered
+    * fewer queries than were staged.
+    */
+  private def serve(
+      spark: SparkSession,
+      idx: String,
+      sfDir: String,
+      nQ: Int,
+      nFiles: Int,
+      channel: String,
+      dir: java.io.File): Boolean = {
+    // the query backlog: vectors cycled from the corpus itself, qids
+    // disjoint from vec_ids so no self-exclusion interplay
     val vectorsPath = s"$sfDir/embeddings.parquet"
-    if (channel == "maintain_versioned") {
-      maintainVersioned(spark, idx, sfDir, nQ, nFiles); return
-    }
-    if (channel == "maintain_upsert_cadence") {
-      maintainUpsertCadence(spark, idx, sfDir, nQ, nFiles); return
-    }
-    val dir = Files.createTempDirectory("ann_tp").toFile
     val inDir = new java.io.File(dir, "in"); inDir.mkdirs()
     val emb = spark.read.parquet(vectorsPath)
     val nVec = emb.count()
@@ -108,9 +131,7 @@ object AnnServingBench {
       else "null"
     println(
       s"""{"metric":"ann_serving_throughput","unit":"queries_per_sec","channel":"$channel","value":${f"${answered / sec}%.1f"},"n_queries":$answered,"staged":$staged,"sec":${f"$sec%.2f"},"error":$error,"sf":"$sfDir"}""")
-    CacheRegistry.clear(spark)
-    spark.stop()
-    if (error != "null") System.exit(1)
+    error == "null"
   }
 
   /** Stage `fresh` as `nFiles` JSON part files; the staged count. The
@@ -146,8 +167,8 @@ object AnnServingBench {
       idx: String,
       sfDir: String,
       nQ: Int,
-      nFiles: Int): Unit = {
-    val dir = Files.createTempDirectory("ann_maint_ver").toFile
+      nFiles: Int,
+      dir: java.io.File): Boolean = {
     val work = new java.io.File(dir, "ix").getAbsolutePath
     val full = spark.read.parquet(s"$idx/codes")
     full.write.partitionBy("cell").parquet(s"$work/codes_v1")
@@ -200,9 +221,7 @@ object AnnServingBench {
       else "null"
     println(
       s"""{"metric":"ann_maintain_throughput","unit":"vectors_per_sec","channel":"maintain_versioned","value":${f"${applied / sec}%.1f"},"n_vectors":$applied,"staged":$staged,"cells_before":$cellsBefore,"cells_after":$cellsAfter,"final_version":$ver,"final_segments":$nSegs,"sec":${f"$sec%.2f"},"error":$error,"sf":"$sfDir"}""")
-    CacheRegistry.clear(spark)
-    spark.stop()
-    if (error != "null") System.exit(1)
+    error == "null"
   }
 
   /** The `maintain_upsert_cadence` channel: the STEADY-STATE price of
@@ -221,8 +240,8 @@ object AnnServingBench {
       idx: String,
       sfDir: String,
       nQ: Int,
-      nFiles: Int): Unit = {
-    val dir = Files.createTempDirectory("ann_maint_cad").toFile
+      nFiles: Int,
+      dir: java.io.File): Boolean = {
     val full = spark.read.parquet(s"$idx/codes")
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val nVec = emb.count()
@@ -277,7 +296,6 @@ object AnnServingBench {
     val (secCad, applied, vCad) = run("cadence", 8)
     println(
       s"""{"metric":"ann_maintain_throughput","unit":"vectors_per_sec","channel":"maintain_upsert_cadence","value":${f"${applied / secCad}%.1f"},"value_eager":${f"${applied / secEager}%.1f"},"sec_cadence":${f"$secCad%.2f"},"sec_eager":${f"$secEager%.2f"},"n_vectors":$applied,"staged":$staged,"final_version_eager":$vEager,"final_version_cadence":$vCad,"error":null,"sf":"$sfDir"}""")
-    CacheRegistry.clear(spark)
-    spark.stop()
+    true
   }
 }

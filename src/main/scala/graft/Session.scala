@@ -2,15 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.fs.NioLocalFileSystem
 import graft.streaming.LocalCheckpointFileManager
 
 /** The one session preset every entry point builds from: `local[N]`
   * with N shuffle partitions, UTC, UI off, AQE on, a suite-sized
   * codegen cache, fork-free local checkpoint commits
-  * (`LocalCheckpointFileManager`) and WARN logging. N comes from
-  * `SPARK_GRAFT_CPUS` (default 4); callers that need one more setting
-  * add it to the builder or, for runtime SQL confs, with
-  * `spark.conf.set` afterwards.
+  * (`LocalCheckpointFileManager`), fork-free local part files
+  * (`NioLocalFileSystem` as the context-wide, cached `file:` class) and
+  * WARN logging. N comes from `SPARK_GRAFT_CPUS` (default 4); callers
+  * that need one more setting add it to the builder or, for runtime SQL
+  * confs, with `spark.conf.set` afterwards.
   *
   * Measured and rejected (r13 E1): parallelismFirst=false + advisory
   * partition sizing cut tiny-task overhead but SERIALIZED the CPU-bound
@@ -44,6 +46,8 @@ object Session {
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
       .config(LocalCheckpointFileManager.ConfKey,
         classOf[LocalCheckpointFileManager].getName)
+      .config("spark.hadoop." + NioLocalFileSystem.ImplKey,
+        classOf[NioLocalFileSystem].getName)
 
   def start(b: SparkSession.Builder = builder()): SparkSession = {
     val spark = b.getOrCreate()

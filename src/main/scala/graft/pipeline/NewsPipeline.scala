@@ -18,12 +18,16 @@ import graft.sentiment.Sentiment
 object NewsPipeline {
 
   /** P1: projection + processing-time stamp (streaming_pipeline.py:111,
-    * 114–121).
+    * 114–121). `processing_time` is `current_timestamp()`: one value per
+    * micro-batch in a stream, one per query in a batch job. It goes
+    * through [[graft.functions.PerBatch]], so generated code reads the
+    * batch's timestamp instead of inlining it, and a stream compiles its
+    * whole-stage code once rather than once per micro-batch.
     */
   def project(df: DataFrame): DataFrame =
     df.select(col("id"), col("title"), col("description"), col("url"),
         col("publishedAt"), col("fetched_at"))
-      .withColumn("processing_time", current_timestamp())
+      .withColumn("processing_time", graft.functions.PerBatch.now)
 
   /** P3: clean title/description (streaming_pipeline.py:122–128) —
     * delegates to the oracle-checked TextFns.clean so the regex can
@@ -121,7 +125,7 @@ object NewsPipeline {
       .withColumn("processing_time",
         date_format(col("processing_time"), "yyyy-MM-dd HH:mm:ss"))
     // persist: otherwise the two sink writes each re-execute the lineage
-    // (2x scan + UDF) AND re-evaluate current_timestamp, leaving the csv
+    // (2x scan + UDF) AND re-evaluate processing_time, leaving the csv
     // and json "mirror" outputs with different processing_time values
     w.persist()
     try {

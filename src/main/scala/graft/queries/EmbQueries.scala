@@ -4370,7 +4370,8 @@ object EmbQueries {
 
   /** on-disk IVF+PQ serving index location per (JVM, input dir) — the
     * pid component keeps concurrent JVMs from racing overwrite-vs-read
-    * on a shared /tmp path (the FormatQueries.scratch convention)
+    * on a shared /tmp path (the FormatQueries.scratch convention); the
+    * dir is deleted at JVM exit
     */
   private[graft] def indexPath(dir: String): String = {
     val h = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
@@ -4393,6 +4394,10 @@ object EmbQueries {
   private def servedCodes(s: SparkSession, d: String): DataFrame =
     graft.CacheRegistry.memoExactlyOnce("emb_served_index", s, d) {
       val path = indexPath(d)
+      // the pid in the name means no later JVM reads it: delete it when
+      // this one exits
+      sys.addShutdownHook(
+        org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)))
       ivfCentroids(s, d).write.mode("overwrite")
         .parquet(s"$path/centroids")
       // the trained PQ codebook persists beside the index so the served

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
+import graft.functions.PerBatch
 import graft.index.IndexStore
 
 /** Streaming ANN serving: score a micro-batched stream of query vectors
@@ -320,13 +321,15 @@ object AnnServing {
       scoreBatchAt(s, centPath, codesPath,
         s"$manifestRoot/codebook", s.read.parquet(vectorsPath),
         batch, k)
-        .withColumn("version", lit(ver))
+        .withColumn("version", PerBatch.lit(ver))
     }
 
   /** The one sink builder every ANN stream runs through: `body` gets
     * each micro-batch and its id inside foreachBatch, checkpointed at
     * `checkpoint`. The session's checkpoint files go through
-    * [[LocalCheckpointFileManager]] unless it already names a manager.
+    * [[LocalCheckpointFileManager]] unless it already names a manager,
+    * and its local part files through `graft.fs.NioLocalFileSystem`
+    * unless it already names a `file:` class.
     */
   private[graft] def foreachBatchSink(
       stream: DataFrame,
@@ -357,7 +360,7 @@ object AnnServing {
       trigger: Trigger = Trigger.AvailableNow())(
       score: DataFrame => DataFrame): StreamingQuery =
     foreachBatchSink(stream, checkpoint, trigger) { (batch, batchId) =>
-      score(batch).withColumn("batch_id", lit(batchId))
+      score(batch).withColumn("batch_id", PerBatch.lit(batchId))
         .write.mode("append").parquet(outDir)
     }
 
@@ -563,7 +566,7 @@ object AnnServing {
         IndexStore.readManifest(s, manifestRoot)
       scoreBatchLabelAwareAt(s, centPath, codesPath, vectorsPath,
         depthsPath, batch, k, indexVersion = Some(ver))
-        .withColumn("version", lit(ver))
+        .withColumn("version", PerBatch.lit(ver))
     }
 
   // ------------------------------------------------------------------
@@ -1369,7 +1372,7 @@ object AnnServing {
       scoreBatchBudgetAwareAt(s, centPath, codesPath,
         s"$manifestRoot/codebook", vectorsPath, budgetsPath, batch, k,
         indexVersion = Some(ver))
-        .withColumn("version", lit(ver))
+        .withColumn("version", PerBatch.lit(ver))
     }
 
   /** The self-healing maintenance sink: each micro-batch of arriving

@@ -26,6 +26,12 @@ import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCh
   * refuses hard links gets the stock rename. The destination's
   * `.<name>.crc` is removed first, so a checksum the stock manager left
   * cannot fail a later read. No fsync, as in the stock local path.
+  *
+  * The data files a sink writes (JSON and parquet part files) do not go
+  * through a checkpoint manager; `install` routes those through
+  * `graft.fs.NioLocalFileSystem`. Spark's stock manager still writes
+  * through FileContext (`fs.AbstractFileSystem.file.impl`), which that
+  * filesystem does not cover, so this manager stays.
   */
 class LocalCheckpointFileManager(path: Path, hadoopConf: Configuration)
     extends FileContextBasedCheckpointFileManager(path, hadoopConf) {
@@ -66,9 +72,13 @@ object LocalCheckpointFileManager {
   val ConfKey = "spark.sql.streaming.checkpointFileManagerClass"
 
   /** Use this manager for queries started on `spark` from now on, unless
-    * the session already names a manager.
+    * the session already names a manager, and route the session's
+    * `file:` part files through `graft.fs.NioLocalFileSystem` (see its
+    * `install`). Every sink starter calls this before it builds a sink.
     */
-  def install(spark: SparkSession): Unit =
+  def install(spark: SparkSession): Unit = {
     if (spark.conf.getOption(ConfKey).isEmpty)
       spark.conf.set(ConfKey, classOf[LocalCheckpointFileManager].getName)
+    graft.fs.NioLocalFileSystem.install(spark)
+  }
 }

@@ -108,9 +108,13 @@ private[streaming] class BandDedupProcessor(delayMs: Long)
   * idempotent by batch id, so replay stays exactly-once (SURVEY.md
   * §7.3.5).
   *
-  * Every sink starter installs `LocalCheckpointFileManager` on the
-  * session first (unless it already names a manager), so sessions the
-  * engine did not build also commit local checkpoint files fork-free.
+  * Every sink starter calls `LocalCheckpointFileManager.install` first,
+  * so sessions the engine did not build also write fork-free: local
+  * checkpoint files through that manager (unless the session names
+  * one), JSON part files and their `.crc` through
+  * `graft.fs.NioLocalFileSystem` (unless it names a `file:` class).
+  * `processing_time` comes from `graft.functions.PerBatch`, so a
+  * steady stream compiles its generated code once, not per micro-batch.
   */
 object NewsStream {
 
@@ -147,7 +151,8 @@ object NewsStream {
       memoryTable: String = "news_sentiment"): Seq[StreamingQuery] = {
     val spark = df.sparkSession
     // before the sinks: the file sink's `_spark_metadata` log picks its
-    // checkpoint file manager when it is built
+    // checkpoint file manager, and its Hadoop conf its `file:` class,
+    // when it is built
     LocalCheckpointFileManager.install(spark)
     val jsonPath = s"$outputDir/stream_json"
     val json = new FileStreamSink(spark, jsonPath, new JsonFileFormat, Nil,

@@ -5,11 +5,14 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.fs.{NioLocalFileSystem, NioRawLocalFileSystem}
+import graft.fs.NioLocalFileSystem.{ImplKey, NoCacheKey}
 import graft.queries.EmbQueries
 import graft.streaming.{AnnServing, LocalCheckpointFileManager, NewsStream}
 import graft.streaming.LocalCheckpointFileManager.ConfKey
@@ -19,11 +22,15 @@ import graft.streaming.LocalCheckpointFileManager.ConfKey
   * on sessions the engine did not build, never
   * over a manager the session already names. Only the stock manager
   * leaves Hadoop's `.<name>.crc` files in a local checkpoint, which
-  * tells the two apart.
+  * tells the two apart. The same hook routes `file:` part files through
+  * NioLocalFileSystem; Hadoop's per-class FileSystem statistics tell
+  * which class wrote them.
   */
 class CheckpointInstallSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
   private val Local = classOf[LocalCheckpointFileManager].getName
+  private val Nio = classOf[NioLocalFileSystem].getName
+  private val Stock = classOf[LocalFileSystem].getName
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
@@ -44,6 +51,93 @@ class CheckpointInstallSpec extends AnyFunSuite {
       Trigger.AvailableNow(), memoryTable = table).foreach(_.awaitTermination())
     assert(s.table(table).count() == 6)
     ck
+  }
+
+  /** Bytes written so far through `file:` filesystems of class `c`. */
+  private def written(c: Class[_ <: FileSystem]): Long =
+    FileSystem.getStatistics("file", c).getBytesWritten
+
+  /** The bytes of the JSON sink's part files and their `.crc` sidecars. */
+  private def partBytes(out: String): Long =
+    Files.walk(new File(out, "stream_json").toPath).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && !p.toString.contains("_spark_metadata"))
+      .map(Files.size).sum
+
+  /** `body` on a new session in the situation of a session the preset did
+    * not build: the context's Hadoop conf names no `file:` class, and the
+    * JVM's cached `file:` instance is the stock one. The preset's cached
+    * instance is restored afterwards.
+    */
+  private def foreignSession[T](body: SparkSession => T): T = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    val root = java.net.URI.create("file:///")
+    assert(hc.get(ImplKey) == Nio)
+    FileSystem.get(root, hc).close() // drops the cached instance
+    hc.unset(ImplKey)
+    try {
+      assert(!FileSystem.get(root, hc).isInstanceOf[NioLocalFileSystem])
+      body(spark.newSession())
+    } finally {
+      FileSystem.get(root, hc).close()
+      hc.set(ImplKey, Nio)
+      assert(FileSystem.get(root, hc).isInstanceOf[NioLocalFileSystem])
+    }
+  }
+
+  test("Session.builder makes NioLocalFileSystem the cached file: class") {
+    val hc = spark.sparkContext.hadoopConfiguration
+    assert(hc.get(ImplKey) == Nio)
+    assert(new org.apache.hadoop.fs.Path("file:///").getFileSystem(hc)
+      .isInstanceOf[NioLocalFileSystem])
+  }
+
+  test("startAllSinks writes part files through nio on a session without the preset") {
+    foreignSession { s =>
+      val in = tmp("foreign_in")
+      val out = tmp("foreign_out")
+      NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+      val nio0 = written(classOf[NioRawLocalFileSystem])
+      NewsStream.startAllSinks(NewsStream.pipeline(s, in), out, tmp("foreign_ck"),
+        Trigger.AvailableNow(), memoryTable = "t_install_foreign")
+        .foreach(q => assert(q.awaitTermination(120000)))
+      assert(s.read.json(s"$out/stream_json").count() == 6)
+      assert(partBytes(out) > 0)
+      assert(written(classOf[NioRawLocalFileSystem]) - nio0 >= partBytes(out))
+      assert(s.conf.get(ImplKey) == Nio && s.conf.get(NoCacheKey) == "true")
+    }
+  }
+
+  test("a file: class the session already names is kept") {
+    val s = spark.newSession()
+    s.conf.set(ImplKey, Stock)
+    drainAllSinks(s, "t_install_fs_user")
+    assert(s.conf.get(ImplKey) == Stock)
+    assert(s.conf.getOption(NoCacheKey).isEmpty)
+  }
+
+  test("a JSON sink written under the stock filesystem restarts under nio, rows exactly once") {
+    val in = tmp("fsrestart_in")
+    val out = tmp("fsrestart_out")
+    val ck = tmp("fsrestart_ck")
+    def drain(s: SparkSession): Unit =
+      NewsStream.startAllSinks(NewsStream.pipeline(s, in), out, ck,
+        Trigger.AvailableNow(), memoryTable = "t_install_fs_restart")
+        .foreach(q => assert(q.awaitTermination(120000)))
+    val stock = spark.newSession()
+    stock.conf.set(ImplKey, Stock)
+    stock.conf.set(NoCacheKey, "true")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+    val (raw0, nio0) = (written(classOf[RawLocalFileSystem]),
+      written(classOf[NioRawLocalFileSystem]))
+    drain(stock)
+    assert(written(classOf[RawLocalFileSystem]) - raw0 >= partBytes(out))
+    assert(written(classOf[NioRawLocalFileSystem]) == nio0)
+    val stockBytes = partBytes(out)
+    NewsStream.writeSampleBatch(in, batchId = 1, rows = 5)
+    drain(spark.newSession())
+    assert(written(classOf[NioRawLocalFileSystem]) - nio0 >= partBytes(out) - stockBytes)
+    val ids = spark.read.json(s"$out/stream_json").select("id").collect().map(_.getString(0))
+    assert(ids.length == 11 && ids.distinct.length == 11)
   }
 
   test("Session.builder names the local manager; raw writeStream queries use it") {

@@ -162,6 +162,22 @@ class NewsPipelineSpec extends AnyFunSuite {
     assert(got == want)
   }
 
+  test("runOnce stamps one processing_time, the same in the csv and json sinks") {
+    val outDir = Files.createTempDirectory("news_stamp").toFile.getAbsolutePath
+    val before = System.currentTimeMillis() / 1000 * 1000
+    NewsPipeline.runOnce(spark, fixture, outDir)
+    val after = System.currentTimeMillis()
+    def stamps(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.select("processing_time").distinct().collect().map(_.getString(0)).toSeq
+    val csv = stamps(spark.read.option("header", "true").csv(s"$outDir/csv"))
+    assert(csv.size == 1)
+    assert(stamps(spark.read.json(s"$outDir/json")) == csv)
+    val fmt = new java.text.SimpleDateFormat("yyyy-MM-dd HH:mm:ss")
+    fmt.setTimeZone(java.util.TimeZone.getTimeZone("UTC"))
+    val ts = fmt.parse(csv.head).getTime
+    assert(ts >= before && ts <= after)
+  }
+
   test("reference-fixture golden parity: 10-article run end to end") {
     // Modeled on the reference's committed golden set (news_data.json ->
     // sentiment_output/sentiment_results.csv + consolidated.json: 10

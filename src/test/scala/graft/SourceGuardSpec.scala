@@ -8,9 +8,11 @@ import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Source-tree guards: every entry point builds its session from
-  * graft.Session, the retired bench env knobs stay retired, and the ANN
+  * graft.Session, the retired bench env knobs stay retired, the ANN
   * index keeps its one writer (the versioned ops behind one sink
-  * builder) and its one store (graft.index.IndexStore, CAS-only).
+  * builder) and its one store (graft.index.IndexStore, CAS-only), the
+  * `file:` class is set in one place, and per-batch values reach
+  * generated code only through graft.functions.PerBatch.
   */
 class SourceGuardSpec extends AnyFunSuite {
   private lazy val src: File =
@@ -98,5 +100,22 @@ class SourceGuardSpec extends AnyFunSuite {
   test("MANIFEST.json is named in src/main code only in graft/index/IndexStore.scala") {
     assert(filesContaining(new File(src, "main/scala"), "MANIFEST.json",
       codeOnly = true) == Seq("main/scala/graft/index/IndexStore.scala"))
+  }
+
+  test("fs.file.impl is named in src/main code only under graft/fs") {
+    assert(filesContaining(new File(src, "main/scala"), "fs.file.impl",
+      codeOnly = true) == Seq("main/scala/graft/fs/NioLocalFileSystem.scala"))
+  }
+
+  test("no streaming sink or pipeline stage inlines a per-batch value") {
+    // bare, not PerBatch.lit(...)
+    val inlined = "(?<![.\\w])(current_timestamp\\(|lit\\((batchId|ver)\\))".r
+    val hits = Seq("streaming", "pipeline").flatMap(d =>
+      Files.walk(new File(src, s"main/scala/graft/$d").toPath).iterator.asScala
+        .filter(p => Files.isRegularFile(p))
+        .flatMap(p => Files.readAllLines(p).asScala.filterNot(isComment)
+          .filter(l => inlined.findFirstIn(l).isDefined)
+          .map(src.toPath.relativize(p) + ": " + _.trim)))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }

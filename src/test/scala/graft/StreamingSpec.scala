@@ -663,6 +663,57 @@ class StreamingSpec extends AnyFunSuite {
     assert(spark.table("t_layout").count() == 5)
   }
 
+  test("startAllSinks compiles no generated code after the first micro-batch") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val in = tmp("codegen_in")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+    val q = NewsStream.startAllSinks(NewsStream.pipeline(spark, in),
+      tmp("codegen_out"), tmp("codegen_ck"), Trigger.ProcessingTime(0),
+      memoryTable = "t_codegen").head
+    try {
+      q.processAllAvailable()
+      val afterFirst = compiled
+      for (b <- 1 to 3) {
+        NewsStream.writeSampleBatch(in, batchId = b, rows = 6)
+        q.processAllAvailable()
+      }
+      assert(q.lastProgress.batchId >= 3)
+      assert(compiled == afterFirst)
+    } finally q.stop()
+    assert(spark.table("t_codegen").count() == 24)
+  }
+
+  test("startAllSinks stamps each micro-batch's rows with that batch's timestamp") {
+    import scala.jdk.CollectionConverters._
+    val in = tmp("stamp_in")
+    val ckpt = tmp("stamp_ck")
+    (0 until 3).foreach(b => NewsStream.writeSampleBatch(in, batchId = b, rows = 6))
+    val src = spark.readStream.schema(schema.NewsArticle.schema)
+      .option("maxFilesPerTrigger", 1).json(in)
+    NewsStream.startAllSinks(pipeline.NewsPipeline.transform(src),
+      tmp("stamp_out"), ckpt, Trigger.AvailableNow(), memoryTable = "t_stamp")
+      .foreach(q => assert(q.awaitTermination(120000)))
+    def logLines(dir: String, batch: Int): Seq[String] = Files.readAllLines(
+      java.nio.file.Paths.get(ckpt, "json", dir, batch.toString)).asScala.toSeq
+    // per batch: its timestamp (offset log) and its one input file's
+    // sample-batch number (source log)
+    val batches = (0 until 3).map { b =>
+      val ts = "\"batchTimestampMs\":(\\d+)".r
+        .findFirstMatchIn(logLines("offsets", b)(1)).get.group(1).toLong
+      val file = "batch_(\\d+)\\.json".r
+        .findFirstMatchIn(logLines("sources/0", b)(1)).get.group(1).toInt
+      file -> ts
+    }.toMap
+    assert(batches.size == 3 && batches.values.toSet.size == 3)
+    val stamps = spark.table("t_stamp")
+      .select(col("id"), col("processing_time")).collect()
+      .groupBy(_.getString(0).toInt / 10000)
+      .map { case (file, rows) =>
+        file -> rows.map(_.getTimestamp(1).getTime).toSet }
+    assert(stamps == batches.map { case (file, ts) => file -> Set(ts) })
+  }
+
   test("watermarked stream-stream join matches rows within the time bound") {
     val inL = tmp("ssj_l")
     val inR = tmp("ssj_r")
