@@ -2,17 +2,17 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-import graft.fs.NioLocalFileSystem
-import graft.streaming.LocalCheckpointFileManager
+import graft.fs.{NioLocalFileSystem, NioLocalFs}
 
 /** The one session preset every entry point builds from: `local[N]`
   * with N shuffle partitions, UTC, UI off, AQE on, a suite-sized
-  * codegen cache, fork-free local checkpoint commits
-  * (`LocalCheckpointFileManager`), fork-free local part files
-  * (`NioLocalFileSystem` as the context-wide, cached `file:` class) and
-  * WARN logging. N comes from `SPARK_GRAFT_CPUS` (default 4); callers
-  * that need one more setting add it to the builder or, for runtime SQL
-  * confs, with `spark.conf.set` afterwards.
+  * codegen cache, fork-free local files on both Hadoop APIs
+  * (`NioLocalFileSystem` as the context-wide, cached `file:` FileSystem
+  * class for part files; `NioLocalFs` as the `file:` FileContext class,
+  * through which Spark's stock checkpoint manager writes every
+  * checkpoint file) and WARN logging. N comes from `SPARK_GRAFT_CPUS`
+  * (default 4); callers that need one more setting add it to the
+  * builder or, for runtime SQL confs, with `spark.conf.set` afterwards.
   *
   * Measured and rejected (r13 E1): parallelismFirst=false + advisory
   * partition sizing cut tiny-task overhead but SERIALIZED the CPU-bound
@@ -44,10 +44,10 @@ object Session {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.ui.enabled", "false")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toLong)
-      .config(LocalCheckpointFileManager.ConfKey,
-        classOf[LocalCheckpointFileManager].getName)
       .config("spark.hadoop." + NioLocalFileSystem.ImplKey,
         classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop." + NioLocalFileSystem.FcImplKey,
+        classOf[NioLocalFs].getName)
 
   def start(b: SparkSession.Builder = builder()): SparkSession = {
     val spark = b.getOrCreate()

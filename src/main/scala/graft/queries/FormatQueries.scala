@@ -32,17 +32,23 @@ object FormatQueries {
   private def docs(s: SparkSession, dir: String): DataFrame =
     Tables.t(s, dir, "documents")
 
+  private val scratchDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
   /** scratch location per (JVM, format tag, input dir) — written once
     * per session (CacheRegistry.memo), reused by later consumers. The
     * pid component keeps concurrent JVMs (a test run beside a
     * bench/verify run on one box) from racing overwrite-vs-read on a
-    * shared /tmp path; the OS reclaims the per-pid dirs with /tmp.
+    * shared /tmp path; it also means no later JVM reads the dir, so it
+    * is deleted when this one exits (one hook per path).
     */
   private def scratch(tag: String, dir: String): String = {
     val h = java.lang.Integer.toHexString(dir.hashCode & 0x7fffffff)
     val pid = ProcessHandle.current().pid()
-    Paths.get(sys.props("java.io.tmpdir"),
+    val path = Paths.get(sys.props("java.io.tmpdir"),
       s"graft_fmt_${pid}_${tag}_$h").toString
+    if (scratchDirs.add(path)) sys.addShutdownHook(
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path)))
+    path
   }
 
   /** documents re-materialized as ORC, once per (session, dir) */

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.DecimalType
 
+import graft.fs.NioLocalFileSystem
 import graft.functions.PerBatch
 import graft.index.IndexStore
 
@@ -326,17 +327,16 @@ object AnnServing {
 
   /** The one sink builder every ANN stream runs through: `body` gets
     * each micro-batch and its id inside foreachBatch, checkpointed at
-    * `checkpoint`. The session's checkpoint files go through
-    * [[LocalCheckpointFileManager]] unless it already names a manager,
-    * and its local part files through `graft.fs.NioLocalFileSystem`
-    * unless it already names a `file:` class.
+    * `checkpoint`. `NioLocalFileSystem.install` first routes the
+    * session's checkpoint and part files through the fork-free `file:`
+    * classes, unless it already names its own.
     */
   private[graft] def foreachBatchSink(
       stream: DataFrame,
       checkpoint: String,
       trigger: Trigger)(
       body: (DataFrame, Long) => Unit): StreamingQuery = {
-    LocalCheckpointFileManager.install(stream.sparkSession)
+    NioLocalFileSystem.install(stream.sparkSession)
     stream.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

@@ -9,6 +9,7 @@ import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.execution.streaming.sources.{MemoryPlan, MemorySink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import graft.fs.NioLocalFileSystem
 import graft.pipeline.NewsPipeline
 import graft.schema.NewsArticle
 
@@ -108,11 +109,10 @@ private[streaming] class BandDedupProcessor(delayMs: Long)
   * idempotent by batch id, so replay stays exactly-once (SURVEY.md
   * §7.3.5).
   *
-  * Every sink starter calls `LocalCheckpointFileManager.install` first,
-  * so sessions the engine did not build also write fork-free: local
-  * checkpoint files through that manager (unless the session names
-  * one), JSON part files and their `.crc` through
-  * `graft.fs.NioLocalFileSystem` (unless it names a `file:` class).
+  * Every sink starter calls `NioLocalFileSystem.install` first, so
+  * sessions the engine did not build also write checkpoint files (through
+  * Spark's stock manager) and JSON part files fork-free, with Hadoop's
+  * `.crc` sidecars, unless the session names its own `file:` classes.
   * `processing_time` comes from `graft.functions.PerBatch`, so a
   * steady stream compiles its generated code once, not per micro-batch.
   */
@@ -150,10 +150,9 @@ object NewsStream {
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval),
       memoryTable: String = "news_sentiment"): Seq[StreamingQuery] = {
     val spark = df.sparkSession
-    // before the sinks: the file sink's `_spark_metadata` log picks its
-    // checkpoint file manager, and its Hadoop conf its `file:` class,
-    // when it is built
-    LocalCheckpointFileManager.install(spark)
+    // before the sinks: the file sink's `_spark_metadata` log takes its
+    // Hadoop conf, and with it both `file:` classes, when it is built
+    NioLocalFileSystem.install(spark)
     val jsonPath = s"$outputDir/stream_json"
     val json = new FileStreamSink(spark, jsonPath, new JsonFileFormat, Nil,
       Map("path" -> jsonPath))
@@ -732,7 +731,7 @@ object NewsStream {
       version: String = "publishedAt",
       tombstone: Option[String] = None,
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval)): StreamingQuery = {
-    LocalCheckpointFileManager.install(df.sparkSession)
+    NioLocalFileSystem.install(df.sparkSession)
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

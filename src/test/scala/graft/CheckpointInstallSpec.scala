@@ -5,52 +5,68 @@ import java.nio.file.Files
 
 import scala.jdk.CollectionConverters._
 
+import jdk.jfr.Recording
+import jdk.jfr.consumer.RecordingFile
+
 import org.apache.hadoop.fs.{FileSystem, LocalFileSystem, RawLocalFileSystem}
+import org.apache.hadoop.fs.local.LocalFs
+import org.apache.hadoop.util.NativeCodeLoader
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.execution.streaming.checkpointing.FileContextBasedCheckpointFileManager
 import org.apache.spark.sql.streaming.Trigger
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.fs.{NioLocalFileSystem, NioRawLocalFileSystem}
-import graft.fs.NioLocalFileSystem.{ImplKey, NoCacheKey}
+import graft.fs.{NioLocalFileSystem, NioLocalFs, NioRawLocalFileSystem}
+import graft.fs.NioLocalFileSystem.{FcImplKey, ImplKey, NoCacheKey}
 import graft.queries.EmbQueries
-import graft.streaming.{AnnServing, LocalCheckpointFileManager, NewsStream}
-import graft.streaming.LocalCheckpointFileManager.ConfKey
+import graft.streaming.{AnnServing, NewsStream}
 
-/** Where LocalCheckpointFileManager gets installed: by the session preset,
-  * and by the sink starters (NewsStream's and the one ANN sink builder)
-  * on sessions the engine did not build, never
-  * over a manager the session already names. Only the stock manager
-  * leaves Hadoop's `.<name>.crc` files in a local checkpoint, which
-  * tells the two apart. The same hook routes `file:` part files through
-  * NioLocalFileSystem; Hadoop's per-class FileSystem statistics tell
-  * which class wrote them.
+/** Where the nio filesystem gets installed on both Hadoop APIs: by the
+  * session preset, and by the sink starters (NewsStream's and the one
+  * ANN sink builder) on sessions the engine did not build, never over a
+  * class the session already names. `fs.file.impl` carries the part
+  * files; `fs.AbstractFileSystem.file.impl` carries every checkpoint
+  * file, which Spark's stock checkpoint manager writes through
+  * FileContext. Hadoop's per-class FileSystem statistics tell which
+  * class wrote the part files. They do not count FileContext writes
+  * (`DelegateToFileSystem` swaps in its per-URI statistics), so the
+  * checkpoint's `.crc` sidecars and the processes forked on its paths
+  * tell the FileContext classes apart: only the nio one is checksummed
+  * and forks nothing.
   */
 class CheckpointInstallSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
-  private val Local = classOf[LocalCheckpointFileManager].getName
   private val Nio = classOf[NioLocalFileSystem].getName
+  private val NioFc = classOf[NioLocalFs].getName
   private val Stock = classOf[LocalFileSystem].getName
 
   private def tmp(prefix: String): String =
     Files.createTempDirectory(prefix).toFile.getAbsolutePath
 
-  /** Hadoop's `.<name>.crc` sidecars in a checkpoint tree. */
-  private def crcCount(root: String): Long =
-    Files.walk(new File(root).toPath).iterator.asScala.count { p =>
-      val n = p.getFileName.toString
-      n.startsWith(".") && n.endsWith(".crc")
-    }
+  /** The commands of the processes `body` starts that name a path under
+    * `root` (JFR `jdk.ProcessStart`). Without libhadoop, stock Hadoop
+    * local filesystems fork a `chmod` for each file they create and a
+    * `readlink` per stock FileContext rename; the nio ones fork none.
+    */
+  private def forksUnder[T](root: String)(body: => T): (T, Seq[String]) = {
+    val rec = new Recording()
+    rec.enable("jdk.ProcessStart")
+    rec.start()
+    val r = try body finally rec.stop()
+    val f = Files.createTempFile("install_forks", ".jfr")
+    try {
+      rec.dump(f)
+      (r, RecordingFile.readAllEvents(f).asScala.map(_.getString("command"))
+        .filter(_.contains(root)).toSeq)
+    } finally { rec.close(); Files.delete(f) }
+  }
 
-  /** Drain one sample file through the four sinks; the checkpoint root. */
-  private def drainAllSinks(s: SparkSession, table: String): String = {
+  /** Drain one sample file through the four sinks into checkpoint `ck`. */
+  private def drainAllSinks(s: SparkSession, table: String, ck: String): Unit = {
     val in = tmp("install_in")
-    val ck = tmp("install_ck")
     NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
     NewsStream.startAllSinks(NewsStream.pipeline(s, in), tmp("install_out"), ck,
       Trigger.AvailableNow(), memoryTable = table).foreach(_.awaitTermination())
     assert(s.table(table).count() == 6)
-    ck
   }
 
   /** Bytes written so far through `file:` filesystems of class `c`. */
@@ -64,22 +80,28 @@ class CheckpointInstallSpec extends AnyFunSuite {
       .map(Files.size).sum
 
   /** `body` on a new session in the situation of a session the preset did
-    * not build: the context's Hadoop conf names no `file:` class, and the
-    * JVM's cached `file:` instance is the stock one. The preset's cached
-    * instance is restored afterwards.
+    * not build: the context's Hadoop conf names no `file:` FileSystem
+    * class and only `core-default.xml` names the `file:` FileContext
+    * class, and the JVM's cached `file:` instance is the stock one. The
+    * preset's keys and cached instance are restored afterwards.
     */
   private def foreignSession[T](body: SparkSession => T): T = {
     val hc = spark.sparkContext.hadoopConfiguration
     val root = java.net.URI.create("file:///")
-    assert(hc.get(ImplKey) == Nio)
+    assert(hc.get(ImplKey) == Nio && hc.get(FcImplKey) == NioFc)
     FileSystem.get(root, hc).close() // drops the cached instance
     hc.unset(ImplKey)
+    hc.unset(FcImplKey)
+    hc.reloadConfiguration() // core-default.xml's stock LocalFs is back
     try {
       assert(!FileSystem.get(root, hc).isInstanceOf[NioLocalFileSystem])
+      assert(hc.get(FcImplKey) == classOf[LocalFs].getName)
+      assert(hc.getPropertySources(FcImplKey).toSeq == Seq("core-default.xml"))
       body(spark.newSession())
     } finally {
       FileSystem.get(root, hc).close()
       hc.set(ImplKey, Nio)
+      hc.set(FcImplKey, NioFc)
       assert(FileSystem.get(root, hc).isInstanceOf[NioLocalFileSystem])
     }
   }
@@ -110,7 +132,7 @@ class CheckpointInstallSpec extends AnyFunSuite {
   test("a file: class the session already names is kept") {
     val s = spark.newSession()
     s.conf.set(ImplKey, Stock)
-    drainAllSinks(s, "t_install_fs_user")
+    drainAllSinks(s, "t_install_fs_user", tmp("install_ck"))
     assert(s.conf.get(ImplKey) == Stock)
     assert(s.conf.getOption(NoCacheKey).isEmpty)
   }
@@ -140,37 +162,43 @@ class CheckpointInstallSpec extends AnyFunSuite {
     assert(ids.length == 11 && ids.distinct.length == 11)
   }
 
-  test("Session.builder names the local manager; raw writeStream queries use it") {
-    assert(spark.conf.get(ConfKey) == Local)
+  test("Session.builder names NioLocalFs; raw writeStream queries use it") {
+    assert(spark.sparkContext.hadoopConfiguration.get(FcImplKey) == NioFc)
     val in = tmp("preset_in")
     val ck = tmp("preset_ck")
     NewsStream.writeSampleBatch(in, batchId = 0, rows = 4)
-    val q = NewsStream.pipeline(spark, in).writeStream.format("noop")
-      .option("checkpointLocation", ck).trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(new File(ck, "commits/0").isFile)
-    assert(crcCount(ck) == 0)
+    val (_, forks) = forksUnder(ck) {
+      NewsStream.pipeline(spark, in).writeStream.format("noop")
+        .option("checkpointLocation", ck).trigger(Trigger.AvailableNow()).start()
+        .awaitTermination()
+    }
+    // checksummed (a ChecksumFs wrote it) and fork-free (the nio one)
+    assert(new File(ck, "commits/0").isFile && new File(ck, "commits/.0.crc").isFile)
+    assert(forks.isEmpty, forks)
   }
 
-  test("startAllSinks installs the local manager on a session without the preset") {
+  test("startAllSinks installs NioLocalFs on a session without the preset") {
+    foreignSession { s =>
+      val ck = tmp("install_ck")
+      val (_, forks) = forksUnder(ck)(drainAllSinks(s, "t_install_fc_foreign", ck))
+      assert(s.conf.get(FcImplKey) == NioFc)
+      assert(new File(ck, "json/commits/.0.crc").isFile)
+      assert(forks.isEmpty, forks)
+    }
+  }
+
+  test("a FileContext class the session already names is kept") {
     val s = spark.newSession()
-    s.conf.unset(ConfKey)
-    assert(s.conf.getOption(ConfKey).isEmpty)
-    val ck = drainAllSinks(s, "t_install_unset")
-    assert(s.conf.get(ConfKey) == Local)
-    assert(crcCount(ck) == 0)
+    s.conf.set(FcImplKey, classOf[LocalFs].getName)
+    val ck = tmp("install_ck")
+    val (_, forks) = forksUnder(ck)(drainAllSinks(s, "t_install_fc_user", ck))
+    assert(s.conf.get(FcImplKey) == classOf[LocalFs].getName)
+    assert(new File(ck, "json/commits/.0.crc").isFile)
+    if (!NativeCodeLoader.isNativeCodeLoaded)
+      assert(forks.exists(_.startsWith("chmod")), forks)
   }
 
-  test("a manager the session already names is kept") {
-    val stock = classOf[FileContextBasedCheckpointFileManager].getName
-    val s = spark.newSession()
-    s.conf.set(ConfKey, stock)
-    val ck = drainAllSinks(s, "t_install_user")
-    assert(s.conf.get(ConfKey) == stock)
-    assert(crcCount(ck) > 0)
-  }
-
-  test("startPublishedServingSink installs the local manager on a session without the preset") {
+  test("startPublishedServingSink installs NioLocalFs on a foreign session") {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types._
     val dir = TestSpark.sf0001
@@ -189,18 +217,19 @@ class CheckpointInstallSpec extends AnyFunSuite {
     Files.write(new File(in, "q7.json").toPath,
       s"""{"qid":7,"qvec":[${v.mkString(",")}]}\n""".getBytes("UTF-8"))
 
-    val s = spark.newSession()
-    s.conf.unset(ConfKey)
-    val out = tmp("install_ann_out")
-    val ck = tmp("install_ann_ck")
-    val schema = StructType(Seq(StructField("qid", LongType),
-      StructField("qvec", ArrayType(DoubleType))))
-    assert(AnnServing.startPublishedServingSink(
-      s.readStream.schema(schema).json(in), root, vectorsPath, out, ck)
-      .awaitTermination(120000))
-    assert(s.conf.get(ConfKey) == Local)
-    assert(new File(ck, "commits/0").isFile)
-    assert(crcCount(ck) == 0)
-    assert(s.read.parquet(out).count() == 5)
+    foreignSession { s =>
+      val out = tmp("install_ann_out")
+      val ck = tmp("install_ann_ck")
+      val schema = StructType(Seq(StructField("qid", LongType),
+        StructField("qvec", ArrayType(DoubleType))))
+      val (done, forks) = forksUnder(ck)(AnnServing.startPublishedServingSink(
+        s.readStream.schema(schema).json(in), root, vectorsPath, out, ck)
+        .awaitTermination(120000))
+      assert(done)
+      assert(s.conf.get(FcImplKey) == NioFc)
+      assert(new File(ck, "commits/0").isFile && new File(ck, "commits/.0.crc").isFile)
+      assert(forks.isEmpty, forks)
+      assert(s.read.parquet(out).count() == 5)
+    }
   }
 }

@@ -6,7 +6,7 @@ import java.nio.file.{Files, Path => NioPath}
 import java.nio.file.attribute.PosixFilePermissions
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumException, FSDataInputStream, LocalFileSystem, Path}
+import org.apache.hadoop.fs.{ChecksumException, LocalFileSystem, Path}
 import org.apache.hadoop.fs.permission.FsPermission
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,7 +15,7 @@ import graft.fs.NioLocalFileSystem
 /** NioLocalFileSystem keeps the stock local filesystem's contract: the
   * same umasked modes on created files and dirs, explicit modes set
   * as given, an error on a missing path, and `.crc` sidecars the stock
-  * filesystem verifies.
+  * checksum read verifies; a file that fails it stays where it is.
   */
 class NioLocalFileSystemSpec extends AnyFunSuite {
   /** An uncached, initialized instance with the given umask. */
@@ -64,26 +64,23 @@ class NioLocalFileSystemSpec extends AnyFunSuite {
     val dir = Files.createTempDirectory("niofs_crc")
     val p = new Path(dir.toUri.toString, "part-0")
     val body = ("line\n" * 200).getBytes("UTF-8")
-    val out = nio().create(p)
+    val fs = nio()
+    val out = fs.create(p)
     out.write(body)
     out.close()
     assert(Files.isRegularFile(dir.resolve(".part-0.crc")))
-    // the stock checksum check; only its quarantine step is off, which
-    // would move the bad file to a `bad_files` dir at the highest
-    // writable ancestor on the device
-    val verifier = init(new LocalFileSystem {
-      override def reportChecksumFailure(p: Path, in: FSDataInputStream,
-          inPos: Long, sums: FSDataInputStream, sumsPos: Long): Boolean = false
-    })
-    def readStock(): Array[Byte] = {
-      val in = verifier.open(p)
+    def readBack(): Array[Byte] = {
+      val in = fs.open(p)
       try in.readAllBytes() finally in.close()
     }
-    assert(readStock().sameElements(body))
+    assert(readBack().sameElements(body))
     val f = dir.resolve("part-0")
     val bytes = Files.readAllBytes(f)
     bytes(100) = (bytes(100) ^ 1).toByte
     Files.write(f, bytes)
-    intercept[ChecksumException](readStock())
+    intercept[ChecksumException](readBack())
+    // failed in place: not moved to a `bad_files` dir
+    assert(Files.readAllBytes(f).sameElements(bytes))
+    assert(Files.isRegularFile(dir.resolve(".part-0.crc")))
   }
 }

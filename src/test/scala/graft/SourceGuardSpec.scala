@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * graft.Session, the retired bench env knobs stay retired, the ANN
   * index keeps its one writer (the versioned ops behind one sink
   * builder) and its one store (graft.index.IndexStore, CAS-only), the
-  * `file:` class is set in one place, and per-batch values reach
+  * `file:` FileSystem and FileContext classes are set in one place (so
+  * Spark's stock checkpoint manager writes every checkpoint, and the
+  * retired local manager stays retired), and per-batch values reach
   * generated code only through graft.functions.PerBatch.
   */
 class SourceGuardSpec extends AnyFunSuite {
@@ -75,7 +77,8 @@ class SourceGuardSpec extends AnyFunSuite {
       "scoreBatchLabelAware", "startLabelAwareServingSink", "startServingSink",
       "startBqServingSink", "startSqServingSink", "startAdaptiveServingSink",
       "viewCodes", "startFanOutSink", "publishOrConflict",
-      "maintain_versioned_cas")
+      "maintain_versioned_cas", "LocalCheckpointFileManager",
+      "checkpointFileManagerClass")
     val word = ("\\b(" + retired.mkString("|") + ")\\b").r
     val hits = Files.walk(src.toPath).iterator.asScala
       .filter(p => Files.isRegularFile(p) &&
@@ -104,6 +107,11 @@ class SourceGuardSpec extends AnyFunSuite {
 
   test("fs.file.impl is named in src/main code only under graft/fs") {
     assert(filesContaining(new File(src, "main/scala"), "fs.file.impl",
+      codeOnly = true) == Seq("main/scala/graft/fs/NioLocalFileSystem.scala"))
+  }
+
+  test("fs.AbstractFileSystem.file.impl is named in src/main code only under graft/fs") {
+    assert(filesContaining(new File(src, "main/scala"), "fs.AbstractFileSystem.file.impl",
       codeOnly = true) == Seq("main/scala/graft/fs/NioLocalFileSystem.scala"))
   }
 

@@ -549,11 +549,14 @@ class StreamingSpec extends AnyFunSuite {
       .json(s"$out/stream_json")
   }
 
-  /** `_spark_metadata` entry name -> content. */
+  /** `_spark_metadata` entry name -> content (Hadoop's hidden `.crc`
+    * sidecars skipped; the log itself lists only numeric names).
+    */
   private def sinkLog(out: String): Map[String, String] = {
     import scala.jdk.CollectionConverters._
     Files.list(java.nio.file.Paths.get(out, "stream_json", "_spark_metadata"))
-      .iterator.asScala.map(p => p.getFileName.toString ->
+      .iterator.asScala.filterNot(_.getFileName.toString.startsWith("."))
+      .map(p => p.getFileName.toString ->
         new String(Files.readAllBytes(p), "UTF-8")).toMap
   }
 

@@ -1,5 +1,6 @@
 #!/usr/bin/env python3
-"""Janino compiles in the steady phase of a traced perfbench news_stream run.
+"""Janino compiles and process starts in the steady phase of a traced
+perfbench news_stream run.
 
 Usage:
   JAVA_TOOL_OPTIONS="-XX:StartFlightRecording=filename=/tmp/news.jfr,settings=profile,+jdk.ClassDefine#enabled=true" \\
@@ -13,6 +14,13 @@ first micro-batch, and the share of the stream thread's and the task
 threads' execution samples in that window with a Janino frame. A steady
 stream should show 0 of both: its generated code compiles in the first
 micro-batch and is then served from the codegen cache.
+
+It also counts the JFR ProcessStart events in the same window, grouped
+by command. Without libhadoop, Hadoop's stock local filesystem forks a
+`chmod` per file it creates and its FileContext rename a `readlink`; a
+steady stream on the engine's nio filesystem starts neither. Spark 4.1
+itself forks an `rm -rf` about once per micro-batch (its ArtifactManager
+cleanup).
 """
 import datetime
 import json
@@ -72,6 +80,15 @@ def main():
     for kind, t in sorted(total.items()):
         j = janino.get(kind, 0)
         print(f"{kind} thread samples: {t}, with a Janino frame: {j} ({100 * j / t:.1f}%)")
+    forks = {}
+    for e in events(jfr, "jdk.ProcessStart", 1):
+        v = e["values"]
+        if lo < epoch_ms(v["startTime"]) <= hi:
+            cmd = (v["command"] or "").split(" ", 1)[0]
+            forks[cmd] = forks.get(cmd, 0) + 1
+    print(f"process starts after the first micro-batch: {sum(forks.values())}")
+    for cmd, n in sorted(forks.items(), key=lambda kv: -kv[1]):
+        print(f"  {cmd}: {n}")
 
 
 if __name__ == "__main__":
