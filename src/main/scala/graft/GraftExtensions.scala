@@ -11,7 +11,9 @@ import graft.functions.{BpeRunCount, CleanText, IntDot, LangMarkerCounts, LshSig
   * `SparkSession.builder().withExtensions(new GraftExtensions)` or
   * `spark.sql.extensions=graft.GraftExtensions`; after that
   * `SELECT graft_polarity(text), graft_simhash64(tokens) FROM …` works
-  * from plain SQL.
+  * from plain SQL. It injects functions only: no planner strategy and
+  * no optimizer rule, so a query plans the same with or without it
+  * (the grouped top-k operator registers itself, `graft.plans.GroupedTopK`).
   */
 object GraftExtensions {
 
@@ -87,13 +89,5 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(cls.getName, name),
         builder))
     }
-    // whole-operator extension: the grouped top-k physical strategy
-    // (graft.plans.GroupedTopK). Also self-registers per session via
-    // experimental.extraStrategies for sessions built without extensions.
-    e.injectPlannerStrategy(_ => new graft.plans.GroupedTopKStrategy)
-    // optimizer leg: the row_number-filter-drop idiom rewrites into the
-    // bounded-state operator above (extensions sessions only — a plain
-    // session keeps stock window plans)
-    e.injectOptimizerRule(_ => graft.plans.WindowTopKRewrite)
   }
 }

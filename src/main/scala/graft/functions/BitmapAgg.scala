@@ -22,6 +22,13 @@ import org.apache.spark.sql.expressions.Aggregator
   * domains (users, skus, nodes); an unbounded/sparse domain needs the
   * compressed (roaring) variant or HLL. Growth is amortized
   * (next-power-of-two words), ids must be ≥ 0 (filter first).
+  *
+  * WHY it stays beside Spark 4.1's `bitmap_construct_agg` /
+  * `bitmap_or_agg` / `bitmap_and_agg` / `bitmap_count` (measured): the
+  * native form returns identical rows at sf0.001, sf0.01, sf0.1 and 10×
+  * sf0.1, but its two-level (bucket, then OR) `ev_bitmap_distinct` took
+  * 217/220/242/366 ms at those scales against 135/206/121/260 ms for
+  * this aggregator; `ev_bitmap_overlap` was within noise (`local[4]`).
   */
 class BitmapBuildAgg extends Aggregator[Long, Array[Long], Array[Long]] {
 

@@ -623,14 +623,14 @@ object EmbQueries {
            |  round(CAST(count(*) AS DOUBLE) / 5, 6) AS recall_at_k
            |FROM exact JOIN approx USING (vec_id)""".stripMargin)),
 
-    // Grouped ANN via the custom TopKAgg Aggregator: top-3 neighbours
-    // for EACH of 5 query vectors in one pass — partial+final aggregation
-    // with a bounded O(k) buffer, no per-group sort. Oracle = row_number
-    // window over the same cross join.
+    // Grouped ANN: top-3 neighbours for EACH of 5 query vectors in one
+    // pass through the GroupedTopK operator (a k-row heap per q_id
+    // below the exchange), then row_number over the <= 3 survivors per
+    // q_id for the rank. Oracle = row_number window over the same cross
+    // join.
     Q(
       "emb_multi_knn",
       (s, d) => {
-        import graft.functions.{ScoredId, TopKAgg}
         val e = emb(s, d)
         val qs = broadcast(e.filter(col("vec_id") < 5)
           .select(col("vec_id").as("q_id"), col("embedding").as("qv")))
@@ -639,20 +639,15 @@ object EmbQueries {
           .select(col("q_id"),
             round(cosine(col("embedding"), col("qv")), 6).as("sim"),
             col("vec_id"))
-          // off-contract vectors score NULL (kernel convention) and a
-          // null can't rank in a top-k — drop BEFORE the typed
-          // aggregator, whose non-nullable Double encoder would throw
+          // off-contract vectors score NULL (kernel convention); the
+          // oracle drops them rather than ranking them last
           .filter(col("sim").isNotNull)
-        import s.implicits._
-        val topK = new TopKAgg(3).toColumn
-        scored.as[(Long, Double, Long)]
-          .groupByKey(_._1)
-          .mapValues(t => ScoredId(t._2, t._3))
-          .agg(topK.name("top"))
-          .toDF("q_id", "top")
-          .select(col("q_id"), posexplode(col("top")).as(Seq("rk0", "n")))
-          .select(col("q_id"), (col("rk0") + 1).as("rk"),
-            col("n.id").as("neighbor_id"), col("n.score").as("sim"))
+        val byRank = Window.partitionBy("q_id")
+          .orderBy(col("sim").desc, col("vec_id"))
+        graft.plans.GroupedTopK(
+          scored, Seq("q_id"), Seq(scored("sim").desc, scored("vec_id")), 3)
+          .select(col("q_id"), row_number().over(byRank).as("rk"),
+            col("vec_id").as("neighbor_id"), col("sim"))
           .orderBy("q_id", "rk")
       },
       Some(

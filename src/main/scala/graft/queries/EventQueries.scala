@@ -369,9 +369,12 @@ object EventQueries {
     // Grouped top-k through the CUSTOM CATALYST OPERATOR
     // (graft.plans.GroupedTopK: LogicalPlan + SparkStrategy + two-phase
     // SparkPlan). Same answer as the row_number() window form the oracle
-    // uses, but each map partition is reduced to <= k rows per group
-    // BEFORE the exchange and no full group is ever sorted — the
-    // window form shuffles and sorts every row of every group.
+    // uses. Spark plans that form as partial + final WindowGroupLimit,
+    // whose partial phase sorts each whole map partition; the operator
+    // keeps a 3-row heap per group instead. On 4 cores (local[4], noop
+    // sink, median of 10 alternating reps), 1M rows in 5 groups took
+    // 315 ms against 671 ms, and this query over 1M events (10x sf0.1)
+    // 270 ms against 1,479 ms; the window form won none of either 10.
     // GroupedTopKSpec pins plan shape and window-parity.
     Q(
       "ev_grouped_topk",

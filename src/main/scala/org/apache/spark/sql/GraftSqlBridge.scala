@@ -25,14 +25,6 @@ object GraftSqlBridge {
   def experimental(spark: SparkSession): ExperimentalMethods =
     spark.asInstanceOf[classic.SparkSession].experimental
 
-  /** every strategy the session's planner consults (session-state
-    * extraPlanningStrategies included) — lets the self-registration path
-    * detect a strategy already injected via SparkSessionExtensions
-    */
-  def plannerStrategies(spark: SparkSession): Seq[Any] =
-    spark.asInstanceOf[classic.SparkSession]
-      .sessionState.planner.strategies
-
   /** Rebuild `df` as a flat scan over its own (lazily evaluated)
     * InternalRow RDD. Iterative algorithms that feed a DataFrame back
     * into joins each round otherwise nest the previous round's plan

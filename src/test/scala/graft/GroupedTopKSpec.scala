@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -10,8 +11,9 @@ import graft.plans.GroupedTopK
 /** The custom Catalyst operator (LogicalPlan + SparkStrategy + two-phase
   * SparkPlan): result parity against the window-function form it
   * replaces, plan shape (partial below the exchange, final above, no
-  * sort/window nodes), and edge behavior (k >= group size, ties, k = 1,
-  * extensions-built session).
+  * sort/window nodes, partitioning a consumer reuses), and edge behavior
+  * (k >= group size, ties, k = 1, null keys and null order values across
+  * shuffle widths and AQE, a fresh session).
   */
 class GroupedTopKSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
@@ -33,7 +35,7 @@ class GroupedTopKSpec extends AnyFunSuite {
       .filter(col("rn") <= k).drop("rn")
   }
 
-  private def collectSorted(df: org.apache.spark.sql.DataFrame) =
+  private def collectSorted(df: DataFrame) =
     df.orderBy("g", "rid").collect().map(_.toSeq).toSeq
 
   test("matches the row_number window form (k=3, desc with tiebreak)") {
@@ -78,78 +80,64 @@ class GroupedTopKSpec extends AnyFunSuite {
       s"final<exchange<partial expected:\n${p.take(800)}")
   }
 
-  test("strategy arrives via SparkSessionExtensions too") {
-    // force the builder past the shared default session: with active +
-    // default cleared it builds a NEW SparkSession instance on the live
-    // SparkContext (getOrCreate would otherwise hand back the shared
-    // session, extensions unapplied). The config-string form of
-    // spark.sql.extensions only loads on SparkContext creation, so with a
-    // reused context the class must arrive via withExtensions — same
-    // GraftExtensions code path a fresh cluster session gets from config.
-    spark.sparkContext // ensure the shared context exists first
-    val prior = SparkSession.getDefaultSession
-    SparkSession.clearActiveSession()
-    SparkSession.clearDefaultSession()
-    val s2 = SparkSession.builder()
-      .appName("graft-ext-topk")
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", "2")
-      .getOrCreate()
-    try {
-      assert(s2 ne spark, "builder must hand back a fresh session instance")
-      // a fresh plan in the extensions session, NOT via the self-
-      // registering API object — the strategy must come from extensions
-      val df = s2.range(100).select(
-        (col("id") % 3).as("g"), col("id").as("rid"))
-      val plan = graft.plans.GroupedTopKPlan(
-        Seq(org.apache.spark.sql.GraftSqlBridge.expression(df("g"))),
-        Seq(org.apache.spark.sql.catalyst.expressions.SortOrder(
-          org.apache.spark.sql.GraftSqlBridge.expression(df("rid")),
-          org.apache.spark.sql.catalyst.expressions.Descending)),
-        2, df.queryExecution.analyzed)
-      val out = org.apache.spark.sql.GraftSqlBridge.ofRows(s2, plan)
-      assert(out.count() == 6)
-      assert(out.queryExecution.executedPlan.toString.contains("GroupedTopKFinal"))
+  test("a fresh session plans GroupedTopKFinal through self-registration") {
+    // newSession: shared SparkContext, its own session state, so its
+    // experimental.extraStrategies starts empty
+    val s2 = spark.newSession()
+    assert(GraftSqlBridge.experimental(s2).extraStrategies.isEmpty)
+    val df = s2.range(100).select((col("id") % 3).as("g"), col("id").as("rid"))
+    val out = GroupedTopK(df, Seq("g"), Seq(df("rid").desc), 2)
+    assert(out.count() == 6)
+    assert(out.queryExecution.executedPlan.toString.contains("GroupedTopKFinal"))
+    GroupedTopK.ensureRegistered(s2)
+    assert(GraftSqlBridge.experimental(s2).extraStrategies ==
+      Seq(graft.plans.GroupedTopKStrategy))
+  }
 
-      // optimizer rule: the row_number-filter-drop idiom must silently
-      // re-plan into the operator in an extensions session — and return
-      // exactly what the window form returns in a stock session
-      val idiom = {
-        val base = s2.range(300).select(
-          (col("id") % 5).as("g"), col("id").as("rid"),
-          ((col("id") * 13) % 83).as("v"))
-        val w = Window.partitionBy("g").orderBy(col("v").desc, col("rid"))
-        base.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 4).drop("rn")
-      }
-      val planStr = idiom.queryExecution.executedPlan.toString
-      assert(planStr.contains("GroupedTopKFinal"), planStr.take(800))
-      assert(!planStr.contains("Window"), planStr.take(800))
-      val stock = {
-        val base = spark.range(300).select(
-          (col("id") % 5).as("g"), col("id").as("rid"),
-          ((col("id") * 13) % 83).as("v"))
-        val w = Window.partitionBy("g").orderBy(col("v").desc, col("rid"))
-        base.withColumn("rn", row_number().over(w))
-          .filter(col("rn") <= 4).drop("rn")
-      }
-      assert(idiom.orderBy("g", "rid").collect().map(_.toSeq).toSeq ==
-        stock.orderBy("g", "rid").collect().map(_.toSeq).toSeq)
-
-      // rank column KEPT -> schema depends on rn -> must NOT rewrite
-      val kept = {
-        val base = s2.range(100).select((col("id") % 3).as("g"), col("id").as("rid"))
-        val w = Window.partitionBy("g").orderBy(col("rid"))
-        base.withColumn("rn", row_number().over(w)).filter(col("rn") <= 2)
-      }
-      assert(kept.queryExecution.executedPlan.toString.contains("Window"))
-    } finally {
-      // do NOT stop s2 — it shares the one test SparkContext; just put the
-      // shared session back as active/default for the remaining suites
-      SparkSession.clearActiveSession()
-      SparkSession.clearDefaultSession()
-      prior.foreach(SparkSession.setDefaultSession)
-      prior.foreach(SparkSession.setActiveSession)
+  test("null group key is its own group; null order values rank last under DESC") {
+    // 500 rows in 5 groups plus every 11th row in the null group, v null
+    // on every 3rd row; group 100 has only 2 non-null v values, so its
+    // 3rd row must be a null-v row (DESC NULLS LAST, then rid)
+    def data(s: SparkSession) = s.range(500).select(
+      when(col("id") % 11 =!= 0, col("id") % 5).as("g"),
+      col("id").as("rid"),
+      when(col("id") % 3 =!= 0, ((col("id") * 37) % 101).cast("double")).as("v"))
+      .union(s.range(500, 504).select(lit(100L).as("g"), col("id").as("rid"),
+        when(col("id") >= 502, col("id").cast("double")).as("v")))
+    def window(df: DataFrame) =
+      df.withColumn("rn", row_number().over(
+        Window.partitionBy("g").orderBy(col("v").desc, col("rid"))))
+        .filter(col("rn") <= 3).drop("rn")
+    for (parts <- Seq("1", "4"); aqe <- Seq("true", "false")) {
+      val s2 = spark.newSession()
+      s2.conf.set("spark.sql.shuffle.partitions", parts)
+      s2.conf.set("spark.sql.adaptive.enabled", aqe)
+      val df = data(s2)
+      val got = collectSorted(
+        GroupedTopK(df, Seq("g"), Seq(df("v").desc, df("rid")), 3))
+      assert(got == collectSorted(window(df)), s"partitions=$parts aqe=$aqe")
+      assert(got.count(_.head == null) == 3, s"partitions=$parts aqe=$aqe")
+      assert(got.filter(_.head == 100L).map(r => (r(1), r(2))) ==
+        Seq((500L, null), (502L, 502.0), (503L, 503.0)),
+        s"partitions=$parts aqe=$aqe")
     }
+  }
+
+  test("plan: a join on the group keys reuses the final phase's exchange") {
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    s2.conf.set("spark.sql.adaptive.enabled", "false")
+    val df = s2.range(1000).select(
+      (col("id") % 50).as("user_id"), col("id").as("event_id"),
+      ((col("id") * 37) % 101).as("value"))
+    val top = GroupedTopK(df, Seq("user_id"),
+      Seq(df("value").desc, df("event_id")), 1)
+    val joined = top.join(
+      df.groupBy("user_id").agg(count(lit(1)).as("n")), "user_id")
+    val exchanges = joined.queryExecution.executedPlan.collect {
+      case e: ShuffleExchangeExec => e
+    }
+    assert(exchanges.size == 2, joined.queryExecution.executedPlan)
+    assert(joined.count() == 50)
   }
 }

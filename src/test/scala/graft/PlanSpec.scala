@@ -161,6 +161,13 @@ class PlanSpec extends AnyFunSuite {
     assert(!p.contains("SortMergeJoin"), p.take(800))
   }
 
+  test("multi-knn: GroupedTopK, no typed aggregate") {
+    val p = plan("emb_multi_knn")
+    assert(p.contains("GroupedTopKFinal"), p.take(1200))
+    for (typed <- Seq("AppendColumns", "DeserializeToObject", "ObjectHashAggregate"))
+      assert(!p.contains(typed), s"$typed\n${p.take(1200)}")
+  }
+
   test("pii density is scan + one aggregation, no join") {
     val p = plan("doc_pii_density")
     assert(!p.contains("Join"), p.take(600))

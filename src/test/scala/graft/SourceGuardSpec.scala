@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * builder) and its one store (graft.index.IndexStore, CAS-only), the
   * `file:` FileSystem and FileContext classes are set in one place (so
   * Spark's stock checkpoint manager writes every checkpoint, and the
-  * retired local manager stays retired), and per-batch values reach
-  * generated code only through graft.functions.PerBatch.
+  * retired local manager stays retired), per-batch values reach
+  * generated code only through graft.functions.PerBatch, and the grouped
+  * top-k has one path (graft.plans.GroupedTopK, self-registered).
   */
 class SourceGuardSpec extends AnyFunSuite {
   private lazy val src: File =
@@ -41,6 +42,21 @@ class SourceGuardSpec extends AnyFunSuite {
         l.contains(needle) && !(codeOnly && isComment(l))))
       .map(p => src.toPath.relativize(p).toString)
       .toSeq.sorted
+
+  /** `file: name` for every whole-word use of a `retired` name under
+    * src/ outside this spec (with `codeOnly`, on non-comment lines only)
+    */
+  private def namedUnderSrc(retired: Seq[String],
+      codeOnly: Boolean = false): Seq[String] = {
+    val word = ("\\b(" + retired.mkString("|") + ")\\b").r
+    Files.walk(src.toPath).iterator.asScala
+      .filter(p => Files.isRegularFile(p) &&
+        !p.toString.endsWith("SourceGuardSpec.scala"))
+      .flatMap(p => Files.readAllLines(p).asScala
+        .filterNot(l => codeOnly && isComment(l))
+        .flatMap(word.findAllIn(_)).map(src.toPath.relativize(p) + ": " + _))
+      .toSeq
+  }
 
   test("SparkSession.builder appears in src/main/scala only in graft/Session.scala") {
     assert(filesContaining(new File(src, "main/scala"), "SparkSession.builder",
@@ -79,14 +95,21 @@ class SourceGuardSpec extends AnyFunSuite {
       "viewCodes", "startFanOutSink", "publishOrConflict",
       "maintain_versioned_cas", "LocalCheckpointFileManager",
       "checkpointFileManagerClass")
-    val word = ("\\b(" + retired.mkString("|") + ")\\b").r
-    val hits = Files.walk(src.toPath).iterator.asScala
-      .filter(p => Files.isRegularFile(p) &&
-        !p.toString.endsWith("SourceGuardSpec.scala"))
-      .flatMap(p => Files.readAllLines(p).asScala
-        .flatMap(word.findAllIn(_)).map(src.toPath.relativize(p) + ": " + _))
-      .toSeq
+    val hits = namedUnderSrc(retired)
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the retired top-k mechanisms are named in no code line under src/") {
+    // code-only: a comment may still give the measured reason one went
+    val hits = namedUnderSrc(Seq("TopKByAgg", "TopKAgg", "TopKTermAgg",
+      "WindowTopKRewrite", "injectPlannerStrategy", "injectOptimizerRule"),
+      codeOnly = true)
+    assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("GroupedTopKPlan is built in src/main only in graft/plans/GroupedTopK.scala") {
+    assert(filesContaining(new File(src, "main/scala"), "GroupedTopKPlan(",
+      codeOnly = true) == Seq("main/scala/graft/plans/GroupedTopK.scala"))
   }
 
   test("no op takes a cas flag: the only cas parameter left is casPublish") {

@@ -6,18 +6,24 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** End-to-end demo of the pure-SQL surface: a user who attaches
   * `spark.sql.extensions=graft.GraftExtensions` (here: the in-JVM
-  * `withExtensions` equivalent — see GroupedTopKSpec for why) and never
+  * `withExtensions` equivalent, see `withExtSession`) and never
   * touches the Scala API gets the whole engine from `spark.sql(...)`:
-  * native sentiment scoring, fingerprint/signature functions, and the
-  * row_number top-k idiom silently re-planned into the bounded-state
-  * GroupedTopK operator. Each SQL result is checked against the
-  * DataFrame-API path computing the same thing.
+  * native sentiment scoring, fingerprint/signature functions and vector
+  * kernels. The extensions inject functions only, so the row_number
+  * top-k idiom plans as Spark's WindowGroupLimit with or without them.
+  * Each SQL result is checked against the DataFrame-API path (or plain
+  * session) computing the same thing.
   */
 class SqlSurfaceSpec extends AnyFunSuite {
   private lazy val spark = TestSpark.spark
 
   /** fresh extensions session on the shared context (never stopped;
-    * active/default restored) — the GroupedTopKSpec recipe
+    * active/default restored). With active + default cleared the builder
+    * makes a NEW session on the live SparkContext instead of handing back
+    * the shared one. The config-string form of spark.sql.extensions only
+    * loads when a SparkContext is created, so on a reused context the
+    * class must arrive via withExtensions, the same GraftExtensions code
+    * path a fresh cluster session gets from config.
     */
   private def withExtSession[A](f: SparkSession => A): A = {
     spark.sparkContext
@@ -79,48 +85,51 @@ class SqlSurfaceSpec extends AnyFunSuite {
     }
   }
 
-  test("keep-first dedup via the SQL row_number idiom hits GroupedTopK") {
-    withExtSession { s =>
+  test("SQL keep-first idiom: WindowGroupLimit, same rows with or without extensions") {
+    // the standard SQL keep-first-per-fingerprint idiom; GraftExtensions
+    // injects functions only, so it plans as Spark's WindowGroupLimit in
+    // both sessions and returns the same rows
+    val idiom =
+      """SELECT doc_id, fp FROM (
+        |  SELECT doc_id, fp,
+        |         row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
+        |  FROM fps) WHERE rn <= 1""".stripMargin
+    def keepFirst(s: SparkSession): (Seq[Seq[Any]], String) = {
+      val dedup = s.sql(idiom)
+      dedup.queryExecution.toRdd.count() // finalize adaptive plan
+      (rows(dedup.orderBy("doc_id")), dedup.queryExecution.executedPlan.toString)
+    }
+    val withExt = withExtSession { s =>
       s.sql(
         s"CREATE OR REPLACE TEMP VIEW news AS SELECT * FROM " +
           s"parquet.`${TestSpark.sf0001}/documents.parquet`")
-      // the standard SQL keep-first-per-fingerprint idiom; the optimizer
-      // rule must re-plan it into the bounded-state custom operator.
-      // Tokenization is pure SQL (same clean/split/filter as TextFns).
-      val dedup = s.sql(
-        """WITH fps AS (
-          |  SELECT doc_id, graft_simhash64(
-          |    filter(split(lower(regexp_replace(coalesce(text, ''),
-          |                                      '[^a-zA-Z\\s]', '')),
-          |                 '\\s+'), x -> x <> '')) AS fp
-          |  FROM news)
-          |SELECT doc_id, fp FROM (
-          |  SELECT doc_id, fp,
-          |         row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn
-          |  FROM fps) WHERE rn <= 1""".stripMargin)
-      val planStr = {
-        dedup.queryExecution.toRdd.count() // finalize adaptive plan
-        dedup.queryExecution.executedPlan.toString
-      }
-      assert(planStr.contains("GroupedTopKFinal"), planStr.take(800))
-      assert(!planStr.contains("Window"), planStr.take(800))
-      // parity: same rows as the window form in the stock session
-      // (where the rule is not installed)
-      val stock = spark.read
-        .parquet(s"${TestSpark.sf0001}/documents.parquet")
-        .selectExpr("doc_id", "text")
-        .withColumn("fp", org.apache.spark.sql.GraftSqlBridge.column(
-          graft.functions.SimHash64(
-            org.apache.spark.sql.GraftSqlBridge.expression(
-              graft.functions.TextFns.tokens(
-                graft.functions.TextFns.clean(col("text")))))))
-        .withColumn("rn", row_number().over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy("fp").orderBy("doc_id")))
-        .filter(col("rn") === 1).select("doc_id", "fp")
-      assert(stock.queryExecution.executedPlan.toString.contains("Window"))
-      assert(rows(dedup.orderBy("doc_id")) == rows(stock.orderBy("doc_id")))
+      // tokenization in pure SQL (same clean/split/filter as TextFns)
+      s.sql(
+        """CREATE OR REPLACE TEMP VIEW fps AS
+          |SELECT doc_id, graft_simhash64(
+          |  filter(split(lower(regexp_replace(coalesce(text, ''),
+          |                                    '[^a-zA-Z\\s]', '')),
+          |               '\\s+'), x -> x <> '')) AS fp
+          |FROM news""".stripMargin)
+      keepFirst(s)
     }
+    // a plain session on the shared context: fingerprints via the
+    // DataFrame API, the same idiom in SQL
+    val plain = spark.newSession()
+    plain.read.parquet(s"${TestSpark.sf0001}/documents.parquet")
+      .select(col("doc_id"), org.apache.spark.sql.GraftSqlBridge.column(
+        graft.functions.SimHash64(
+          org.apache.spark.sql.GraftSqlBridge.expression(
+            graft.functions.TextFns.tokens(
+              graft.functions.TextFns.clean(col("text")))))).as("fp"))
+      .createOrReplaceTempView("fps")
+    val without = keepFirst(plain)
+    for ((_, plan) <- Seq(withExt, without)) {
+      assert(plan.contains("WindowGroupLimit"), plan.take(800))
+      assert(!plan.contains("GroupedTopK"), plan.take(800))
+    }
+    assert(withExt._1.nonEmpty)
+    assert(withExt._1 == without._1)
   }
 
   test("round-6 kernels are SQL-callable: bpe runs + quantized dot") {
