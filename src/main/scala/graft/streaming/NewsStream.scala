@@ -4,8 +4,6 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
-import org.apache.spark.sql.execution.datasources.json.JsonFileFormat
-import org.apache.spark.sql.execution.streaming.sinks.FileStreamSink
 import org.apache.spark.sql.execution.streaming.sources.{MemoryPlan, MemorySink}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -105,9 +103,10 @@ private[streaming] class BandDedupProcessor(delayMs: Long)
   * lineage, so each article is listed, parsed, cleaned and scored four
   * times (streaming_pipeline.py:196–241). `startAllSinks` keeps the four
   * sinks but feeds them from ONE query: each micro-batch is computed
-  * once, cached, and handed to Spark's own file and memory sinks, both
-  * idempotent by batch id, so replay stays exactly-once (SURVEY.md
-  * §7.3.5).
+  * and collected once, by one Spark job, and its rows go to the JSON
+  * sink (written on the driver, committed to Spark's `_spark_metadata`
+  * log) and to Spark's memory sink, both idempotent by batch id, so
+  * replay stays exactly-once (SURVEY.md §7.3.5).
   *
   * Every sink starter calls `NioLocalFileSystem.install` first, so
   * sessions the engine did not build also write checkpoint files (through
@@ -129,19 +128,27 @@ object NewsStream {
 
   /** K1–K4: the reference's four sinks, fed by one streaming query named
     * `memoryTable` (the returned Seq's only element; a second live
-    * pipeline on the same table fails to start). Per micro-batch, in
-    * order: persist; write the JSON files through Spark's
-    * `FileStreamSink` (same `_spark_metadata` log and part files as a
-    * `format("json")` query; the JSON commit comes first because it is
-    * the durable sink); collect once into Spark's `MemorySink`, read as
-    * the temp view `memoryTable`; print the console block (K1: `Batch: N`
-    * and 5 untruncated rows) and K4's guard, count, 3-row sample and
-    * per-label count from the collected rows; unpersist. Both Spark sinks
+    * pipeline on the same table fails to start). Each micro-batch runs
+    * one Spark job, a `collect()`; from its rows, in order: the JSON
+    * sink writes and commits its part file ([[DriverJsonSink]]: the same
+    * `_spark_metadata` log and JSON lines as a `format("json")` query;
+    * it comes first because it is the durable sink); Spark's
+    * `MemorySink` takes them, read as the temp view `memoryTable`; the
+    * console block (K1: `Batch: N` and 5 untruncated rows) and K4's
+    * guard, count, 3-row sample and per-label count print. Both sinks
     * skip a batch id they already hold, so a replayed batch is not
     * written twice. The checkpoint is `$checkpointRoot/json`, where the
     * four-query layout kept the JSON sink's, so a restart from that
     * layout resumes its JSON batch ids. `trigger` overridable so tests
     * can use AvailableNow.
+    *
+    * Scale trade-off: `MemorySink` already holds every row on the driver,
+    * so the JSON encoding moves from N write tasks onto the stream
+    * thread, and the batch is neither cached nor shipped to a second
+    * job. On 4 cores a 4,000-row backlog trigger still drained faster
+    * this way than through `FileStreamSink`'s write job (which also
+    * ships the session's whole Hadoop conf inside every task); a batch
+    * too large for the driver is too large for `MemorySink` first.
     */
   def startAllSinks(
       df: DataFrame,
@@ -150,39 +157,34 @@ object NewsStream {
       trigger: Trigger = Trigger.ProcessingTime(TriggerInterval),
       memoryTable: String = "news_sentiment"): Seq[StreamingQuery] = {
     val spark = df.sparkSession
-    // before the sinks: the file sink's `_spark_metadata` log takes its
-    // Hadoop conf, and with it both `file:` classes, when it is built
+    // before the sinks: the JSON sink builds its Hadoop conf, and with it
+    // both `file:` classes, when it is built
     NioLocalFileSystem.install(spark)
-    val jsonPath = s"$outputDir/stream_json"
-    val json = new FileStreamSink(spark, jsonPath, new JsonFileFormat, Nil,
-      Map("path" -> jsonPath))
+    val json = new DriverJsonSink(spark, s"$outputDir/stream_json", df.schema)
     val memory = new MemorySink
+    val header = df.schema.fieldNames.toSeq
+    val label = df.schema.fieldIndex("sentiment")
     val query = df.writeStream
       .queryName(memoryTable).outputMode("append")
       .option("checkpointLocation", s"$checkpointRoot/json")
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.persist()
-        try {
-          json.addBatch(batchId, batch)
-          val rows = batch.collect()
-          memory.write(batchId, needTruncate = false, rows)
-          val header = batch.schema.fieldNames.toSeq
-          println("-------------------------------------------")
-          println(s"Batch: $batchId")
-          println("-------------------------------------------")
-          showRows(header, rows, 5)
-          // K4 (streaming_pipeline.py:75–95): guard, count, sample,
-          // group-count
-          if (rows.nonEmpty) {
-            println(s"[batch $batchId] ${rows.length} rows")
-            showRows(header, rows, 3)
-            val label = batch.schema.fieldIndex("sentiment")
-            val counts = rows.groupBy(r => String.valueOf(r.get(label)))
-              .toArray.sortBy(_._1).map { case (l, rs) => Row(l, rs.length) }
-            showRows(Seq("sentiment", "count"), counts, counts.length)
-          }
-        } finally batch.unpersist()
+        val rows = batch.collect()
+        json.addBatch(batchId, rows)
+        memory.write(batchId, needTruncate = false, rows)
+        println("-------------------------------------------")
+        println(s"Batch: $batchId")
+        println("-------------------------------------------")
+        showRows(header, rows, 5)
+        // K4 (streaming_pipeline.py:75–95): guard, count, sample,
+        // group-count
+        if (rows.nonEmpty) {
+          println(s"[batch $batchId] ${rows.length} rows")
+          showRows(header, rows, 3)
+          val counts = rows.groupBy(r => String.valueOf(r.get(label)))
+            .toArray.sortBy(_._1).map { case (l, rs) => Row(l, rs.length) }
+          showRows(Seq("sentiment", "count"), counts, counts.length)
+        }
         ()
       }
       .start()

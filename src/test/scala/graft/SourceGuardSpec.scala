@@ -14,8 +14,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * `file:` FileSystem and FileContext classes are set in one place (so
   * Spark's stock checkpoint manager writes every checkpoint, and the
   * retired local manager stays retired), per-batch values reach
-  * generated code only through graft.functions.PerBatch, and the grouped
-  * top-k has one path (graft.plans.GroupedTopK, self-registered).
+  * generated code only through graft.functions.PerBatch, the grouped
+  * top-k has one path (graft.plans.GroupedTopK, self-registered), and the
+  * news stream runs one Spark job per micro-batch (no cache, no
+  * FileStreamSink write job).
   */
 class SourceGuardSpec extends AnyFunSuite {
   private lazy val src: File =
@@ -84,6 +86,17 @@ class SourceGuardSpec extends AnyFunSuite {
       .asScala.filterNot(isComment).mkString("\n")
     val body = code.drop(code.indexOf("def startAllSinks("))
     assert(".writeStream".r.findAllIn(body.take(body.indexOf("\n  def "))).size == 1)
+  }
+
+  test("the news stream's sinks cache no micro-batch and build no FileStreamSink") {
+    // one job per micro-batch: a cache is a second job (and a session
+    // clone), Spark's file sink a write job with the Hadoop conf per task
+    val banned = "\\.persist\\(|\\.cache\\(|new\\s+FileStreamSink\\b(?!Log)".r
+    val hits = Seq("NewsStream.scala", "DriverJsonSink.scala").flatMap(f =>
+      Files.readAllLines(new File(src, s"main/scala/graft/streaming/$f").toPath)
+        .asScala.filterNot(isComment)
+        .filter(l => banned.findFirstIn(l).isDefined).map(f + ": " + _.trim))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("the retired in-place ANN ops and per-scorer sinks are named nowhere under src/") {

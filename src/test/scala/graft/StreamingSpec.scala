@@ -591,16 +591,14 @@ class StreamingSpec extends AnyFunSuite {
       org.apache.spark.sql.GraftSqlBridge.waitListenersEmpty(
         spark.sparkContext, 60000)
       val runs = qs.map(_.runId.toString).toSet
-      // one batch, two jobs: the JSON write (which fills the cache) and
-      // the collect; console and K4 print from the collected rows
-      assert(jobGroup.values.asScala.count(runs) == 2)
-      // the 6 file records once, plus 1: the collect reads the batch's
-      // one cached column batch back, and Spark counts each cached
-      // block element as a record. Four queries read the file 4 times.
+      // one batch, one job: the collect; the JSON sink, the memory sink,
+      // console and K4 all take the collected rows
+      assert(jobGroup.values.asScala.count(runs) == 1)
+      // the 6 file records, once (four queries read the file 4 times)
       val recordsRead = read.asScala.collect {
         case (stage, n) if runs(stageGroup.getOrDefault(stage, "")) => n.longValue
       }.sum
-      assert(recordsRead == 6 + 1)
+      assert(recordsRead == 6)
       assert(qs.flatMap(_.recentProgress).map(_.numInputRows).sum == 6)
       assert(spark.table("t_once").count() == 6)
     } finally spark.sparkContext.removeSparkListener(listener)
@@ -644,7 +642,101 @@ class StreamingSpec extends AnyFunSuite {
     assert(new java.io.File(ckpt, "json/commits/1").isFile)
     assert(jsonSinkRows(out).collect().toSet == rows)
     assert(sinkLog(out) == log)
+    // the replay wrote no part file either: every one on disk is logged
+    assert(partFiles(out) == logEntries(out).values.flatten.map(_._1).toSet)
     assert(spark.table("t_replay").count() == 5)
+  }
+
+  /** The JSON sink's `_spark_metadata` log: batch id -> each entry's
+    * (file, size, action).
+    */
+  private def logEntries(out: String)
+      : Map[Long, Seq[(java.nio.file.Path, Long, String)]] = {
+    def field(entry: String, name: String): String =
+      ("\"" + name + "\":\"?([^\",}]*)").r.findFirstMatchIn(entry).get.group(1)
+    sinkLog(out).map { case (n, content) =>
+      val lines = content.linesIterator.toSeq
+      assert(lines.head == "v1", s"$n: ${lines.head}")
+      n.toLong -> lines.tail.map(e => (
+        java.nio.file.Paths.get(new java.net.URI(field(e, "path"))),
+        field(e, "size").toLong, field(e, "action")))
+    }
+  }
+
+  /** The JSON sink's part files on disk (`.crc` sidecars skipped). */
+  private def partFiles(out: String): Set[java.nio.file.Path] = {
+    import scala.jdk.CollectionConverters._
+    Files.list(java.nio.file.Paths.get(out, "stream_json")).iterator.asScala
+      .filter(p => Files.isRegularFile(p) && p.getFileName.toString.startsWith("part-"))
+      .toSet
+  }
+
+  test("startAllSinks' JSON sink writes and logs what a format(\"json\") query does") {
+    import scala.jdk.CollectionConverters._
+    val in = tmp("parity_in")
+    NewsStream.writeSampleBatch(in, batchId = 0, rows = 7)
+    NewsStream.writeSampleBatch(in, batchId = 1, rows = 5)
+    // a file whose every article the non-empty filter drops
+    Files.write(java.nio.file.Paths.get(in, "batch_filtered.json"), Seq(
+      """{"id":"e0","title":"t0","description":"","lang":"en"}""",
+      """{"id":"e1","title":"t1","description":null,"lang":"en"}""").asJava)
+    // one file per batch, in this order: kept, kept, all filtered
+    val t0 = System.currentTimeMillis() - 60000
+    Seq("batch_00000.json", "batch_00001.json", "batch_filtered.json")
+      .zipWithIndex.foreach { case (f, i) => Files.setLastModifiedTime(
+        java.nio.file.Paths.get(in, f),
+        java.nio.file.attribute.FileTime.fromMillis(t0 + i * 1000L)) }
+    def src = pipeline.NewsPipeline.transform(spark.readStream
+      .schema(schema.NewsArticle.schema).option("maxFilesPerTrigger", 1).json(in))
+    val stock = tmp("parity_stock")
+    assert(src.writeStream.format("json").outputMode("append")
+      .option("path", s"$stock/stream_json")
+      .option("checkpointLocation", tmp("parity_stock_ck"))
+      .trigger(Trigger.AvailableNow()).start().awaitTermination(120000))
+    val out = tmp("parity_out")
+    NewsStream.startAllSinks(src, out, tmp("parity_ck"), Trigger.AvailableNow(),
+      memoryTable = "t_parity").foreach(q => assert(q.awaitTermination(120000)))
+
+    // every logged file is an `add` of the file's whole length
+    for (dir <- Seq(stock, out); (_, p, size, action) <- logEntries(dir).toSeq
+        .flatMap { case (n, es) => es.map(e => (n, e._1, e._2, e._3)) }) {
+      assert(action == "add", p)
+      assert(size == Files.size(p), p)
+    }
+    // the same log shape: per batch, one file, and the all-filtered
+    // batch's is empty
+    def shape(dir: String) = logEntries(dir).toSeq.sortBy(_._1)
+      .map { case (n, es) => n -> es.map(_._2 == 0) }
+    assert(shape(stock) == Seq(0L -> Seq(false), 1L -> Seq(false), 2L -> Seq(true)))
+    assert(shape(out) == shape(stock))
+    // the same lines, processing_time's digits aside
+    val stamp = "\"processing_time\":\"([^\"]*)\"".r
+    def lines(dir: String): Seq[String] = logEntries(dir).values.flatten.toSeq
+      .flatMap(e => Files.readAllLines(e._1).asScala)
+      .map(l => stamp.replaceAllIn(l, m => scala.util.matching.Regex.quoteReplacement(
+        "\"processing_time\":\"" + m.group(1).replaceAll("\\d", "9") + "\"")))
+      .sorted
+    assert(lines(stock).length == 12)
+    assert(lines(stock).forall(stamp.findFirstIn(_).isDefined))
+    assert(lines(out) == lines(stock))
+  }
+
+  test("startAllSinks: a failed JSON write leaves its batch out of the memory table") {
+    val in = tmp("jsonfail_in")
+    val out = tmp("jsonfail_out")
+    val q = NewsStream.startAllSinks(NewsStream.pipeline(spark, in), out,
+      tmp("jsonfail_ck"), Trigger.ProcessingTime(0), memoryTable = "t_jsonfail").head
+    try {
+      // the sink's directory becomes a file: its next write cannot land
+      val dir = new java.io.File(out, "stream_json")
+      org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      Files.write(dir.toPath, Array[Byte](1))
+      NewsStream.writeSampleBatch(in, batchId = 0, rows = 6)
+      intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+        q.processAllAvailable())
+    } finally q.stop()
+    // the JSON sink is the durable one: the memory sink never ran ahead
+    assert(spark.table("t_jsonfail").count() == 0)
   }
 
   test("startAllSinks resumes the four-query layout's JSON checkpoint") {

@@ -19,8 +19,11 @@ It also counts the JFR ProcessStart events in the same window, grouped
 by command. Without libhadoop, Hadoop's stock local filesystem forks a
 `chmod` per file it creates and its FileContext rename a `readlink`; a
 steady stream on the engine's nio filesystem starts neither. Spark 4.1
-itself forks an `rm -rf` about once per micro-batch (its ArtifactManager
-cleanup).
+forks an `rm -rf` when it cleans up a cloned session's ArtifactManager;
+`persist()` clones the session (CacheManager.cacheQuery, while
+autoBucketedScan is on), so a sink that caches each micro-batch shows
+about one `rm` per batch. The news stream caches nothing: expect at
+most one `rm` start in the steady window.
 """
 import datetime
 import json
